@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{Json, Sessions}
 
 /** Benchmark main — prints ONE JSON line the driver collects as
-  * BENCH_r{N}.json. Runs the headline (`bench = true`) queries against
+  * BENCH_r{N}.json. Runs the headline (`bench = true`) queries, or the
+  * registered gates named on the command line, against
   * SPARK_GRAFT_SF_DIR. Each query is forced with .count() (full plan
   * execution, no result materialisation on the driver).
   */
@@ -24,7 +25,7 @@ object Bench {
     // Recorded runs are self-describing: any SPARK_GRAFT_CONF overrides
     // are echoed into the line (empty = committed defaults), so an A/B
     // run can never masquerade as a default-config record.
-    val cs = conf.map { case (k, v) => "\"" + k + "=" + v + "\"" }
+    val cs = conf.map { case (k, v) => Json.str(k + "=" + v) }
       .mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","min_total":${f3(minTotal)},"conf":$cs,"queries":$qs,"sf":"$sfDir"}"""
@@ -81,33 +82,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs for A/B runs
-    // (round-16 measurement harness; the driver never sets it, so the
-    // recorded bench always runs the committed defaults below).
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // optional trailing query names time those gates instead of the
+    // headline set (any registered gate, same contract as Verify); a
+    // recorded run names none
+    val wanted = args.toSet
+    val unknown = wanted.diff(SparkEntry.allDefs.keySet)
+    require(unknown.isEmpty, s"unknown query ${unknown.mkString(", ")}")
+    // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs for A/B runs;
+    // a recorded run leaves it unset and runs the committed defaults
+    val extraConf = Sessions.envConf()
+    val spark = Sessions.builder("graft-bench").config(extraConf.toMap).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/codegen warm-up on the smallest SF so measured times reflect the
     // engine, not first-call JIT + classloading.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 
-    // optional trailing query names restrict a dev run (same contract as
-    // Verify); the driver always runs the full headline set
-    val wanted = args.toSet
     // SPARK_GRAFT_BENCH_LANE: "all" (default — the driver's per-round
     // record), "fast" (skip the deep tail for tight dev loops), "deep"
     // (only the expensive six). TUNING.md "Benchmark lanes" documents the
@@ -120,7 +110,7 @@ object Bench {
       case _      => true
     }
     val selected = (if (wanted.isEmpty) SparkEntry.benchQueries
-      else SparkEntry.benchQueries.filter { case (k, _) => wanted.contains(k) })
+      else SparkEntry.allDefs.collect { case (k, qd) if wanted.contains(k) => k -> qd.fn })
       .filter { case (k, _) => inLane(k) }
     // SPARK_GRAFT_BENCH_REPS=N → per-query stats over N runs. Shared-host
     // variance is ±50% on single shots (round 5 recorded two 2-5× phantom
@@ -166,7 +156,7 @@ object Bench {
     // driver keeps only the final ~2000 chars of stdout) and Bench
     // emits nothing after it.
     println(s"""{"metric":"spread","queries":$spreads,"sf":"$sfDir"}""")
-    val compact = compactLine(medians, minTotal, sfDir, extraConf.toSeq)
+    val compact = compactLine(medians, minTotal, sfDir, extraConf)
     appendLedger(s"""{"ts":"${java.time.Instant.now()}","lane":"$lane","compact":$compact,"spread":{"queries":$spreads}}""")
     writeCompactFile(compact)
     println(compact)

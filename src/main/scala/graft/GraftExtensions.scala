@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL-surface registration of the engine's custom Catalyst expressions —
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` (or
+  * `Sessions.builder(app).withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`) makes them first-class
   * SQL functions, so `spark.sql("SELECT graft_dot(a, b) …")` reaches the
   * same codegen'd kernels the DataFrame API uses. This is the plugin

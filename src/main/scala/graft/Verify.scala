@@ -78,13 +78,7 @@ object Verify {
     // optional trailing query names restrict the dump (dev loop only; the
     // driver always runs the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "300").toInt

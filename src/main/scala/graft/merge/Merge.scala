@@ -80,9 +80,8 @@ object Merge {
     }
 
     override def finish(b: MergeBuf): MergedNode = {
-      // UTF-8 byte order so the typed and columnar paths sort identically
-      // (Catalyst's array_sort compares UTF8String bytes; Java String
-      // order would invert supplementary characters)
+      // UTF-8 byte order, the order Catalyst's string sorts use (Java
+      // String order would invert supplementary characters)
       implicit val byteOrder: Ordering[String] = Json.utf8Ordering
       val props = b.asserts.toSeq
         .sortBy { case ((k, v, kind, qj), _) => (k, v, kind, qj) }
@@ -100,40 +99,19 @@ object Merge {
       Encoders.product[MergedNode]
   }
 
-  /** Default = the typed-Aggregator plan: measured FASTER than the
-    * columnar restatement at sf0.1 (2.6s vs 4.3s for the merge gate) —
-    * one shuffle with map-side combine beats three codegen'd shuffles
-    * whose per-key array_sort comparator runs interpreted. Both
-    * implementations are proven equivalent (MergeSpec).
+  /** The merge: one `groupByKey(nodeId)` shuffle with map-side combine;
+    * partial buffers round-trip through Kryo on shuffle.
     *
-    * `graft.merge.impl` session conf ∈ {typed, columnar, columnar2}
-    * switches the physical plan for A/B runs (SPARK_GRAFT_CONF
-    * passthrough in Bench); every implementation computes the same
-    * MergedNode rows (MergeSpec pins all three pairwise).
-    *
-    * Round-17 A/B (the r16 verdict's re-litigation, now with the
-    * column-native upstream in place): [[columnar2]] — zero object
-    * spans, ONE exchange — still LOSES to typed, interleaved min-of-5
-    * at sf0.1: g4 1.45/1.53 vs 2.89/4.24 s, g14 8.35/8.38 vs
-    * 10.14/10.24 s, and CountJobs shows it shuffles MORE bytes (g4
-    * 1.9 → 2.6 MB, g14 24.1 → 26.9 MB): the Kryo partial buffers are
-    * map-side COMBINED before the exchange, while the flat single
-    * exchange ships every raw assertion row (guide §2.3 "aggregate
-    * before you shuffle" — the buffers ARE the aggregation). Typed
-    * stays the default; do not re-land without cluster-scale
-    * evidence. */
+    * Round 17 A/B'd two built-in restatements against this aggregator
+    * (a three-shuffle columnar merge and a single-exchange one with no
+    * object spans). Both lost, interleaved min-of-5 at sf0.1 (g4
+    * 1.45/1.53 vs 2.89/4.24 s, g14 8.35/8.38 vs 10.14/10.24 s), and the
+    * single exchange shuffled MORE bytes (g4 1.9 → 2.6 MB, g14 24.1 →
+    * 26.9 MB): the Kryo partial buffers are combined map-side before the
+    * exchange, so what this plan ships scales with distinct (node,
+    * assertion) groups, not raw rows. TUNING.md "Closed A/Bs — deleted"
+    * names the commit to recover them from. */
   def apply(spark: SparkSession, nodes: Dataset[AssignedNode],
-            excludeProps: Set[String] = Set.empty,
-            dropUntyped: Boolean = true): Dataset[MergedNode] =
-    spark.conf.getOption("graft.merge.impl").getOrElse("typed") match {
-      case "columnar"  => columnar(spark, nodes, excludeProps, dropUntyped)
-      case "columnar2" => columnar2(spark, nodes, excludeProps, dropUntyped)
-      case _           => typed(spark, nodes, excludeProps, dropUntyped)
-    }
-
-  /** Typed-Aggregator merge — single shuffle with map-side combine;
-    * partial buffers round-trip through Kryo on shuffle. */
-  def typed(spark: SparkSession, nodes: Dataset[AssignedNode],
             excludeProps: Set[String] = Set.empty,
             dropUntyped: Boolean = true): Dataset[MergedNode] = {
     import spark.implicits._
@@ -141,178 +119,5 @@ object Merge {
       .agg(new MergeAgg(excludeProps).toColumn.name("node"))
       .map { case (nodeId, node) => node.copy(nodeId = nodeId) }
     if (dropUntyped) merged.filter(_.props.contains("grebi:type")) else merged
-  }
-
-  /** Single-exchange columnar merge (round 17, guide §2.4): the same
-    * semantics as [[typed]] in pure built-ins, restructured so the WHOLE
-    * merge pays exactly one shuffle.
-    *
-    *   - assertions are exploded off the props map (key, RawValue) plus
-    *     ONE sentinel row per record (null key) that carries the
-    *     record-level provenance — so record-level datasources/sourceIds
-    *     need no second pass over the input and no join-back;
-    *   - one `repartition(nodeId)`; every aggregation after it groups on
-    *     a superset of {nodeId}, so hash(nodeId) satisfies all three
-    *     ClusteredDistributions and NO further Exchange is planned;
-    *   - qualifiers travel as `array_sort(map_entries(...))` — an
-    *     ORDERABLE array of entry structs — so value ordering is a
-    *     native `sort_array` on a plain struct (the original [[columnar]]
-    *     needed an interpreted lambda comparator because structs holding
-    *     MapType are unorderable); maps are rebuilt ONCE per node in the
-    *     final projection;
-    *   - the (value, kind, qualifiersJson) sort key leads the struct, so
-    *     field-wise struct comparison IS the typed path's tuple sort
-    *     (qualJson "{}" normalised to "" to match typed's empty key; the
-    *     trailing payload fields are never compared because the leading
-    *     triple is unique per (node, key) after the per-value group-by).
-    *
-    * Trade vs [[typed]]: typed pre-merges map-side and shuffles Kryo
-    * buffers; this shuffles raw assertion rows once but stays codegen
-    * end-to-end with no object boundary and no Kryo. A/B via the
-    * `graft.merge.impl` conf. */
-  def columnar2(spark: SparkSession, nodes: Dataset[AssignedNode],
-                excludeProps: Set[String] = Set.empty,
-                dropUntyped: Boolean = true): Dataset[MergedNode] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rvArrT = "array<struct<value:string,kind:string,qualifiers:map<string,array<string>>>>"
-    val dsName = coalesce(
-      try_element_at(try_element_at(col("props"), lit("grebi:datasource")), lit(1))
-        .getField("value"),
-      col("datasource"))
-    val dropKeys = (excludeProps + "grebi:datasource").toSeq
-    // one row per assertion + one null-key sentinel per record (the
-    // record-level provenance carrier): appended BEFORE the explode so a
-    // record whose every prop is excluded still contributes datasources
-    val e1 = nodes.toDF()
-      .select(col("nodeId"), dsName.as("ds"), col("sourceIds"), col("subgraph"),
-        explode(concat(map_entries(col("props")),
-          array(struct(lit(null).cast("string").as("key"),
-            lit(null).cast(rvArrT).as("value"))))).as("e"))
-      .where(col("e.key").isNull || !col("e.key").isin(dropKeys: _*))
-    val qjRaw = graft.functions.QualifiersJson(col("v.qualifiers"))
-    val rows = e1
-      .select(col("nodeId"), col("ds"), col("sourceIds"), col("subgraph"),
-        col("e.key").as("key"), explode_outer(col("e.value")).as("v"))
-      .select(col("nodeId"), col("ds"), col("sourceIds"), col("subgraph"), col("key"),
-        col("v.value").as("value"), col("v.kind").as("kind"),
-        when(qjRaw === "{}", lit("")).otherwise(qjRaw).as("qj"),
-        array_sort(map_entries(col("v.qualifiers"))).as("qualEntries"))
-      .repartition(col("nodeId")) // the merge's ONE exchange
-    val perValue = rows
-      .groupBy(col("nodeId"), col("key"), col("value"), col("kind"), col("qj"))
-      .agg(
-        array_sort(collect_set(col("ds"))).as("dsSet"),
-        array_sort(array_distinct(flatten(collect_list(col("sourceIds"))))).as("sidSet"),
-        first(col("qualEntries")).as("qualEntries"),
-        max(col("subgraph")).as("subgraph"))
-    val perKey = perValue
-      .groupBy(col("nodeId"), col("key"))
-      .agg(
-        sort_array(collect_list(when(col("value").isNotNull,
-          struct(col("value"), col("kind"), col("qj"),
-            col("dsSet"), col("sidSet"), col("qualEntries"))))).as("values"),
-        array_distinct(flatten(collect_list(col("dsSet")))).as("dsUp"),
-        array_distinct(flatten(collect_list(col("sidSet")))).as("sidUp"),
-        max(col("subgraph")).as("subgraph"))
-    val perNode = perKey
-      .groupBy(col("nodeId"))
-      .agg(
-        sort_array(collect_list(when(col("key").isNotNull && size(col("values")) > 0,
-          struct(col("key"), col("values"))))).as("entries"),
-        array_sort(array_distinct(flatten(collect_list(col("dsUp"))))).as("datasources"),
-        array_sort(array_distinct(flatten(collect_list(col("sidUp"))))).as("sourceIds"),
-        max(col("subgraph")).as("subgraph"))
-    val out0 = perNode.select(col("nodeId"), col("datasources"), col("sourceIds"),
-      col("subgraph"),
-      map_from_entries(transform(col("entries"), e => struct(
-        e.getField("key").as("key"),
-        transform(e.getField("values"), x => struct(
-          x.getField("value").as("value"),
-          x.getField("kind").as("kind"),
-          x.getField("dsSet").as("datasources"),
-          x.getField("sidSet").as("sourceIds"),
-          map_from_entries(x.getField("qualEntries")).as("qualifiers")))
-          .as("values")))).as("props"))
-    val out = if (dropUntyped)
-      out0.where(array_contains(map_keys(col("props")), "grebi:type"))
-    else out0
-    out.as[MergedNode]
-  }
-
-  /** Columnar merge — the same semantics as [[typed]] expressed in
-    * built-ins: explode assertions, aggregate provenance per
-    * (node, key, value), regroup to the props map. No Kryo, but three
-    * shuffles and an interpreted array_sort comparator (structs holding
-    * maps are not natively orderable) — measured slower than [[typed]] at
-    * sf0.1. Kept as the cross-check implementation and the starting point
-    * if Kryo shuffle volume ever dominates at larger scale. */
-  def columnar(spark: SparkSession, nodes: Dataset[AssignedNode],
-               excludeProps: Set[String] = Set.empty,
-               dropUntyped: Boolean = true): Dataset[MergedNode] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val asserts = nodes.flatMap { n =>
-      val dsName = n.props.get("grebi:datasource")
-        .flatMap(_.headOption).map(_.value).getOrElse(n.datasource)
-      n.props.iterator
-        .filter { case (k, _) => !excludeProps.contains(k) && k != "grebi:datasource" }
-        .flatMap { case (k, vs) =>
-          vs.map(v => (n.nodeId, dsName, n.sourceIds, n.subgraph,
-            k, v.value, v.kind, Json.strMap(v.qualifiers), v.qualifiers))
-        }.toSeq
-    }.toDF("nodeId", "ds", "sourceIds", "subgraph", "key", "value", "kind", "qualJson", "qualifiers")
-
-    // per-(node, key, value, kind, qualifiers): provenance union
-    val perValue = asserts
-      .groupBy(col("nodeId"), col("key"), col("value"), col("kind"), col("qualJson"))
-      .agg(
-        array_sort(collect_set(col("ds"))).as("datasources"),
-        array_sort(array_distinct(flatten(collect_list(col("sourceIds"))))).as("vSourceIds"),
-        first(col("qualifiers")).as("qualifiers"),
-        first(col("subgraph")).as("subgraph"))
-
-    // per-(node, key): deterministic value ordering (maps are unorderable,
-    // so sort on a scalar key then project the payload). The sort key is a
-    // (value, kind, qualJson) STRUCT compared field-wise — a concatenated
-    // string is NOT order-equivalent to the typed path's tuple sort
-    // ("a" vs "a!": the concat compares '!' against the next field's first
-    // char). qualJson normalises "{}" → "" to match typed's empty key.
-    val perKey = perValue
-      .groupBy(col("nodeId"), col("key"))
-      .agg(
-        transform(
-          array_sort(
-            collect_list(struct(
-              struct(col("value"), col("kind"),
-                when(col("qualJson") === "{}", lit("")).otherwise(col("qualJson")).as("qj")).as("sortKey"),
-              struct(col("value"), col("kind"), col("datasources"),
-                col("vSourceIds").as("sourceIds"), col("qualifiers")).as("pv"))),
-            (a, b) => when(a.getField("sortKey") < b.getField("sortKey"), -1)
-              .when(a.getField("sortKey") === b.getField("sortKey"), 0).otherwise(1)),
-          e => e.getField("pv")).as("values"),
-        first(col("subgraph")).as("subgraph"))
-
-    // record-level provenance: all datasources/sourceIds that asserted the node
-    val recordLevel = nodes
-      .map(n => (n.nodeId,
-        n.props.get("grebi:datasource").flatMap(_.headOption).map(_.value).getOrElse(n.datasource),
-        n.sourceIds, n.subgraph))
-      .toDF("nodeId", "ds", "sourceIds", "subgraph")
-      .groupBy(col("nodeId"))
-      .agg(
-        array_sort(collect_set(col("ds"))).as("datasources"),
-        array_sort(array_distinct(flatten(collect_list(col("sourceIds"))))).as("sourceIds"),
-        first(col("subgraph")).as("subgraph"))
-
-    val propsPerNode = perKey.groupBy(col("nodeId"))
-      .agg(map_from_entries(collect_list(struct(col("key"), col("values")))).as("props"))
-
-    val out = recordLevel.join(propsPerNode, Seq("nodeId"), "left")
-      .select(col("nodeId"), col("datasources"), col("sourceIds"), col("subgraph"),
-        coalesce(col("props"),
-          map_from_entries(array().cast("array<struct<key:string,values:array<struct<value:string,kind:string,datasources:array<string>,sourceIds:array<string>,qualifiers:map<string,array<string>>>>>>"))).as("props"))
-      .as[MergedNode]
-    if (dropUntyped) out.filter(_.props.contains("grebi:type")) else out
   }
 }

@@ -929,7 +929,7 @@ object MaterialiseOps extends QueryModule {
     * arbitrarily far away (close a path into a cycle and EVERY node goes
     * 1 → 2), so any locally-bounded seed is not an upper bound. NOT an
     * oracle gate: measured full-convergence depth is 10 / 19 / 38 rounds
-    * at sf0.001 / sf0.01 / sf0.1 (tools/CheckCoreness), and 38 is past
+    * at sf0.001 / sf0.01 / sf0.1 (TUNING.md "Closed A/Bs"), and 38 is past
     * the ~20-round unrollable-DuckDB-oracle limit (TUNING round-11 line)
     * — so the fixpoint lives behind specs, not CORRECTNESS rows. */
   private[graft] def corenessFixpointFrom(e: DataFrame, seed: DataFrame,

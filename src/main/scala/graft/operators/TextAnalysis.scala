@@ -234,7 +234,7 @@ object TextAnalysis extends QueryModule {
     // REVERTED on measurement: the cache build cost more than the
     // tokenize it saved at every bench tier (t7 0.90 → 1.13 s median),
     // the round-15 g14-persist lesson again. The staged form (tf to
-    // parquet) was MEASURED in round 17 (tools/ProfileStagedTf): it
+    // parquet) was MEASURED in round 17 (TUNING.md "Closed A/Bs"): it
     // wins at sfx1 (min 1.52 vs 2.73) but LOSES at sfx10 (17.6 vs 7.8)
     // — the high-cardinality tf write grows faster than the recompute
     // it saves — so inline stays the form at every tier; stage only
@@ -768,7 +768,7 @@ object TextAnalysis extends QueryModule {
     // bench scale the extra aggregate layers (min 0.70 → 0.92 s) and the
     // cache build (min → 1.78 s) each cost more than the codegen'd
     // tokenize they saved. Round 17 also MEASURED the staged form (tf to
-    // parquet, tools/ProfileStagedTf): it loses here at sf0.1 and sfx1
+    // parquet, TUNING.md "Closed A/Bs"): it loses here at sf0.1 and sfx1
     // and only reaches parity at sfx10 — the inline shape is the
     // measured-best plan at every tier; see OPTIMIZATION_r17.md #6.
     val tf = words.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))

@@ -1538,7 +1538,12 @@ object XmlOps extends QueryModule {
     * the plan REFUSES instead of trusting an operator to remember).
     * Returns (reclaimable, retainedForTokens); the head pointer and
     * everything at/above the newest compaction commit are never
-    * candidates. Listing-scale metadata; data files never open. */
+    * candidates. With a checkpoint, neither is anything above the
+    * checkpointed version: occHeadFast and occLastTxn probe upward from
+    * it and stop at the first missing pointer, so a checkpoint older
+    * than the compaction must not leave a gap below a retained pointer.
+    * Without one, both readers list the whole log. Listing-scale
+    * metadata; data files never open. */
   private[graft] def txnPointerVacuumPlan(base: String): (Seq[Int], Seq[Int]) = {
     val store = graft.lake.CommitStore.local(base)
     val versions = store.list()
@@ -1550,9 +1555,10 @@ object XmlOps extends QueryModule {
     val compactBase = contents.collect {
       case (v, c) if commitCompactUpTo(c).isDefined => v
     }.maxOption.getOrElse(0)
-    val candidates = versions.filter(_ < compactBase)
-    val ckTxns = store.read("_last_checkpoint").map(parseCheckpoint)
-      .map(_.txns).getOrElse(Map.empty[String, Long])
+    val ck = store.read("_last_checkpoint").map(parseCheckpoint)
+    val bound = ck.fold(compactBase)(c => math.min(compactBase, c.version + 1))
+    val candidates = versions.filter(_ < bound)
+    val ckTxns = ck.map(_.txns).getOrElse(Map.empty[String, Long])
     // each app's newest token pointer among ALL retained pointers
     val newestTokenPtr = contents.toSeq
       .flatMap { case (v, c) => commitTxn(c).map { case (a, tv) => (a, tv, v) } }

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.core.Json
 import graft.curie.PrefixTrie
-import graft.functions.NormalisePrefix
 import graft.identity.{AssignIds, AssignedNode, Groups}
 import graft.index.Index
 import graft.materialise.Materialise
@@ -79,16 +78,15 @@ object GraftPipeline {
     * value through the trie (P1 applied to the whole record, reference
     * `grebi_normalise_prefixes/src/main.rs:33-74`).
     *
-    * STAYS the typed map — the round-16 A/B (VERDICT item #5) measured
-    * the column-native form ([[normaliseColumnar]], kept below as the
-    * pinned twin) 1.5–2.3× SLOWER at ~1.5M qualifier-nested records:
-    * three nesting levels of map_from_entries/transform pay per-row
-    * builder allocations that cost more than the object round-trip they
-    * remove, over BOTH an object-built and a parquet-staged upstream
-    * (typed 5.7/7.8 s vs native 13.0/12.0 s medians — 
-    * tools/ProfileNormalise, 5 reps, cleared cache). The trie rewrite
-    * itself is the same codegen'd NormalisePrefix logic either way, so
-    * the loser is the columnar STRUCTURE rebuild, not the scalar. */
+    * A typed map: the round-16 A/B measured a column-native rebuild
+    * (transform/map_entries at three nesting levels) 1.5–2.3× SLOWER at
+    * ~1.5M qualifier-nested records (typed 5.7/7.8 s vs native
+    * 13.0/12.0 s medians) — the per-row builders cost more than the
+    * object round-trip they remove. TUNING.md "Closed A/Bs — deleted".
+    *
+    * Two prop or qualifier keys that rewrite to the same CURIE (`EFO:x`
+    * and `efo:x` in one record) MERGE their value lists, never
+    * last-write-win (same rule as AssignIds.assignOne). */
   def normalise(nodes: Dataset[IngestNode], trie: PrefixTrie): Dataset[IngestNode] = {
     val spark = nodes.sparkSession
     import spark.implicits._
@@ -96,46 +94,24 @@ object GraftPipeline {
       n.copy(
         ids = n.ids.map(trie.rewrite),
         types = n.types.map(trie.rewrite),
-        props = n.props.map { case (k, vs) =>
-          trie.rewrite(k) -> vs.map(v => v.copy(
-            value = trie.rewrite(v.value),
-            qualifiers = v.qualifiers.map { case (qk, qvs) =>
-              trie.rewrite(qk) -> qvs.map(trie.rewrite)
-            }))
-        })
+        props = rekey(n.props, trie)(_.map(v => v.copy(
+          value = trie.rewrite(v.value),
+          qualifiers = rekey(v.qualifiers, trie)(_.map(trie.rewrite))))))
     }
   }
 
-  /** The column-native form of [[normalise]] — the round-16 A/B LOSER,
-    * kept as the independently-derived twin (PipelineDriverSpec pins
-    * equality on a qualifier-nested fixture) and the record of a tested
-    * hypothesis: codegen'd NormalisePrefix through transform/map_entries
-    * avoids the object boundary but rebuilds the nested props structure
-    * with per-row builders at three nesting levels, measuring 1.5–2.3×
-    * slower than the typed map at ~1.5M records (TUNING round-16 line;
-    * tools/ProfileNormalise reproduces). Collision note: two raw prop
-    * keys normalising to the same curie raise DUPLICATE_MAP_KEY here
-    * where the Map rebuild silently last-wins. */
-  private[graft] def normaliseColumnar(nodes: Dataset[IngestNode],
-      trie: PrefixTrie): Dataset[IngestNode] = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val np = (c: org.apache.spark.sql.Column) => NormalisePrefix(c, trie)
-    nodes.toDF().select(
-      transform(col("ids"), np).as("ids"),
-      col("datasource"), col("subgraph"),
-      transform(col("types"), np).as("types"),
-      map_from_entries(transform(map_entries(col("props")), e =>
-        struct(
-          np(e.getField("key")).as("key"),
-          transform(e.getField("value"), v => struct(
-            np(v.getField("value")).as("value"),
-            v.getField("kind").as("kind"),
-            map_from_entries(transform(map_entries(v.getField("qualifiers")), q =>
-              struct(np(q.getField("key")).as("key"),
-                transform(q.getField("value"), np).as("value")))).as("qualifiers")))
-            .as("value")))).as("props"))
-      .as[IngestNode]
+  /** `m` with every key rewritten and every value list mapped by `f`. The
+    * plain rebuild is kept when no two keys collide (the common case);
+    * only a smaller result pays for the fold that concatenates colliding
+    * keys' value lists. */
+  private def rekey[V](m: Map[String, Seq[V]], trie: PrefixTrie)(
+      f: Seq[V] => Seq[V]): Map[String, Seq[V]] = {
+    val out = m.map { case (k, vs) => trie.rewrite(k) -> f(vs) }
+    if (out.size == m.size) out
+    else m.foldLeft(Map.empty[String, Seq[V]]) { case (acc, (k, vs)) =>
+      val key = trie.rewrite(k)
+      acc.updated(key, acc.getOrElse(key, Nil) ++ f(vs))
+    }
   }
 
   /** superclasses2types (`02_assign_ids/grebi_superclasses2types/src/

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Deterministic cost evidence for the optimization rounds: runs each
   * named query once (after a warm-up) and reports Spark JOB and STAGE
@@ -14,23 +13,10 @@ object CountJobs {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CountJobs <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same SPARK_GRAFT_CONF passthrough as Bench/DumpPlans so variant
-    // plans (e.g. graft.merge.impl) get deterministic job/shuffle counts
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-count-jobs")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // same SPARK_GRAFT_CONF passthrough as Bench/DumpPlans, so variant
+    // plans get deterministic job/shuffle counts too
+    val spark = graft.core.Sessions.builder("graft-count-jobs")
+      .config(graft.core.Sessions.envConf().toMap).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger(0)

@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
   *
   * Usage: `runMain graft.tools.DumpPlans <outDir> <suffix> [name ...]`
-  * (no names = the bench set). Data dir from SPARK_GRAFT_SF_DIR (default
-  * sf0.1) so plan shapes (AQE thresholds, stats) match what the bench
-  * actually runs.
+  * (no names = the bench set; names select any registered gate, which
+  * makes this the explain-audit loop for pushdown, broadcast and codegen
+  * spans too). Data dir from SPARK_GRAFT_SF_DIR (default sf0.1) so plan
+  * shapes (AQE thresholds, stats) match what the bench actually runs.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -17,22 +18,10 @@ object DumpPlans {
     val suffix = args(1)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same SPARK_GRAFT_CONF passthrough as Bench so A/B-variant plans
-    // (e.g. graft.merge.impl=columnar2) can be dumped for the record
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // same SPARK_GRAFT_CONF passthrough as Bench, so the plans of an A/B
+    // variant can be dumped for the record
+    val spark = graft.core.Sessions.builder("graft-dump-plans")
+      .config(graft.core.Sessions.envConf().toMap).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val defs = graft.SparkEntry.allDefs
     val names =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up of a testdata sf dir by key-shifted replication —
@@ -41,13 +41,7 @@ object ExpandSf {
     require(args.length >= 3, "usage: ExpandSf <srcSfDir> <outDir> <K>")
     val Array(src, out, kStr) = args.take(3)
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-expand-sf")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder("graft-expand-sf").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.core.Tables
 

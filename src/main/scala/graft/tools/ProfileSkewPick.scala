@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-17 skew evidence for the groups canonical pick (guide §2.5).
@@ -29,13 +28,7 @@ object ProfileSkewPick {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(32000000)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile-skew-pick")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    val spark = graft.core.Sessions.builder("graft-profile-skew-pick")
       // Locally the hot component's join partition is a few tens of MB —
       // under AQE's default 256 MB skew threshold, so the runtime split
       // the salted form relies on for its attach join never fires at
@@ -45,8 +38,6 @@ object ProfileSkewPick {
       // split, because AQE skew handling applies only to joins.
       .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -14,6 +14,18 @@ class BenchFormatSpec extends SparkSpec {
     assert(line.endsWith("}"))
   }
 
+  test("conf echo escapes quotes and backslashes and keeps the line's shape") {
+    val conf = Seq("spark.x" -> """say "hi" \ C:\tmp""", "k" -> "plain")
+    val line = Bench.compactLine(Seq("q1" -> 1.5), 1.0, "/sf", conf)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    import scala.jdk.CollectionConverters._
+    assert(json.fieldNames().asScala.toSeq ===
+      Seq("metric", "value", "unit", "min_total", "conf", "queries", "sf"))
+    assert(json.get("conf").elements().asScala.map(_.asText()).toSeq ===
+      conf.map { case (k, v) => s"$k=$v" })
+    assert(json.get("queries").get("q1").asDouble() === 1.5)
+  }
+
   test("the bench ledger appends one parseable JSON line per run") {
     val p = java.nio.file.Files.createTempFile("bench_ledger", ".jsonl")
     try {

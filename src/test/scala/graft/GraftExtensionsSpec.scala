@@ -17,11 +17,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
+    val s = graft.core.Sessions.builder("graft-ext-test", cpus = 2)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

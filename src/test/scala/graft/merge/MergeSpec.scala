@@ -73,47 +73,33 @@ class MergeSpec extends SparkSpec {
     assert(!merged.props.contains("grebi:datasource"))
   }
 
-  test("columnar merge ≡ typed-aggregator merge ≡ single-exchange columnar2") {
-    import spark.implicits._
-    val assigned = AssignIds(spark, fixtureNodes.toDS(), groups)
-    def canon(ns: Array[graft.model.MergedNode]) =
-      ns.sortBy(_.nodeId).map(n => (n.nodeId, n.datasources, n.sourceIds, n.subgraph,
-        n.props.toSeq.sortBy(_._1))).toSeq
-    val a = canon(Merge.typed(spark, assigned, excludeProps = Set("junk:prop")).collect())
-    val b = canon(Merge.columnar(spark, assigned, excludeProps = Set("junk:prop")).collect())
-    val c = canon(Merge.columnar2(spark, assigned, excludeProps = Set("junk:prop")).collect())
-    assert(a == b)
-    assert(a == c)
-  }
-
-  test("columnar2: excluded-only and empty-values records still contribute record provenance") {
+  test("merge: excluded-only and empty-values records keep record provenance") {
     import spark.implicits._
     // record 2's only prop is excluded; record 3 has a key with an EMPTY
     // value list — both must still union their datasource/sourceIds into
-    // the record-level provenance (the typed reduce does this per record,
-    // columnar2 via the null-key sentinel row), and the empty-values key
-    // must NOT appear in props
+    // the record-level provenance, and the empty-values key must NOT
+    // appear in props
     val nodes = Seq(
       IngestNode(Seq("x:1"), "DSA", "fx", Seq("t"), Map("p" -> Seq(RawValue.str("v")))),
       IngestNode(Seq("x:1"), "DSB", "fx", Nil, Map("junk:prop" -> Seq(RawValue.str("z")))),
       IngestNode(Seq("x:1"), "DSC", "fx", Nil, Map("emptykey" -> Seq.empty[RawValue]))).toDS()
     val assigned = AssignIds(spark, nodes, Map("x:1" -> "x:1"))
-    def canon(ns: Array[graft.model.MergedNode]) =
-      ns.sortBy(_.nodeId).map(n => (n.nodeId, n.datasources, n.sourceIds, n.subgraph,
-        n.props.toSeq.sortBy(_._1))).toSeq
-    val t = Merge.typed(spark, assigned, excludeProps = Set("junk:prop")).collect()
-    val c = Merge.columnar2(spark, assigned, excludeProps = Set("junk:prop")).collect()
-    assert(canon(t) == canon(c))
-    assert(c.head.datasources == Seq("DSA", "DSB", "DSC"))
-    assert(!c.head.props.contains("emptykey"))
+    val merged = Merge(spark, assigned, excludeProps = Set("junk:prop")).collect()
+    assert(merged.length == 1)
+    val m = merged.head
+    assert(m.datasources == Seq("DSA", "DSB", "DSC"))
+    assert(m.sourceIds == Seq("x:1"))
+    assert(!m.props.contains("emptykey"))
+    assert(!m.props.contains("junk:prop"))
+    assert(m.props("p").map(v => (v.value, v.datasources)) == Seq("v" -> Seq("DSA")))
   }
 
-  test("columnar2: value ordering matches typed on qualifier ties and empty-qualifier keys") {
+  test("merge: value order on qualifier ties and empty-qualifier keys") {
     import spark.implicits._
     // same (value, kind) under two different qualifier sets plus one
-    // empty-qualifier assertion: typed sorts by (v, kind, qualJson) with
-    // "" for empty — the empty-qualifier value must sort FIRST (columnar2
-    // normalises "{}" → "" for exactly this)
+    // empty-qualifier assertion: values sort by (value, kind,
+    // qualifiersJson) with "" for empty, so the empty-qualifier value
+    // comes FIRST and the qualified ones follow in qualifier order
     val nodes = Seq(
       IngestNode(Seq("x:1"), "DSA", "fx", Seq("t"),
         Map("m" -> Seq(
@@ -121,10 +107,11 @@ class MergeSpec extends SparkSpec {
           RawValue.str("same"),
           RawValue.reified("same", Map("q" -> Seq("a"))))))).toDS()
     val assigned = AssignIds(spark, nodes, Map("x:1" -> "x:1"))
-    val t = Merge.typed(spark, assigned).collect().head.props("m")
-    val c = Merge.columnar2(spark, assigned).collect().head.props("m")
-    assert(t == c)
-    assert(c.head.qualifiers.isEmpty, "empty-qualifier value sorts first")
+    val m = Merge(spark, assigned).collect().head.props("m")
+    assert(m.map(_.value) == Seq("same", "same", "same"))
+    assert(m.map(_.qualifiers) == Seq(
+      Map.empty[String, Seq[String]], Map("q" -> Seq("a")), Map("q" -> Seq("b"))))
+    assert(m.forall(_.datasources == Seq("DSA")))
   }
 
   test("merge: values deterministically sorted within a property") {

@@ -62,6 +62,26 @@ class Round17Spec extends SparkSpec {
     assert(retained1.isEmpty)
   }
 
+  test("stale checkpoint: pointer vacuum leaves no gap below a retained token") {
+    // checkpoint at v1, token commits at v2 and v3, compaction at v4: the
+    // checkpoint predates the compaction, so the readers walk up from v1
+    // and a reclaimed v2 would hide v3's token and the true head
+    val base = freshBase("r17_stale_ck")
+    val docs = graft.core.Tables.documents(spark, sf)
+    assert(XmlOps.occTryCommit(base, 1, XmlOps.occPrepare(spark, base, docs.limit(3))))
+    XmlOps.occCheckpoint(base)
+    assert(XmlOps.occTxnCommit(spark, base, "w", 1L, docs.limit(2)))
+    assert(XmlOps.occTxnCommit(spark, base, "w", 2L, docs.limit(1)))
+    assert(XmlOps.occCompact(spark, base) === 4)
+    val head = XmlOps.occHead(base)
+    assert(head.map(_._1) === Some(4))
+    val (reclaim, _) = XmlOps.txnPointerVacuumPlan(base)
+    val store = graft.lake.CommitStore.local(base)
+    reclaim.foreach(v => store.delete(s"v$v"))
+    assert(XmlOps.occLastTxn(base, "w") === Some(2L))
+    assert(XmlOps.occHeadFast(base) === head)
+  }
+
   test("multi-line checkpoint: head resolution, schema fold, and back-compat parse") {
     val base = freshBase("r17_ck_fmt")
     val docs = graft.core.Tables.documents(spark, sf)

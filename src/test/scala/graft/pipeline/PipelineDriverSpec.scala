@@ -39,11 +39,9 @@ class PipelineDriverSpec extends SparkSpec {
     GraftPipeline.run(spark, config, Seq(dsA, dsB))
   }
 
-  test("column-native normalise twin ≡ the typed default on a qualifier-nested fixture") {
-    // round 16: the column-native normalise was A/B'd, LOST (see
-    // GraftPipeline.normaliseColumnar docstring), and stays as the
-    // pinned twin. The fixture nests every rewrite site: ids, types,
-    // prop keys, prop values, qualifier keys, qualifier values.
+  test("normalise: literal output over all six rewrite sites") {
+    // the fixture nests every rewrite site: ids, types, prop keys, prop
+    // values, qualifier keys, qualifier values
     import spark.implicits._
     val trie = graft.curie.PrefixTrie(config.prefixMap)
     val nodes = Seq(
@@ -53,14 +51,30 @@ class PipelineDriverSpec extends SparkSpec {
             "plainQual" -> Seq("http://purl.obolibrary.org/obo/MONDO_9")))),
         "plainKey" -> Seq(RawValue.str("untouched"))),
       mk(Seq("orphan:1"), "dsQ", Nil)).toDS()
-    val native = GraftPipeline.normaliseColumnar(nodes, trie).collect()
-      .sortBy(_.ids.mkString(","))
-    val typed = GraftPipeline.normalise(nodes, trie).collect()
-      .sortBy(_.ids.mkString(","))
-    assert(native === typed)
-    // spot-check a deep rewrite actually happened
-    assert(native.exists(_.props.get("efo:key").exists(_.exists(
-      v => v.value == "mondo:8" && v.qualifiers.get("efo:qual").contains(Seq("efo:qv", "plain"))))))
+    val got = GraftPipeline.normalise(nodes, trie).collect().sortBy(_.ids.mkString(","))
+    assert(got.toSeq === Seq(
+      mk(Seq("mondo:7", "efo:9"), "dsQ", Seq("efo:111"),
+        "efo:key" -> Seq(RawValue.reified("mondo:8",
+          Map("efo:qual" -> Seq("efo:qv", "plain"), "plainQual" -> Seq("mondo:9")))),
+        "plainKey" -> Seq(RawValue.str("untouched"))),
+      mk(Seq("orphan:1"), "dsQ", Nil)))
+  }
+
+  test("normalise: colliding keys merge value lists, no last-write-win") {
+    // EFO:key and efo:key both rewrite to efo:key (the trie matches
+    // case-insensitively); so do the qualifier keys EFO:q and efo:q
+    import spark.implicits._
+    val trie = graft.curie.PrefixTrie(config.prefixMap)
+    val nodes = Seq(
+      mk(Seq("x:1"), "dsC", Nil,
+        "EFO:key" -> Seq(RawValue.reified("EFO:1", Map("EFO:q" -> Seq("a"), "efo:q" -> Seq("b")))),
+        "efo:key" -> Seq(RawValue.str("two")))).toDS()
+    val props = GraftPipeline.normalise(nodes, trie).collect().head.props
+    assert(props.keySet === Set("efo:key"))
+    val vs = props("efo:key").sortBy(_.value)
+    assert(vs.map(_.value) === Seq("efo:1", "two"))
+    assert(vs.head.qualifiers.keySet === Set("efo:q"))
+    assert(vs.head.qualifiers("efo:q").sorted === Seq("a", "b"))
   }
 
   test("full build: normalise + seeded groups + merge + superclass typing") {
