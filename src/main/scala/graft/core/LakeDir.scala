@@ -3,8 +3,11 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the scratch-directory naming rule for the lake
-  * gates (x4–x21) and any operator that materialises a fixture layout
-  * under `java.io.tmpdir`.
+  * gates (x4–x33) and any operator that materialises a fixture layout
+  * under `java.io.tmpdir`. Format gates (x4–x21) Overwrite into
+  * [[scoped]]; the transaction-log gates (x22–x33) start from an empty
+  * [[fresh]] table base, because a commit log must not inherit the
+  * previous invocation's versions.
   *
   * Naming contract — `graft_<name>_<session>_<dataset>`:
   *   - `<session>` = appId-hash + SparkSession identityHashCode (the s17
@@ -20,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Round-13 verdict finding #2: this rule was hand-rolled (without the
   * session component) at 16 XmlOps call sites; a new lake gate could
-  * silently fork the convention. Now every site calls [[scoped]].
+  * silently fork the convention. Now every site calls [[scoped]] or
+  * [[fresh]].
   */
 object LakeDir {
 
@@ -35,4 +39,19 @@ object LakeDir {
   def scoped(s: SparkSession, name: String, d: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
       s"${sessionTag(s)}_${Integer.toHexString(d.hashCode)}"
+
+  /** [[scoped]], emptied first: the lake gates rebuild their table from
+    * an empty directory on every invocation. */
+  def fresh(s: SparkSession, name: String, d: String): String = {
+    val dir = scoped(s, name, d)
+    delete(s, dir)
+    dir
+  }
+
+  /** Recursively delete `path` (a no-op when it is absent). */
+  def delete(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths}
   * put-if-absent of a small named blob whose content is complete the
   * instant the name is visible (plus the read/list/replace maintenance
   * surface around it). Extracted to a seam (round-14 verdict item) so
-  * the protocol in [[graft.operators.XmlOps]] is storage-agnostic — the
+  * the protocol in [[TxnLog]] is storage-agnostic — the
   * conditional-put mapping per store is part of the INTERFACE contract,
   * not a comment buried in one implementation:
   *
@@ -86,8 +86,8 @@ final class LocalFsCommitStore(dir: Path) extends CommitStore {
 
   override def list(): Seq[String] = {
     if (!Files.isDirectory(dir)) return Seq.empty
-    // close the directory stream (round-16 ADVICE fix): occTxnCommit
-    // lists several times per CAS attempt, and an unclosed Files.list
+    // close the directory stream (round-16 ADVICE fix): the log lists on
+    // every commit attempt without a checkpoint, and an unclosed Files.list
     // leaks one fd per call — a long-lived driver doing many commits
     // would exhaust its fd table
     val stream = Files.list(dir)

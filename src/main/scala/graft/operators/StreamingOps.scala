@@ -305,7 +305,7 @@ object StreamingOps extends QueryModule {
       (s, d) => Streaming.streamLogConsume(s, d,
         s"${System.getProperty("java.io.tmpdir")}/graft_slog_${math.abs(d.hashCode)}_${java.util.UUID.randomUUID.toString.take(8)}"),
       Some(XmlOps.txnAppendLogSql)),
-    // shares x27's oracle: one writer protocol (occTxnCommit) driven from
+    // shares x27's oracle: one writer protocol (LakeTable.txnAppend) driven from
     // foreachBatch with the Spark batchId as the idempotence token; the
     // committed batches partition the corpus
     "st65_stream_txn_sink" -> QueryDef(

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.{LakeDir, QueryDef, QueryModule, Tables}
 import graft.ingest.Ingest
+import graft.lake.{Commit, LakeTable, TxnLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
@@ -522,8 +523,9 @@ object XmlOps extends QueryModule {
     * at every SF — a fixed literal collided with real keys at sf0.1,
     * double-writing 50 primary keys and letting a synthetic upsert
     * survive a real delete. The MERGE contract (at most one changelog
-    * row per key) is enforced inside [[mergeApply]] with a raise_error
-    * guard, mirroring Delta/Iceberg MERGE's duplicate-source-row error.
+    * row per key) is enforced inside [[LakeTable.mergeApply]] with a
+    * raise_error guard, mirroring Delta/Iceberg MERGE's duplicate-source-
+    * row error.
     * Execution is the scale shape MERGE should be: the changelog
     * collapses to ONE row per key map-side, then a single full-outer
     * equi-join against the base keyed by the primary key — no per-row
@@ -557,33 +559,7 @@ object XmlOps extends QueryModule {
         col("v_cents"))
       .unionByName(perUser.select((col("user_id") + off).as("k"),
         lit("upsert").as("op"), col("v_cents")))
-    mergeApply(base, chg).orderBy(col("k"))
-  }
-
-  /** The three MERGE arms over explicit base (k, name, bal_cents, seg)
-    * and changelog (k, op, v_cents) frames — property-tested on a hand
-    * fixture where every arm (update, delete, insert, unmatched-delete
-    * no-op) fires. One full-outer equi-join; the arms are projections.
-    * A changelog carrying TWO rows for one key raises at execution time
-    * (Delta/Iceberg MERGE's duplicate-source-row error) — the guard is a
-    * per-key count window whose hash partitioning the subsequent join on
-    * the same key reuses, so the check adds no extra shuffle. */
-  private[graft] def mergeApply(base: DataFrame, chg: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val guarded = chg
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("k"))))
-      .select(col("k"),
-        when(col("_n") > 1, raise_error(concat(
-          lit("MERGE: changelog has multiple rows for key "),
-          col("k").cast("string")))).otherwise(col("op")).as("op"),
-        col("v_cents"))
-    base.join(guarded, Seq("k"), "full_outer")
-      .where(col("op").isNull || col("op") =!= "delete")
-      .select(col("k"),
-        coalesce(col("name"), concat(lit("NEW#"), col("k").cast("string"))).as("name"),
-        (coalesce(col("bal_cents"), lit(0L)) + coalesce(col("v_cents"), lit(0L)))
-          .as("bal_cents"),
-        coalesce(col("seg"), lit("STREAM")).as("seg"))
+    LakeTable.mergeApply(base, chg).orderBy(col("k"))
   }
 
   val mergeUpsertSql: String =
@@ -786,10 +762,7 @@ object XmlOps extends QueryModule {
     cdcWriteGens(s, d, dir)
     val g0 = cdcReadGen(s, s"$dir/gen_0")
     val g1 = cdcReadGen(s, s"$dir/gen_1")
-    cdcApply(g0, cdcDiffFull(g0, g1))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
+    byLang(cdcApply(g0, cdcDiffFull(g0, g1)))
   }
 
   /** x17's diff with FULL ROW IMAGES: insert/update rows carry the new
@@ -1089,7 +1062,7 @@ object XmlOps extends QueryModule {
     val dir = LakeDir.scoped(s, "expect", d)
     val triaged = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        triageReason.as("reason"))
+        LakeTable.triageReason.as("reason"))
     triaged.where(col("reason") === "ok")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/clean")
     triaged.where(col("reason") =!= "ok")
@@ -1105,16 +1078,6 @@ object XmlOps extends QueryModule {
       .orderBy(col("disposition"), col("reason"))
   }
 
-  /** The declared-order constraint chain shared by batch x21 and the
-    * st60 streaming monitor (the round-13 ADVICE item): FIRST failing
-    * constraint wins — lang allowlist, then min length. One definition,
-    * two call sites, so an edit to the chain cannot silently break the
-    * ≡batch shared-oracle contract between x21 and st60. */
-  private[graft] def triageReason: org.apache.spark.sql.Column =
-    when(!col("lang").isin("en", "fr", "de", "es"), "lang_allowed")
-      .when(col("n_chars") < 100, "min_length")
-      .otherwise("ok")
-
   val expectationsSql: String =
     """WITH t AS (
       |  SELECT n_chars,
@@ -1127,152 +1090,104 @@ object XmlOps extends QueryModule {
       |  reason, count(*) AS n_rows, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM t GROUP BY 1, 2 ORDER BY disposition, reason""".stripMargin
 
-  /** x22 — OPTIMISTIC-CONCURRENCY COMMIT (the lake-family capstone the
-    * round-13 verdict named): k11 gave a generation its manifest-validated
-    * publish; x22 gives the TABLE a commit log, so two uncoordinated
-    * writers can publish concurrently and the table still has one linear
-    * history — the Delta `_delta_log` / Iceberg snapshot-commit protocol.
-    *
-    * Protocol:
-    *   1. A writer reads the latest committed version N (max `v<N>` in
-    *      `_commits/`, each file's CONTENT naming its generation dir).
-    *   2. It prepares its OWN `gen_<uuid>` (data + k11 manifest) off to
-    *      the side — data-scale work, all OUTSIDE the critical section.
-    *   3. Commit = put-if-absent of `_commits/v<N+1>`: the content is
-    *      staged to a hidden temp file and HARD-LINKED into place
-    *      (`Files.createLink` is atomic O_CREAT|O_EXCL-style: it fails
-    *      with FileAlreadyExistsException if the version exists, and the
-    *      file is COMPLETE the instant it appears — no reader can see a
-    *      torn commit). On an object store this step maps to the store's
-    *      conditional put (S3 If-None-Match, GCS x-goog-if-generation-
-    *      match); on HDFS to create-no-overwrite — the one primitive the
-    *      whole protocol needs.
-    *   4. A loser gets the exception as a CONFLICT: its snapshot is
-    *      stale. It re-reads the new head, REBASES (re-applies its own
-    *      transform to the winner's output — correct exactly when its
-    *      logical operation is expressible against any snapshot) and
-    *      retries at N+2, bounded.
-    *
-    * The gate runs the full interleaving deterministically: both writers
-    * read v1 (the seeded corpus), A (GDPR delete of `de`) wins v2, B
-    * (fr reprice, PREPARED AGAINST THE STALE v1 SNAPSHOT) loses, detects
-    * the conflict, rebases on A's output and commits v3. The operations
-    * commute on disjoint row sets, so the final committed content is
-    * deterministic no matter who wins the race — which is what lets a
-    * DuckDB oracle restate it. Served through [[MaterialiseOps
-    * .serveValidated]], so a torn or half-manifested generation can
-    * never reach the aggregate. The spec additionally races 8 threads
-    * at ONE version (exactly one winner), pins loser-retry content, and
-    * pins that the stale prepared generation is never the head.
-    * Scale shape: the critical section touches one manifest-pointer
-    * file — data volume never enters it; prepared-but-lost generations
-    * are x19 vacuum food. */
-  def occCommitPublish(s: SparkSession, d: String): DataFrame =
-    occReadCommitted(s, occDemoLog(s, d))
-      .groupBy(col("lang"))
+  /** The per-language (n_docs, sum_chars) aggregate x24 and the
+    * transaction-log gates report; their oracles restate it from source
+    * predicates. */
+  private def byLang(df: DataFrame): DataFrame =
+    df.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy(col("lang"))
+
+  /** x22 — OPTIMISTIC-CONCURRENCY COMMIT (the lake-family capstone the
+    * round-13 verdict named): k11 gave a generation its manifest-validated
+    * publish; x22 gives the TABLE a commit log ([[graft.lake.TxnLog]]), so
+    * two uncoordinated writers can publish concurrently and the table
+    * still has one linear history — the Delta `_delta_log` / Iceberg
+    * snapshot-commit protocol.
+    *
+    * Protocol:
+    *   1. A writer reads the latest committed version N.
+    *   2. It prepares its OWN `gen_<uuid>` (data + k11 manifest) off to
+    *      the side — data-scale work, all OUTSIDE the critical section.
+    *   3. Commit = put-if-absent of the version-N+1 pointer through the
+    *      [[graft.lake.CommitStore]] seam: complete the instant it
+    *      appears (no reader can see a torn commit), and it fails if the
+    *      version exists — the one primitive the whole protocol needs
+    *      (hard link locally; S3 If-None-Match, GCS
+    *      x-goog-if-generation-match, HDFS create-no-overwrite).
+    *   4. A loser gets a CONFLICT: its snapshot is stale. It re-reads the
+    *      new head, REBASES (re-applies its own transform to the winner's
+    *      output — correct exactly when its logical operation is
+    *      expressible against any snapshot) and retries at N+2, bounded.
+    *
+    * The gate runs the full interleaving deterministically through the
+    * explicit-version CAS: both writers read v1 (the seeded corpus), A
+    * (GDPR delete of `de`) wins v2, B (fr reprice, PREPARED AGAINST THE
+    * STALE v1 SNAPSHOT) loses, detects the conflict, rebases on A's
+    * output and commits v3. The operations commute on disjoint row sets,
+    * so the final committed content is deterministic no matter who wins
+    * the race — which is what lets a DuckDB oracle restate it. Served
+    * through the validating read, so a torn or half-manifested
+    * generation can never reach the aggregate. The spec additionally
+    * races 8 threads at ONE version (exactly one winner), pins
+    * loser-retry content, and pins that the stale prepared generation is
+    * never the head. Scale shape: the critical section touches one
+    * pointer file — data volume never enters it; prepared-but-lost
+    * generations are x31 vacuum food. */
+  def occCommitPublish(s: SparkSession, d: String): DataFrame =
+    byLang(LakeTable.snapshot(s, occDemoLog(s, d)))
 
   /** Run the x22 two-writer interleaving and return the log's base dir:
     * v1 seeds the corpus, A wins v2 (deletes `de`), B conflicts with its
     * stale v1-based reprice, rebases on A's head and commits v3. Shared
-    * by x22 (head read) and x23 (whole-history read). */
+    * by x22 (head read), x23/x30 (whole-history reads) and x33. */
   private[graft] def occDemoLog(s: SparkSession, d: String): String = {
-    val base = LakeDir.scoped(s, "occ", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true) // rebuilt in place per invocation
+    val base = LakeDir.fresh(s, "occ", d)
+    val log = TxnLog.local(base)
     // v1: seed the table with the full corpus
-    val gen0 = occPrepare(s, base, Tables.documents(s, d))
-    require(occTryCommit(base, 1, gen0), "seed commit of an empty log must win")
+    val gen0 = LakeTable.prepare(s, base, Tables.documents(s, d))
+    require(log.tryCommit(1, Commit(gen0)), "seed commit of an empty log must win")
     // two writers each read the SAME committed snapshot (v1)
-    val snapA = occReadCommitted(s, base)
-    val snapB = occReadCommitted(s, base)
+    val snapA = LakeTable.snapshot(s, base)
+    val snapB = LakeTable.snapshot(s, base)
     // A prepares + wins v2: delete the de partition
-    val genA = occPrepare(s, base, snapA.where(col("lang") =!= "de"))
-    require(occTryCommit(base, 2, genA), "writer A raced nobody at v2")
+    val genA = LakeTable.prepare(s, base, snapA.where(col("lang") =!= "de"))
+    require(log.tryCommit(2, Commit(genA)), "writer A raced nobody at v2")
     // B prepared against the STALE v1 snapshot...
     val reprice = (df: DataFrame) => df.withColumn("n_chars",
       when(col("lang") === "fr", col("n_chars") * 2).otherwise(col("n_chars")))
-    val genBStale = occPrepare(s, base, reprice(snapB))
+    val genBStale = LakeTable.prepare(s, base, reprice(snapB))
     // ...and its commit attempt at v2 MUST lose: conflict detected, not
     // silent last-writer-wins (which would resurrect A's deleted rows)
-    require(!occTryCommit(base, 2, genBStale),
+    require(!log.tryCommit(2, Commit(genBStale)),
       "stale writer must get a conflict, not a silent overwrite")
     // rebase: re-read the NEW head, re-apply B's own transform, retry
-    val genB = occPrepare(s, base, reprice(occReadCommitted(s, base)))
-    require(occTryCommit(base, 3, genB), "rebased retry at v3 raced nobody")
+    val genB = LakeTable.prepare(s, base, reprice(LakeTable.snapshot(s, base)))
+    require(log.tryCommit(3, Commit(genB)), "rebased retry at v3 raced nobody")
     base
-  }
-
-  /** Prepare one generation (data + k11 manifest) under `base`, off the
-    * commit path. Returns the generation's directory name. */
-  private[graft] def occPrepare(s: SparkSession, base: String, df: DataFrame): String = {
-    val gen = s"gen_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$base/$gen/data")
-    MaterialiseOps.writeManifest(s, s"$base/$gen")
-    gen
-  }
-
-  /** The atomic CAS: claim `v<version>` for `gen` iff absent, through
-    * the [[graft.lake.CommitStore]] seam (hard-link locally; the
-    * S3/GCS/HDFS conditional-put mappings are the trait's contract —
-    * round-14 verdict item 2). True iff this writer won. */
-  private[graft] def occTryCommit(base: String, version: Int, gen: String): Boolean =
-    graft.lake.CommitStore.local(base).putIfAbsent(s"v$version", gen)
-
-  /** Resolve the current head (max committed version) and its generation
-    * name; None on an empty log. Listing-scale metadata only. */
-  private[graft] def occHead(base: String): Option[(Int, String)] = {
-    val store = graft.lake.CommitStore.local(base)
-    val vs = store.list()
-      .collect { case n if n.matches("v[0-9]+") => n.drop(1).toInt }
-    if (vs.isEmpty) None
-    else {
-      val v = vs.max
-      store.read(s"v$v").map(c => (v, commitGen(c)))
-    }
-  }
-
-  /** The committed snapshot, through the k11 validating read — a commit
-    * whose generation is torn or half-manifested throws rather than
-    * serving. */
-  private[graft] def occReadCommitted(s: SparkSession, base: String): DataFrame = {
-    val (_, gen) = occHead(base).getOrElse(
-      sys.error(s"no committed version under $base"))
-    MaterialiseOps.serveValidated(s, s"$base/$gen")
   }
 
   /** x23 — VERSIONED TIME TRAVEL THROUGH THE COMMIT LOG: x13 pinned
     * reads of retained ad-hoc generation dirs; x23 completes the x22
     * protocol by resolving EVERY committed version through the log
     * itself (`SELECT … VERSION AS OF n` over `_delta_log` / Iceberg
-    * `snapshot_id` reads): each `v<n>` pointer names its generation,
-    * each generation serves through the k11 validating read, and
-    * superseded versions stay byte-faithfully reproducible until x19's
-    * vacuum expires them — the audit/repro contract that makes an OCC
-    * log more than a mutex. The whole history resolves from
+    * `snapshot_id` reads): each version's snapshot walk names its
+    * generation, each generation serves through the k11 validating read,
+    * and superseded versions stay byte-faithfully reproducible until
+    * pointer vacuum expires them — the audit/repro contract that makes an
+    * OCC log more than a mutex. The whole history resolves from
     * listing-scale metadata (one pointer file per version); data reads
     * stay per-generation. Oracle restates all three states from source
     * predicates, so a log that resolved a version to the wrong
     * generation (or let B's stale reprice in anywhere) cannot pass. */
   def occTimeTravel(s: SparkSession, d: String): DataFrame = {
     val base = occDemoLog(s, d)
-    val maxV = occHead(base).map(_._1).getOrElse(0)
-    (1 to maxV).map { v =>
-      occReadAt(s, base, v)
+    (1 to TxnLog.local(base).head).map { v =>
+      LakeTable.snapshot(s, base, Some(v))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .select(lit(v.toLong).as("version"), col("n_docs"),
           col("sum_chars").cast("long").as("sum_chars"))
     }.reduce(_ unionByName _).orderBy(col("version"))
-  }
-
-  /** Resolve ONE committed version through the log + validating read. */
-  private[graft] def occReadAt(s: SparkSession, base: String, version: Int): DataFrame = {
-    val gen = graft.lake.CommitStore.local(base).read(s"v$version").map(commitGen)
-    require(gen.isDefined, s"version $version was never committed under $base")
-    MaterialiseOps.serveValidated(s, s"$base/${gen.get}")
   }
 
   val occTimeTravelSql: String =
@@ -1287,118 +1202,44 @@ object XmlOps extends QueryModule {
       |FROM documents WHERE lang <> 'de'
       |ORDER BY version""".stripMargin
 
-  /** x25 — OCC LOG CHECKPOINT (Delta's `_last_checkpoint`): head
-    * resolution in x22/x23 lists the whole `_commits/` dir — O(history),
-    * which a table with years of commits cannot afford, and x19-style
-    * vacuum of old version POINTERS would break the listing-derived max
-    * entirely. The fix is Delta's: a maintenance write drops a
-    * well-known `_last_checkpoint` file naming the highest checkpointed
-    * version + generation, and a cold reader starts THERE and probes
-    * only the tail (v+1, v+2, … until absent) — O(tail since last
-    * checkpoint), independent of history length, and correct even after
-    * every pre-checkpoint pointer is deleted. The checkpoint write is a
-    * stage-then-ATOMIC_MOVE replace (single-maintainer overwrite; a
-    * reader never sees a torn file, and a MISSING checkpoint just
-    * degrades to the full listing — Delta's exact fallback contract).
-    * The gate builds a six-version history (filter/reprice chain, each
-    * state deterministic), checkpoints at v4, resolves the head through
-    * the checkpoint+tail path and aggregates; the oracle restates the
+  /** x25 — OCC LOG CHECKPOINT (Delta's checkpoint file): resolving the
+    * head by listing the whole log is O(history), which a table with
+    * years of commits cannot afford, and x19-style vacuum of old version
+    * POINTERS would break a listing-derived max entirely. The fix is
+    * Delta's: a maintenance write drops a well-known checkpoint naming
+    * the highest checkpointed version + generation, and a cold reader
+    * starts THERE and probes only the tail (v+1, v+2, … until absent) —
+    * O(tail since last checkpoint), independent of history length, and
+    * correct even after every pre-checkpoint pointer is deleted. The
+    * checkpoint write is a single-maintainer atomic replace (a reader
+    * never sees a torn file), and a MISSING checkpoint just degrades to
+    * the full listing — Delta's exact fallback contract. The gate builds
+    * a six-version history (filter/reprice chain, each state
+    * deterministic), checkpoints at v4, resolves the head through the
+    * checkpoint+tail path and aggregates; the oracle restates the
     * composed final state from source predicates. The spec then DELETES
     * v1–v3 and proves resolution + content survive vacuumed history. */
   def occCheckpointRead(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occkpt", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occkpt", d)
+    val log = TxnLog.local(base)
     // six deterministic states, each committed on the previous head
     var v = 0
     def commit(df: DataFrame): Unit = {
       v += 1
-      require(occTryCommit(base, v, occPrepare(s, base, df)), s"v$v raced nobody")
+      require(log.tryCommit(v, Commit(LakeTable.prepare(s, base, df))), s"v$v raced nobody")
     }
     // full rows: the k11 manifest checksum covers the documents schema
     commit(Tables.documents(s, d))
-    commit(occReadCommitted(s, base).where(col("lang") =!= "de"))
-    commit(occReadCommitted(s, base).withColumn("n_chars",
+    commit(LakeTable.snapshot(s, base).where(col("lang") =!= "de"))
+    commit(LakeTable.snapshot(s, base).withColumn("n_chars",
       when(col("lang") === "fr", col("n_chars") * 2).otherwise(col("n_chars"))))
-    commit(occReadCommitted(s, base).where(col("n_chars") >= 100))
-    occCheckpoint(base) // maintenance pass at v4
-    commit(occReadCommitted(s, base).withColumn("n_chars",
+    commit(LakeTable.snapshot(s, base).where(col("n_chars") >= 100))
+    log.checkpoint() // maintenance pass at v4
+    commit(LakeTable.snapshot(s, base).withColumn("n_chars",
       when(col("lang") === "es", col("n_chars") * 3).otherwise(col("n_chars"))))
-    commit(occReadCommitted(s, base).where(col("source") =!= "web"))
-    val (hv, gen) = occHeadFast(base).getOrElse(sys.error("empty log"))
-    require(hv == 6, s"checkpoint+tail resolution found v$hv, want v6")
-    MaterialiseOps.serveValidated(s, s"$base/$gen")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
-  }
-
-  /** Parsed `_last_checkpoint` state. Line 1 is `<version> <gen>`
-    * (the original x25 format — still accepted); round 17 folds the
-    * rest of the Delta checkpoint state in as extra lines:
-    * `txn <appId> <version>` per app (the highest idempotence token at
-    * or below the checkpointed version) and `schema <ddl>` (the head's
-    * schema line), so token lookups and restores stay correct after
-    * every pre-checkpoint pointer is vacuumed. */
-  private[graft] final case class CkState(version: Int, gen: String,
-      txns: Map[String, Long], schema: Option[String])
-
-  private[graft] def parseCheckpoint(c: String): CkState = {
-    val lines = c.linesIterator.toSeq
-    val Array(v, g) = lines.head.split(" ", 2)
-    val txns = lines.collect {
-      case l if l.startsWith("txn ") =>
-        val Array(_, app, tv) = l.split(" ", 3); app -> tv.toLong
-    }.toMap
-    val schema = lines.collectFirst {
-      case l if l.startsWith("schema ") => l.substring("schema ".length)
-    }
-    CkState(v.toInt, g, txns, schema)
-  }
-
-  /** Write `_last_checkpoint` naming the current head, folding in every
-    * app's highest SetTransaction token (previous checkpoint's tokens ⊕
-    * one scan of the retained pointers — a token whose pointer was
-    * already vacuumed survives via the previous checkpoint, which is
-    * exactly how Delta checkpoints carry txn state) and the head's
-    * schema line. Maintenance-side only; stage + ATOMIC_MOVE so readers
-    * never see a torn file. */
-  private[graft] def occCheckpoint(base: String): Unit = {
-    val store = graft.lake.CommitStore.local(base)
-    val (v, gen) = occHead(base).getOrElse(sys.error(s"nothing to checkpoint under $base"))
-    val prev = store.read("_last_checkpoint").map(parseCheckpoint)
-    val scanned = store.list().filter(_.matches("v[0-9]+"))
-      .flatMap(store.read).flatMap(commitTxn)
-    val tokens = (prev.map(_.txns.toSeq).getOrElse(Nil) ++ scanned)
-      .groupMapReduce(_._1)(_._2)(_ max _)
-    val schema = store.read(s"v$v").flatMap(commitSchema)
-    val body = s"$v $gen" +
-      tokens.toSeq.sortBy(_._1).map { case (a, tv) => s"\ntxn $a $tv" }.mkString +
-      schema.map(ddl => s"\nschema $ddl").getOrElse("")
-    store.putReplace("_last_checkpoint", body)
-  }
-
-  /** Head resolution via checkpoint + tail probing: O(commits since the
-    * last checkpoint), never O(history); correct after pre-checkpoint
-    * pointers are vacuumed; falls back to the full listing when no
-    * checkpoint exists (Delta's contract). */
-  private[graft] def occHeadFast(base: String): Option[(Int, String)] = {
-    val store = graft.lake.CommitStore.local(base)
-    val ck = store.read("_last_checkpoint") match {
-      case None => return occHead(base)
-      case Some(c) => parseCheckpoint(c)
-    }
-    var v = ck.version
-    var gen = ck.gen
-    var probing = true
-    while (probing) {
-      store.read(s"v${v + 1}") match {
-        case Some(c) => v += 1; gen = commitGen(c)
-        case None => probing = false
-      }
-    }
-    Some((v, gen))
+    commit(LakeTable.snapshot(s, base).where(col("source") =!= "web"))
+    require(log.head == 6, s"checkpoint+tail resolution found v${log.head}, want v6")
+    byLang(LakeTable.snapshot(s, base))
   }
 
   val occCheckpointReadSql: String =
@@ -1420,10 +1261,10 @@ object XmlOps extends QueryModule {
     * Delta table CHECK constraints) is transactional: a batch with ANY
     * violating row must not publish AT ALL — the commit aborts before
     * the CAS, the head never moves, and the prepared generation is
-    * x19 vacuum food. That is only expressible because x22 made
+    * x31 vacuum food. That is only expressible because x22 made
     * publish a two-phase prepare/commit: validation runs between the
     * phases at one predicate pass over the candidate (the x21 chain,
-    * same shared [[triageReason]]), and the abort is simply "never
+    * [[LakeTable.publishValidated]]), and the abort is simply "never
     * link the pointer" — no rollback machinery, nothing to clean
     * downstream, readers provably never saw it. The gate attempts a
     * DIRTY publish (the raw corpus: zh rows break `lang_allowed`,
@@ -1432,40 +1273,17 @@ object XmlOps extends QueryModule {
     * clean state. The spec pins head-unmoved-after-abort and
     * zero-violations-at-head. */
   def txnExpectations(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occtxn", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occtxn", d)
     val docs = Tables.documents(s, d)
-    val clean = docs.where(triageReason === "ok")
-    require(occTryCommit(base, 1, occPrepare(s, base, clean.limit(0))),
+    val clean = docs.where(LakeTable.triageReason === "ok")
+    require(TxnLog.local(base).tryCommit(1, Commit(LakeTable.prepare(s, base, clean.limit(0)))),
       "seeding an empty table raced nobody")
     // dirty attempt: on real corpora this ABORTS (violations exist) and
     // the head stays put; on a vacuously-clean corpus it commits —
     // either way the head only ever holds validated rows
-    occTryCommitValidated(s, base, docs)
-    occTryCommitValidated(s, base, clean)
-    occReadCommitted(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
-  }
-
-  /** Two-phase validated publish: prepare the candidate generation,
-    * run the x21 constraint chain over it in ONE predicate pass, and
-    * only attempt the CAS when zero rows violate. Returns true iff
-    * this candidate became the head. An aborted candidate's prepared
-    * generation is left unreferenced (x19 vacuum reclaims it). */
-  private[graft] def occTryCommitValidated(s: SparkSession, base: String,
-      candidate: DataFrame): Boolean = {
-    val gen = occPrepare(s, base, candidate)
-    val violations = MaterialiseOps.serveValidated(s, s"$base/$gen")
-      .where(triageReason =!= "ok").count() // validate what was WRITTEN
-    if (violations > 0) false
-    else {
-      val next = occHead(base).map(_._1).getOrElse(0) + 1
-      occTryCommit(base, next, gen)
-    }
+    LakeTable.publishValidated(s, base, docs)
+    LakeTable.publishValidated(s, base, clean)
+    byLang(LakeTable.snapshot(s, base))
   }
 
   val txnExpectationsSql: String =
@@ -1474,350 +1292,69 @@ object XmlOps extends QueryModule {
       |WHERE lang IN ('en', 'fr', 'de', 'es') AND n_chars >= 100
       |GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** A commit blob: line 1 names the generation; an optional line 2
-    * `txn <appId> <version>` records the writer's idempotence token —
-    * Delta's SetTransaction (txnAppId/txnVersion) action, the piece that
-    * makes streaming writes exactly-once against the log. */
-  private[graft] def commitGen(content: String): String =
-    content.linesIterator.next()
-
-  private[graft] def commitTxn(content: String): Option[(String, Long)] =
-    // any body line, not just line 2 (round 17): a commit that carries
-    // BOTH a schema line and a txn token must not hide the token —
-    // same order-insensitive scan as commitSchema/commitCompactUpTo
-    content.linesIterator.drop(1).collectFirst {
-      case l if l.startsWith("txn ") =>
-        val Array(_, app, v) = l.split(" ", 3)
-        (app, v.toLong)
-    }
-
-  /** The highest txnVersion `appId` ever committed to this log, or None.
-    *
-    * O(tail since the last checkpoint), not O(history) (round 17, the
-    * r15/r16 verdicts' structural lake item): with a checkpoint present
-    * this reads the folded token map plus only the tail pointers above
-    * it — the exact occHeadFast walk — so a years-old log costs the same
-    * as a fresh one, AND the answer survives pre-checkpoint pointer
-    * vacuum (the old full-listing scan silently LOST tokens once their
-    * pointers were deleted, re-opening the exactly-once window). Without
-    * a checkpoint it degrades to the full listing, as before. */
-  private[graft] def occLastTxn(base: String, appId: String): Option[Long] = {
-    val store = graft.lake.CommitStore.local(base)
-    store.read("_last_checkpoint").map(parseCheckpoint) match {
-      case Some(ck) =>
-        var best = ck.txns.get(appId)
-        var v = ck.version
-        var probing = true
-        while (probing) {
-          store.read(s"v${v + 1}") match {
-            case Some(c) =>
-              v += 1
-              commitTxn(c).filter(_._1 == appId).foreach { case (_, tv) =>
-                best = Some(best.fold(tv)(_ max tv))
-              }
-            case None => probing = false
-          }
-        }
-        best
-      case None =>
-        store.list().filter(_.matches("v[0-9]+"))
-          .flatMap(store.read)
-          .flatMap(commitTxn)
-          .collect { case (a, v) if a == appId => v }
-          .maxOption
-    }
-  }
-
-  /** Pointer-vacuum plan (round 17): which `v<n>` POINTERS may be
-    * deleted, and which must be retained. A pointer strictly below the
-    * newest compaction commit is not needed for head or snapshot reads
-    * (its generation is replaced) — but a pointer carrying an app's
-    * NEWEST idempotence token must be retained until a checkpoint has
-    * folded that token, or the vacuum re-opens the exactly-once window
-    * (Delta's setTransactionRetentionDuration caveat, made structural:
-    * the plan REFUSES instead of trusting an operator to remember).
-    * Returns (reclaimable, retainedForTokens); the head pointer and
-    * everything at/above the newest compaction commit are never
-    * candidates. With a checkpoint, neither is anything above the
-    * checkpointed version: occHeadFast and occLastTxn probe upward from
-    * it and stop at the first missing pointer, so a checkpoint older
-    * than the compaction must not leave a gap below a retained pointer.
-    * Without one, both readers list the whole log. Listing-scale
-    * metadata; data files never open. */
-  private[graft] def txnPointerVacuumPlan(base: String): (Seq[Int], Seq[Int]) = {
-    val store = graft.lake.CommitStore.local(base)
-    val versions = store.list()
-      .collect { case n if n.matches("v[0-9]+") => n.drop(1).toInt }.sorted
-    if (versions.isEmpty) return (Nil, Nil)
-    val contents = versions.map(v => v -> store.read(s"v$v")).collect {
-      case (v, Some(c)) => v -> c
-    }.toMap
-    val compactBase = contents.collect {
-      case (v, c) if commitCompactUpTo(c).isDefined => v
-    }.maxOption.getOrElse(0)
-    val ck = store.read("_last_checkpoint").map(parseCheckpoint)
-    val bound = ck.fold(compactBase)(c => math.min(compactBase, c.version + 1))
-    val candidates = versions.filter(_ < bound)
-    val ckTxns = ck.map(_.txns).getOrElse(Map.empty[String, Long])
-    // each app's newest token pointer among ALL retained pointers
-    val newestTokenPtr = contents.toSeq
-      .flatMap { case (v, c) => commitTxn(c).map { case (a, tv) => (a, tv, v) } }
-      .groupBy(_._1)
-      .map { case (a, ts) => a -> ts.maxBy(t => (t._2, t._3)) }
-    val mustRetain = newestTokenPtr.values.collect {
-      case (app, tv, v) if !ckTxns.get(app).exists(_ >= tv) => v
-    }.toSet
-    (candidates.filterNot(mustRetain), candidates.filter(mustRetain))
-  }
-
-  /** x27's writer: IDEMPOTENT TRANSACTIONAL APPEND. Prepare the batch as
-    * its own generation (data written ONCE, off the commit path), then
-    * CAS a pointer that carries the (appId, txnVersion) token:
-    *
-    *   - a REDELIVERED batch (same appId, same or lower txnVersion)
-    *     finds its token already in the log and no-ops — exactly-once
-    *     visibility from at-least-once delivery, Delta's
-    *     txnAppId/txnVersion dedup;
-    *   - a CAS loss to a CONCURRENT writer is not a conflict for an
-    *     append (batches commute): re-read the head, retry at the next
-    *     version, bounded.
-    *
-    * Returns true iff THIS call moved the head; false = the token was
-    * already committed (no-op replay). The loser's prepared generation
-    * on the no-op path is x19 vacuum food, never referenced. */
-  private[graft] def occTxnCommit(s: SparkSession, base: String, appId: String,
-      txnVersion: Long, batch: DataFrame, maxAttempts: Int = 16): Boolean = {
-    if (occLastTxn(base, appId).exists(_ >= txnVersion)) return false
-    val gen = occPrepare(s, base, batch)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      // the token may have landed concurrently (redelivery racing itself)
-      if (occLastTxn(base, appId).exists(_ >= txnVersion)) return false
-      val next = occHead(base).map(_._1).getOrElse(0) + 1
-      if (occTryCommit(base, next, s"$gen\ntxn $appId $txnVersion")) return true
-      attempt += 1 // lost the CAS — someone else advanced the head; retry
-    }
-    sys.error(s"txn $appId/$txnVersion lost $maxAttempts CAS races under $base")
-  }
-
-  /** A compaction commit's marker: `compact <n>` on a body line means
-    * this commit's generation REPLACES versions 1..n (Delta's
-    * remove+add in one commit) — a snapshot read starts here and only
-    * unions the adds above it. */
-  private[graft] def commitCompactUpTo(content: String): Option[Int] =
-    content.linesIterator.drop(1).collectFirst {
-      case l if l.startsWith("compact ") => l.split(" ", 2)(1).toInt
-    }
-
-  /** Snapshot of an APPEND-ONLY txn table at version `upTo` (default:
-    * head): the union of committed generations, each through the k11
-    * validating read — Delta's add-file semantics (a commit ADDS its
-    * batch; a snapshot is the union of live adds), where x22's pointer
-    * names a full-table snapshot. The walk goes BACKWARD from `upTo`
-    * and stops at the newest compaction commit at-or-below it (whose
-    * generation replaces everything beneath), so version pointers
-    * under a compaction base may be vacuumed without breaking head
-    * reads — only time travel BELOW the base needs them (Delta's
-    * retention caveat). Version resolution is listing-scale metadata;
-    * data reads one per live generation, shrinking many small
-    * generations back to one being exactly x28's job. */
-  private[graft] def occReadAppendLog(s: SparkSession, base: String,
-      upTo: Option[Int] = None): DataFrame = {
-    val head = occHead(base).map(_._1)
-      .getOrElse(sys.error(s"no commits under $base"))
-    val target = upTo.getOrElse(head)
-    require(target >= 1 && target <= head,
-      s"version $target outside committed range 1..$head")
-    occLiveGens(base, target)
-      .map(g => MaterialiseOps.serveValidated(s, s"$base/$g"))
-      .reduce(_ unionByName _)
-  }
-
   /** x27 — TRANSACTIONAL APPEND LOG (the Delta txnAppId/txnVersion
     * shape, batch side): the gate splits documents into four
     * deterministic arrival batches (doc_id % 4), commits each through
-    * [[occTxnCommit]] — deliberately REDELIVERING batch 2 mid-sequence,
-    * which must no-op rather than double-append — then pins exactly one
-    * version per distinct txn and aggregates the snapshot through
-    * [[occReadAppendLog]]. The four batches partition the table, so the
-    * oracle is the plain full-corpus aggregate: a duplicated append, a
-    * lost batch, or a torn read all mis-sum. st65 is the streaming twin
-    * driving the SAME writer from foreachBatch with the Spark batchId
-    * as txnVersion — one protocol, shared oracle. */
+    * [[LakeTable.txnAppend]] — deliberately REDELIVERING batch 2
+    * mid-sequence, which must no-op rather than double-append — then pins
+    * exactly one version per distinct txn and aggregates the head
+    * snapshot, the union of the four added generations. The four batches
+    * partition the table, so the oracle is the plain full-corpus
+    * aggregate: a duplicated append, a lost batch, or a torn read all
+    * mis-sum. st65 is the streaming twin driving the SAME writer from
+    * foreachBatch with the Spark batchId as txnVersion — one protocol,
+    * shared oracle. */
   def txnAppendLog(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occtxnlog", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occtxnlog", d)
     val docs = graft.core.Tables.documents(s, d)
     val app = "x27_writer"
     (0 until 4).foreach { b =>
-      require(occTxnCommit(s, base, app, b.toLong, docs.where(col("doc_id") % 4 === b)),
+      require(LakeTable.txnAppend(s, base, app, b.toLong, docs.where(col("doc_id") % 4 === b)),
         s"first delivery of batch $b must commit")
       if (b == 2)
-        require(!occTxnCommit(s, base, app, 2L, docs.where(col("doc_id") % 4 === 2)),
+        require(!LakeTable.txnAppend(s, base, app, 2L, docs.where(col("doc_id") % 4 === 2)),
           "a redelivered batch must no-op, not double-append")
     }
-    require(occHead(base).map(_._1).contains(4),
-      "exactly one committed version per distinct txn")
-    occReadAppendLog(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
+    require(TxnLog.local(base).head == 4, "exactly one committed version per distinct txn")
+    byLang(LakeTable.snapshot(s, base))
   }
 
   val txnAppendLogSql: String =
     """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** The live generations a snapshot at `upTo` reads, newest first —
-    * the same back-walk as [[occReadAppendLog]], factored so the
-    * compactor and specs can see the physical read set. */
-  private[graft] def occLiveGens(base: String, upTo: Int): Seq[String] = {
-    val store = graft.lake.CommitStore.local(base)
-    val gens = scala.collection.mutable.ListBuffer.empty[String]
-    var v = upTo
-    var done = false
-    while (v >= 1 && !done) {
-      val c = store.read(s"v$v")
-        .getOrElse(sys.error(s"v$v vacuumed below an uncompacted tail of $base"))
-      gens += commitGen(c)
-      if (commitCompactUpTo(c).isDefined) done = true
-      v -= 1
-    }
-    gens.toSeq
-  }
-
-  /** A generation's k11-manifest totals: (files, rows, order-blind
-    * xxhash64 row-hash sum). Metadata-only — the manifest is one row
-    * per FILE. */
-  private[graft] def manifestTotals(s: SparkSession, base: String,
-      gen: String): (Long, Long, java.math.BigDecimal) = {
-    val r = s.read.parquet(s"$base/$gen/_manifest")
-      .agg(count(lit(1)).as("files"), sum(col("rows")).as("rows"),
-        sum(col("checksum")).as("checksum")).collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-      if (r.isNullAt(2)) java.math.BigDecimal.ZERO else r.getDecimal(2))
-  }
-
-  /** x28's compactor: OPTIMIZE as an OCC COMMIT (x14's plan composed
-    * with x22's protocol). Attempt to compact versions 1..asOf into one
-    * generation committed at asOf+1 with the `compact asOf` marker:
-    *
-    *   1. read the snapshot at asOf through the normal append-log walk;
-    *   2. rewrite it as ONE generation, coalesced 8:1 against the live
-    *     input FILE count (from the manifests — metadata, not a data
-    *     scan), the data-scale work, entirely off the commit path;
-    *   3. validate the rewrite is LOSSLESS by comparing k11-manifest
-    *     totals (row count + order-blind xxhash64 row-hash sum) of the
-    *     rewritten generation against the sum over its inputs —
-    *     metadata-only, no second data scan; the spec additionally pins
-    *     true row-for-row multiset equality at small scale;
-    *   4. CAS the pointer at asOf+1. A concurrent writer that landed
-    *     asOf+1 first WINS: the CAS fails, this returns false, and the
-    *     caller rebases (recompacts the new head) or aborts — the
-    *     losing rewrite is x19 vacuum food, data never moves on the
-    *     loser path, and the critical section stays one pointer file.
-    *
-    * After the commit, head reads touch ONE generation and every
-    * pre-compaction version pointer is vacuumable (only time travel
-    * below the base still needs them — Delta's retention caveat). */
-  private[graft] def occCompactAt(s: SparkSession, base: String, asOf: Int): Boolean = {
-    val inputs = occLiveGens(base, asOf)
-    val inTotals = inputs.map(manifestTotals(s, base, _))
-    val inFiles = inTotals.map(_._1).sum
-    val target = math.max(1L, inFiles / 8L).toInt
-    val gen = occPrepare(s, base,
-      occReadAppendLog(s, base, Some(asOf)).coalesce(target))
-    val (_, outRows, outSum) = manifestTotals(s, base, gen)
-    require(outRows == inTotals.map(_._2).sum &&
-        outSum == inTotals.map(_._3).foldLeft(java.math.BigDecimal.ZERO)(_ add _),
-      s"compaction rewrite lost or mutated rows under $base — refusing to commit")
-    occTryCommit(base, asOf + 1, s"$gen\ncompact $asOf")
-  }
-
-  /** Bounded rebase loop over [[occCompactAt]]; returns the committed
-    * compaction version. */
-  private[graft] def occCompact(s: SparkSession, base: String,
-      maxAttempts: Int = 8): Int = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val head = occHead(base).map(_._1)
-        .getOrElse(sys.error(s"nothing to compact under $base"))
-      if (occCompactAt(s, base, head)) return head + 1
-      attempt += 1 // a writer landed head+1 first — rebase on the new head
-    }
-    sys.error(s"compactor lost $maxAttempts races under $base")
-  }
-
   /** x28 — COMPACTION AS AN OCC COMMIT: the round-14 verdict's gap —
     * x14 plans compaction and KvGenStore compacts inline, but neither
     * publishes THROUGH the log, so until now OPTIMIZE couldn't coexist
     * with live writers. The gate fragments the corpus into four
     * single-batch generations (x27's writer), compacts through
-    * [[occCompact]], pins that the head snapshot now reads ONE
-    * generation, then VACUUMS every pre-compaction version pointer and
-    * serves the head anyway — the read correctness the `compact` marker
-    * exists to license. The oracle restates the full corpus: a lossy
-    * rewrite, a double-counted generation, or a walk that reads below
-    * the compaction base all mis-aggregate. */
+    * [[LakeTable.compact]] — a lossless rewrite committed as a REPLACING
+    * commit, so a faster writer wins the CAS and the compactor rebases —
+    * pins that the head snapshot now reads ONE generation, then VACUUMS
+    * every pre-compaction version pointer and serves the head anyway —
+    * the read correctness the replacing commit exists to license. The
+    * oracle restates the full corpus: a lossy rewrite, a double-counted
+    * generation, or a walk that reads below the compaction base all
+    * mis-aggregate. */
   def compactionCommit(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occcompact", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occcompact", d)
+    val log = TxnLog.local(base)
     val docs = graft.core.Tables.documents(s, d)
     (0 until 4).foreach { b =>
-      require(occTxnCommit(s, base, "x28_writer", b.toLong,
+      require(LakeTable.txnAppend(s, base, "x28_writer", b.toLong,
         docs.where(col("doc_id") % 4 === b)))
     }
-    require(occLiveGens(base, 4).size == 4, "fixture must start fragmented")
-    val cv = occCompact(s, base)
-    require(cv == 5 && occLiveGens(base, cv).size == 1,
+    require(log.snapshot(4).gens.size == 4, "fixture must start fragmented")
+    val cv = LakeTable.compact(s, base)
+    require(cv == 5 && log.snapshot(cv).gens.size == 1,
       "head snapshot must read exactly ONE generation after compaction")
-    val store = graft.lake.CommitStore.local(base)
-    (1 to 4).foreach(v => store.delete(s"v$v")) // vacuum pre-compaction pointers
-    occReadAppendLog(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
+    (1 to 4).foreach(log.drop) // vacuum pre-compaction pointers
+    byLang(LakeTable.snapshot(s, base))
   }
 
   val compactionCommitSql: String =
     """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** A commit's schema line: `schema <ddl>` versions the TABLE SCHEMA in
-    * the log itself (Delta's Metadata action / Iceberg schema-id) — the
-    * piece that makes ADD COLUMN a metadata-only commit and old
-    * versions serve their OLD schema. */
-  private[graft] def commitSchema(content: String): Option[String] =
-    content.linesIterator.drop(1).collectFirst {
-      case l if l.startsWith("schema ") => l.substring("schema ".length)
-    }
-
-  /** Conform a generation's rows to a commit's schema: columns the data
-    * files already carry pass through (cast to the declared type);
-    * columns the schema added AFTER the files were written materialize
-    * as typed NULLs — Delta's ADD COLUMN read semantics, which is what
-    * lets the add be metadata-only. Column order is the schema's. */
-  private[graft] def conformTo(df: DataFrame, ddl: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    df.select(schema.fields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  /** Schema-aware versioned read: x23's [[occReadAt]] plus the commit's
-    * own schema — a reader of v<n> sees v<n>'s schema, byte- AND
-    * shape-faithfully, no matter what later commits added. */
-  private[graft] def occReadAtEvolved(s: SparkSession, base: String, version: Int): DataFrame = {
-    val c = graft.lake.CommitStore.local(base).read(s"v$version")
-    require(c.isDefined, s"version $version was never committed under $base")
-    val df = MaterialiseOps.serveValidated(s, s"$base/${commitGen(c.get)}")
-    commitSchema(c.get).map(conformTo(df, _)).getOrElse(df)
-  }
 
   /** x29 — SCHEMA EVOLUTION THROUGH THE LOG (the round-14 verdict's
     * item 4): x8 proved mergeSchema READS; real table formats version
@@ -1827,29 +1364,28 @@ object XmlOps extends QueryModule {
     * v1 = the 5-column corpus; v2 = ADD COLUMN quality_tier (same
     * generation, wider schema, column reads as typed NULL); v3 = a
     * writer fills the column (data commit). The gate serves all three
-    * through [[occReadAtEvolved]] and reports each version's schema
-    * width + rows + column sum; the oracle restates them from source —
-    * a reader that leaked the new column into v1, lost the nulls at
-    * v2, or dropped the fill at v3 cannot match. The spec additionally
-    * pins v1/v2 sharing one generation and per-version schema
-    * reproducibility after later commits land (x23's discipline). */
+    * through the snapshot read, conformed to each version's schema, and
+    * reports each version's schema width + rows + column sum; the oracle
+    * restates them from source — a reader that leaked the new column
+    * into v1, lost the nulls at v2, or dropped the fill at v3 cannot
+    * match. The spec additionally pins v1/v2 sharing one generation and
+    * per-version schema reproducibility after later commits land (x23's
+    * discipline). */
   def schemaEvolutionLog(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occschema", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occschema", d)
+    val log = TxnLog.local(base)
     val ddl5 = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     val ddl6 = s"$ddl5, quality_tier BIGINT"
-    val gen1 = occPrepare(s, base, graft.core.Tables.documents(s, d))
-    require(occTryCommit(base, 1, s"$gen1\nschema $ddl5"), "v1 raced nobody")
+    val gen1 = LakeTable.prepare(s, base, graft.core.Tables.documents(s, d))
+    require(log.tryCommit(1, Commit(gen1, schema = Some(ddl5))), "v1 raced nobody")
     // v2: ADD COLUMN is metadata-only — same generation, wider schema
-    require(occTryCommit(base, 2, s"$gen1\nschema $ddl6"), "v2 raced nobody")
+    require(log.tryCommit(2, Commit(gen1, schema = Some(ddl6))), "v2 raced nobody")
     // v3: fill the column (a data commit on the evolved schema)
-    val gen3 = occPrepare(s, base, occReadAtEvolved(s, base, 2)
+    val gen3 = LakeTable.prepare(s, base, LakeTable.snapshot(s, base, Some(2))
       .withColumn("quality_tier", expr("n_chars div 1000")))
-    require(occTryCommit(base, 3, s"$gen3\nschema $ddl6"), "v3 raced nobody")
+    require(log.tryCommit(3, Commit(gen3, schema = Some(ddl6))), "v3 raced nobody")
     (1 to 3).map { v =>
-      val df = occReadAtEvolved(s, base, v)
+      val df = LakeTable.snapshot(s, base, Some(v))
       val tier = if (df.columns.contains("quality_tier")) col("quality_tier")
         else lit(null).cast("long")
       df.agg(count(lit(1)).as("n_docs"), sum(tier).cast("long").as("sum_tier"))
@@ -1884,11 +1420,10 @@ object XmlOps extends QueryModule {
     * version cannot match. */
   def tableChanges(s: SparkSession, d: String): DataFrame = {
     val base = occDemoLog(s, d)
-    val maxV = occHead(base).map(_._1).getOrElse(0)
     val cols = Seq("doc_id", "lang", "n_chars").map(col)
-    (2 to maxV).map { v =>
-      cdcDiffFull(occReadAt(s, base, v - 1).select(cols: _*),
-          occReadAt(s, base, v).select(cols: _*))
+    (2 to TxnLog.local(base).head).map { v =>
+      cdcDiffFull(LakeTable.snapshot(s, base, Some(v - 1)).select(cols: _*),
+          LakeTable.snapshot(s, base, Some(v)).select(cols: _*))
         .groupBy(col("change_type"))
         .agg(count(lit(1)).as("n_rows"),
           sum(coalesce(col("n_chars"), lit(0L))).as("sum_new_chars"))
@@ -1908,53 +1443,52 @@ object XmlOps extends QueryModule {
 
   /** x31 — TXN-LOG VACUUM (x19's reclaim discipline composed over the
     * x27/x28 generation lifecycle): a generation is LIVE iff some
-    * retained version pointer's snapshot read reaches it — i.e. it is
-    * in [[occLiveGens]] of any retained version. Everything else under
-    * the base is reclaimable: CAS-loser preparations, aborted
-    * validated commits, and pre-compaction generations once their
-    * pointers are vacuumed. Pure metadata set algebra (directory
-    * listing anti-join pointer walk); data files never open. The gate
-    * builds each orphan kind deliberately — four batch commits, one
-    * prepared-but-lost generation, a compaction, then pointer vacuum
-    * of v1..v4 — deletes what the plan names, and proves the head
-    * still serves every row (the oracle restates the corpus): a plan
-    * that reclaims a live generation cannot pass, and one that misses
-    * an orphan fails the spec's exact reclaim-set pin. */
+    * retained version pointer names it ([[LakeTable.vacuumPlan]]) —
+    * which covers the head's read set and every version time travel can
+    * still reach. Everything else under the base is reclaimable:
+    * CAS-loser preparations, aborted validated commits, and
+    * pre-compaction generations once their pointers are vacuumed. Pure
+    * metadata set algebra (directory listing anti-join pointer names);
+    * data files never open. The gate builds each orphan kind
+    * deliberately — four batch commits, one prepared-but-lost
+    * generation, a compaction, then pointer vacuum of v1..v4 — deletes
+    * what the plan names, and proves the head still serves every row
+    * (the oracle restates the corpus): a plan that reclaims a live
+    * generation cannot pass, and one that misses an orphan fails the
+    * spec's exact reclaim-set pin. */
   def txnLogVacuum(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occvac", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occvac", d)
+    val log = TxnLog.local(base)
     val docs = graft.core.Tables.documents(s, d)
     (0 until 4).foreach { b =>
-      require(occTxnCommit(s, base, "x31_writer", b.toLong,
+      require(LakeTable.txnAppend(s, base, "x31_writer", b.toLong,
         docs.where(col("doc_id") % 4 === b)))
     }
-    occPrepare(s, base, docs.limit(3)) // a CAS loser: prepared, never linked
-    require(occCompact(s, base) == 5)
-    val store = graft.lake.CommitStore.local(base)
-    // x19-style pointer vacuum, now through the round-17 discipline:
+    LakeTable.prepare(s, base, docs.limit(3)) // a CAS loser: prepared, never linked
+    require(LakeTable.compact(s, base) == 5)
+    // x19-style pointer vacuum, through the round-17 discipline:
     // checkpoint first (folds the four x31_writer tokens), then delete
-    // only what the pointer plan releases — the same v1..v4 as before,
-    // but an operator who SKIPPED the checkpoint would be refused the
-    // newest-token pointer instead of silently breaking idempotence
-    // (Round17Spec pins both sides).
-    occCheckpoint(base)
-    val (ptrReclaim, ptrRetained) = txnPointerVacuumPlan(base)
+    // only what the pointer plan releases — v1..v4, but an operator who
+    // SKIPPED the checkpoint would be refused the newest-token pointer
+    // instead of silently breaking idempotence (Round17Spec pins both
+    // sides).
+    log.checkpoint()
+    val (ptrReclaim, ptrRetained) = log.pointerVacuumPlan()
     require(ptrRetained.isEmpty && ptrReclaim == Seq(1, 2, 3, 4),
       s"expected v1..v4 reclaimable after the checkpoint fold, got " +
         s"reclaim=$ptrReclaim retained=$ptrRetained")
-    ptrReclaim.foreach(v => store.delete(s"v$v"))
-    val (live, reclaimable) = txnLogVacuumPlan(s, base)
-    require(occHead(base).exists(h => live.contains(h._2)),
-      "the head's generation must be in the live set")
-    reclaimable.foreach(g => hf.delete(new org.apache.hadoop.fs.Path(s"$base/$g"), true))
+    ptrReclaim.foreach(log.drop)
+    val (live, reclaimable) = LakeTable.vacuumPlan(s, base)
+    require(log.snapshot(log.head).gens.forall(live.contains),
+      "the head's read set must be in the live set")
+    reclaimable.foreach(g => LakeDir.delete(s, s"$base/$g"))
     // the head must survive its own vacuum, byte-complete
-    occReadAppendLog(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
+    byLang(LakeTable.snapshot(s, base))
   }
+
+  val txnLogVacuumSql: String =
+    """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
   /** x32 — TRANSACTIONAL MERGE INTO (x15's keyed-changelog arms ∘ x22's
     * protocol): the headline lake write — one keyed feed of full
@@ -1971,19 +1505,14 @@ object XmlOps extends QueryModule {
     * state, but reached through one atomic commit instead of a
     * republish. */
   def txnMerge(s: SparkSession, d: String): DataFrame = {
-    val base = LakeDir.scoped(s, "occmerge", d)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = LakeDir.fresh(s, "occmerge", d)
+    val log = TxnLog.local(base)
     val docs = graft.core.Tables.documents(s, d)
-    require(occTryCommit(base, 1, occPrepare(s, base, docs)), "seed raced nobody")
-    val snap = occReadCommitted(s, base)
-    val gen = occPrepare(s, base, mergeDocsApply(snap, docsMergeFeed(docs)))
-    require(occTryCommit(base, 2, gen), "merge commit raced nobody")
-    occReadCommitted(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
+    require(log.tryCommit(1, Commit(LakeTable.prepare(s, base, docs))), "seed raced nobody")
+    val gen = LakeTable.prepare(s, base,
+      mergeDocsApply(LakeTable.snapshot(s, base), docsMergeFeed(docs)))
+    require(log.tryCommit(2, Commit(gen)), "merge commit raced nobody")
+    byLang(LakeTable.snapshot(s, base))
   }
 
   /** The x24-shape changelog as FULL after-image documents rows:
@@ -2028,64 +1557,24 @@ object XmlOps extends QueryModule {
 
   /** x33 — RESTORE TABLE TO VERSION (Delta RESTORE / Iceberg rollback):
     * undo is a NEW COMMIT whose pointer names the OLD version's
-    * generation verbatim — metadata-only (zero data movement, like
-    * x29's ADD COLUMN), history-preserving (the versions being undone
-    * still resolve for audit; nothing is deleted), and itself undoable
-    * (a restore of the restore is just another pointer). The gate
-    * builds the x22 three-state history, RESTOREs to v1 as v4, and
-    * serves the head — which must read byte-identically to the
-    * original seed, so the oracle is the plain corpus aggregate; a
-    * restore that pointed at the wrong generation, or rewrote data,
-    * cannot match. The spec pins generation identity (v4's blob names
-    * v1's gen), preserved history (v2/v3 still serve their own
-    * states), and restore-of-restore. */
+    * generation verbatim ([[graft.lake.TxnLog.restore]]) — metadata-only
+    * (zero data movement, like x29's ADD COLUMN), carrying the target's
+    * schema, history-preserving (the versions being undone still resolve
+    * for audit; nothing is deleted), and itself undoable (a restore of
+    * the restore is just another pointer). The gate builds the x22
+    * three-state history, RESTOREs to v1 as v4, and serves the head —
+    * which must read byte-identically to the original seed, so the
+    * oracle is the plain corpus aggregate; a restore that pointed at the
+    * wrong generation, or rewrote data, cannot match. The spec pins
+    * generation identity (v4's blob names v1's gen), preserved history
+    * (v2/v3 still serve their own states), and restore-of-restore. */
   def restoreTable(s: SparkSession, d: String): DataFrame = {
     val base = occDemoLog(s, d)
-    require(occRestore(s, base, 1), "restore commit raced nobody")
-    occReadCommitted(s, base)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
-  }
-
-  /** Commit the head+1 pointer naming version `toVersion`'s generation:
-    * a pure pointer write through the same CAS as every other commit.
-    * True iff this writer won. */
-  private[graft] def occRestore(s: SparkSession, base: String, toVersion: Int): Boolean = {
-    val store = graft.lake.CommitStore.local(base)
-    val content = store.read(s"v$toVersion")
-      .getOrElse(sys.error(s"cannot restore to never-committed v$toVersion under $base"))
-    // Delta RESTORE restores metadata too (round-16 ADVICE fix): carry
-    // the target commit's `schema` line forward so restoring a
-    // schema-evolved version serves THAT version's shape — previously
-    // only the generation line was copied and occReadAtEvolved on the
-    // restored head fell back to the unconformed column shape. `txn` /
-    // `compact` lines must NOT replay: an idempotence token or a
-    // replaces-below marker describes the original commit only.
-    val blob = commitGen(content) +
-      commitSchema(content).map(ddl => s"\nschema $ddl").getOrElse("")
-    val next = occHead(base).map(_._1).getOrElse(0) + 1
-    occTryCommit(base, next, blob)
+    require(TxnLog.local(base).restore(1) == 4, "restore commit raced nobody")
+    byLang(LakeTable.snapshot(s, base))
   }
 
   val restoreTableSql: String =
-    """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** The vacuum plan: (live, reclaimable) generation dir names under
-    * `base`. Live = union of every retained version's snapshot read
-    * set; reclaimable = listed gen_* dirs minus live. Listing-scale. */
-  private[graft] def txnLogVacuumPlan(s: SparkSession, base: String): (Set[String], Set[String]) = {
-    val store = graft.lake.CommitStore.local(base)
-    val versions = store.list().collect { case n if n.matches("v[0-9]+") => n.drop(1).toInt }
-    val live = versions.flatMap(v => occLiveGens(base, v)).toSet
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val all = hf.listStatus(bp).map(_.getPath.getName).filter(_.startsWith("gen_")).toSet
-    (live, all -- live)
-  }
-
-  val txnLogVacuumSql: String =
     """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 

@@ -2215,7 +2215,7 @@ object Streaming {
     // the ONE triage chain, shared with batch x21 (round-13 ADVICE):
     // editing the constraint order there updates this monitor in lockstep
     val triage = (df: DataFrame) => df
-      .select(col("n_chars"), graft.operators.XmlOps.triageReason.as("reason"))
+      .select(col("n_chars"), graft.lake.LakeTable.triageReason.as("reason"))
       .groupBy(col("reason"))
       .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
     val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -2397,8 +2397,8 @@ object Streaming {
     * persists per-batch state as raw `batch=<id>` parquet dirs —
     * idempotent under replay, but visibility is per-directory (a reader
     * racing the writer can see a half-written batch dir) and nothing
-    * time-travels. Here foreachBatch drives [[graft.operators.XmlOps
-    * .occTxnCommit]]: the batch is PREPARED as its own generation off
+    * time-travels. Here foreachBatch drives [[graft.lake.LakeTable
+    * .txnAppend]]: the batch is PREPARED as its own generation off
     * the commit path, then CAS-committed with the Spark batchId as the
     * txnVersion (Delta's txnAppId/txnVersion dedup) — a redelivered
     * batch finds its token already in the log and no-ops; a reader
@@ -2420,7 +2420,7 @@ object Streaming {
       .writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.XmlOps.occTxnCommit(
+        graft.lake.LakeTable.txnAppend(
           batch.sparkSession, base, "st65_sink", id, batch.toDF())
         ()
       }
@@ -2429,7 +2429,7 @@ object Streaming {
       .start()
     q.processAllAvailable()
     q.stop()
-    graft.operators.XmlOps.occReadAppendLog(s, base)
+    graft.lake.LakeTable.snapshot(s, base)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy(col("lang"))
@@ -2441,7 +2441,9 @@ object Streaming {
     * processes committed versions). Each poll resolves the head through
     * the log, processes ONLY versions offset+1..head — one validating
     * read per NEW generation, never a rescan of consumed history — and
-    * folds each version's contribution into per-version state dirs
+    * folds each version's contribution (the rows it appended: the
+    * snapshot read since the previous version, which refuses a version
+    * that replaced the table) into per-version state dirs
     * keyed `v=<k>` (Overwrite: a redelivered version rewrites the same
     * bytes, so the consumer's offset needs no separate pointer — the
     * max state version IS the offset, derived and crash-safe). The
@@ -2454,12 +2456,12 @@ object Streaming {
   def streamLogConsume(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val base = s"$stateDir/table"
     val docs = graft.core.Tables.documents(s, d)
-    import graft.operators.XmlOps
+    import graft.lake.{LakeTable, TxnLog}
     def poll(): Unit = {
-      val head = XmlOps.occHead(base).map(_._1).getOrElse(0)
+      val head = TxnLog.local(base).head
       val done = consumedVersions(s, stateDir)
       ((done + 1) to head).foreach { v =>
-        XmlOps.occReadAt(s, base, v)
+        LakeTable.snapshot(s, base, Some(v), since = v - 1)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -2468,12 +2470,12 @@ object Streaming {
     }
     // two commits land, the consumer polls; two more land, it polls again
     (0 until 2).foreach { b =>
-      require(XmlOps.occTxnCommit(s, base, "st66_writer", b.toLong,
+      require(LakeTable.txnAppend(s, base, "st66_writer", b.toLong,
         docs.where(col("doc_id") % 4 === b)))
     }
     poll()
     (2 until 4).foreach { b =>
-      require(XmlOps.occTxnCommit(s, base, "st66_writer", b.toLong,
+      require(LakeTable.txnAppend(s, base, "st66_writer", b.toLong,
         docs.where(col("doc_id") % 4 === b)))
     }
     poll()
@@ -2590,7 +2592,7 @@ object Streaming {
     * partials merge associatively). The serving read merges the
     * partials, re-derives the changelog (including the synthetic
     * new-account feed at the data-derived offset), and applies the same
-    * three-arm [[graft.operators.XmlOps.mergeApply]] as batch x15
+    * three-arm [[graft.lake.LakeTable.mergeApply]] as batch x15
     * against the static base. On full replay the table equals batch
     * x15, shared oracle. */
   def streamMergeUpsert(s: SparkSession, d: String, stateDir: String): DataFrame = {
@@ -2642,7 +2644,7 @@ object Streaming {
         col("v_cents"))
       .unionByName(merged.select((col("user_id") + off).as("k"),
         lit("upsert").as("op"), col("v_cents")))
-    graft.operators.XmlOps.mergeApply(base, chg).orderBy(col("k"))
+    graft.lake.LakeTable.mergeApply(base, chg).orderBy(col("k"))
   }
 
   /** Streaming HITS (st56): g55's hubs-and-authorities maintained under

@@ -124,7 +124,7 @@ class FormatsSpec extends SparkSpec {
       (9L, "upsert", 55L),    // unmatched upsert → insert
       (8L, "delete", 1L))     // unmatched delete → no-op
       .toDF("k", "op", "v_cents")
-    val got = XmlOps.mergeApply(base, chg)
+    val got = graft.lake.LakeTable.mergeApply(base, chg)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
       .sortBy(_._1).toSeq
     assert(got === Seq(
@@ -138,7 +138,7 @@ class FormatsSpec extends SparkSpec {
     val base = Seq((1L, "alice", 100L, "AUTO")).toDF("k", "name", "bal_cents", "seg")
     val chg = Seq((1L, "upsert", 7L), (1L, "delete", 0L)).toDF("k", "op", "v_cents")
     val ex = intercept[Exception] {
-      XmlOps.mergeApply(base, chg).collect()
+      graft.lake.LakeTable.mergeApply(base, chg).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))

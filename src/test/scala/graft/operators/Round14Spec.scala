@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.lake.{Commit, LakeTable, TxnLog}
 import org.apache.spark.sql.functions._
 
 /** Round-14 semantics pins, starting with the x22 OCC commit protocol:
@@ -25,7 +26,7 @@ class Round14Spec extends SparkSpec {
     val threads = (0 until 8).map { i =>
       new Thread(() => {
         gate.await()
-        results.put(i, XmlOps.occTryCommit(base, 5, s"gen_$i"))
+        results.put(i, TxnLog.local(base).tryCommit(5, Commit(s"gen_$i")))
       })
     }
     threads.foreach(_.start())
@@ -36,7 +37,8 @@ class Round14Spec extends SparkSpec {
     assert(wins.size === 1, s"expected exactly one CAS winner, got $wins")
     // the committed content is the WINNER's, complete — never a blend
     val (winner, _) = wins.head
-    assert(XmlOps.occHead(base) === Some((5, s"gen_$winner")),
+    val log = TxnLog.local(base)
+    assert((log.head, log.at(5)) === ((5, Some(Commit(s"gen_$winner")))),
       "head must name exactly the winning generation")
     // no staging debris left behind in the log dir
     val leftovers = new java.io.File(s"$base/_commits").listFiles()
@@ -63,17 +65,15 @@ class Round14Spec extends SparkSpec {
     // v1-based reprice, which still contains the de rows A deleted) was
     // never committed: the head must hold zero de rows
     val base = graft.core.LakeDir.scoped(spark, "occ", d)
-    assert(XmlOps.occHead(base).map(_._1) === Some(3), "history must be v1,v2,v3")
-    val head = XmlOps.occReadCommitted(spark, base)
+    val log = TxnLog.local(base)
+    assert(log.head === 3, "history must be v1,v2,v3")
+    val head = LakeTable.snapshot(spark, base)
     assert(head.where(col("lang") === "de").count() === 0L,
       "stale B generation (with resurrected de rows) must never become head")
     // every committed version resolves through the validating read —
     // time travel across the OCC log, no torn generation anywhere
-    for (v <- 1 to 3) {
-      val gen = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(base, "_commits", s"v$v")), "UTF-8")
-      MaterialiseOps.serveValidated(spark, s"$base/$gen").count()
-    }
+    for (v <- 1 to 3)
+      MaterialiseOps.serveValidated(spark, s"$base/${log.at(v).get.gen}").count()
   }
 
   test("x22 fuzz: random conflict/rebase interleavings of commuting writers converge") {
@@ -88,9 +88,9 @@ class Round14Spec extends SparkSpec {
       (i, s"t$i", if (i % 2 == 0) "en" else "fr", "src", 100L + i))
     for (trial <- 1 to 3) {
       val base = freshBase(s"occ_fuzz$trial")
+      val log = TxnLog.local(base)
       val seed = seedRows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      assert(XmlOps.occTryCommit(base, 1,
-        XmlOps.occPrepare(spark, base, seed)))
+      assert(log.tryCommit(1, Commit(LakeTable.prepare(spark, base, seed))))
       // ops: writer id → add (op index) to that writer's parity rows
       val ops = rng.shuffle((1 to 3).map(i => (0, i)) ++ (1 to 3).map(i => (1, i)))
       def bump(df: DataFrame, writer: Int, amt: Int): DataFrame =
@@ -102,21 +102,21 @@ class Round14Spec extends SparkSpec {
         // retries through conflicts like a real client
         var committed = false
         while (!committed) {
-          val (hv, _) = XmlOps.occHead(base).get
-          val gen = XmlOps.occPrepare(spark, base,
-            bump(XmlOps.occReadCommitted(spark, base), writer, amt))
+          val hv = log.head
+          val gen = LakeTable.prepare(spark, base,
+            bump(LakeTable.snapshot(spark, base), writer, amt))
           // adversarial schedule: sometimes another commit sneaks in
           // between this writer's read and its CAS
           if (rng.nextBoolean() && ops.nonEmpty) {
-            val sneak = XmlOps.occPrepare(spark, base,
-              XmlOps.occReadCommitted(spark, base)) // no-op republish
-            XmlOps.occTryCommit(base, hv + 1, sneak)
+            val sneak = LakeTable.prepare(spark, base,
+              LakeTable.snapshot(spark, base)) // no-op republish
+            log.tryCommit(hv + 1, Commit(sneak))
           }
-          committed = XmlOps.occTryCommit(base, hv + 1, gen)
+          committed = log.tryCommit(hv + 1, Commit(gen))
           // on conflict: loop re-reads the NEW head and rebases
         }
       }
-      val got = XmlOps.occReadCommitted(spark, base)
+      val got = LakeTable.snapshot(spark, base)
         .collect().map(r => (r.getLong(0), r.getLong(4))).toMap
       val evenAdd = ops.filter(_._1 == 0).map(_._2).sum
       val oddAdd = ops.filter(_._1 == 1).map(_._2).sum
@@ -146,7 +146,7 @@ class Round14Spec extends SparkSpec {
       s"history drifted: $got")
     // a version that was never committed refuses loudly, no silent head
     val base = graft.core.LakeDir.scoped(spark, "occ", d)
-    intercept[IllegalArgumentException] { XmlOps.occReadAt(spark, base, 9) }
+    intercept[IllegalArgumentException] { LakeTable.snapshot(spark, base, Some(9)) }
   }
 
   test("g58: FW-BW labels — one-way bridges don't merge, refinement deletes, tail stays unlabeled") {
@@ -328,16 +328,16 @@ class Round14Spec extends SparkSpec {
     val want = XmlOps.occCheckpointRead(spark, d).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val base = graft.core.LakeDir.scoped(spark, "occkpt", d)
-    // checkpoint+tail agrees with the full listing on the intact log
-    assert(XmlOps.occHeadFast(base) === XmlOps.occHead(base),
-      "fast path must agree with the full listing before any vacuum")
+    val log = TxnLog.local(base)
+    // checkpoint at v4, head v6 on the intact log
+    assert(log.lastCheckpoint.map(_.version) === Some(4))
+    assert(log.head === 6, "checkpoint+tail must resolve v6 before any vacuum")
     // vacuum v1..v3 pointers (pre-checkpoint history) — resolution and
     // CONTENT must survive: the checkpoint carries the reader past the gap
     for (v <- 1 to 3)
       java.nio.file.Files.delete(java.nio.file.Paths.get(base, "_commits", s"v$v"))
-    val (hv, gen) = XmlOps.occHeadFast(base).get
-    assert(hv === 6, s"resolved v$hv after vacuum, want v6")
-    val got = MaterialiseOps.serveValidated(spark, s"$base/$gen")
+    assert(log.head === 6, s"resolved v${log.head} after vacuum, want v6")
+    val got = LakeTable.snapshot(spark, base)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
       .orderBy(col("lang"))
@@ -348,27 +348,26 @@ class Round14Spec extends SparkSpec {
     // too and confirm the fallback contract degrades loudly-or-correctly
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(base, "_commits", "_last_checkpoint"))
-    assert(XmlOps.occHeadFast(base) === XmlOps.occHead(base),
-      "without a checkpoint the fast path must be the full listing")
+    assert(log.head === 6, "without a checkpoint the head comes from the full listing")
   }
 
   test("x26: a violating batch aborts before the CAS — the head never moves") {
     val d = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.documents(spark, d)
-    assert(docs.where(XmlOps.triageReason =!= "ok").count() > 0,
+    assert(docs.where(LakeTable.triageReason =!= "ok").count() > 0,
       "fixture must actually contain violating rows for this spec to bite")
     val got = XmlOps.txnExpectations(spark, d).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val base = graft.core.LakeDir.scoped(spark, "occtxn", d)
     // the dirty attempt aborted: history is v1 (seed) then v2 (clean) —
     // the dirty candidate never occupied a version
-    assert(XmlOps.occHead(base).map(_._1) === Some(2),
+    assert(TxnLog.local(base).head === 2,
       "dirty publish must leave no version behind")
     // the head holds zero violating rows, and equals the clean restate
-    val head = XmlOps.occReadCommitted(spark, base)
-    assert(head.where(XmlOps.triageReason =!= "ok").count() === 0L,
+    val head = LakeTable.snapshot(spark, base)
+    assert(head.where(LakeTable.triageReason =!= "ok").count() === 0L,
       "a violating row reached the head")
-    val want = docs.where(XmlOps.triageReason === "ok")
+    val want = docs.where(LakeTable.triageReason === "ok")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
       .orderBy(col("lang"))
@@ -376,8 +375,8 @@ class Round14Spec extends SparkSpec {
     assert(got === want, s"head content drifted: $got vs $want")
     // explicit abort semantics: validating the dirty candidate again
     // returns false and STILL does not move the head
-    assert(!XmlOps.occTryCommitValidated(spark, base, docs))
-    assert(XmlOps.occHead(base).map(_._1) === Some(2))
+    assert(!LakeTable.publishValidated(spark, base, docs))
+    assert(TxnLog.local(base).head === 2)
   }
 
   test("x24: apply(gen0, diff(gen0, gen1)) reproduces gen1 row-for-row") {
@@ -423,10 +422,11 @@ class Round14Spec extends SparkSpec {
     // immediately reading it back byte-for-byte.
     val base = freshBase("occ_vis")
     val gen = "gen_" + ("abcd" * 16)
-    assert(XmlOps.occTryCommit(base, 7, gen))
-    assert(XmlOps.occHead(base) === Some((7, gen)),
+    val log = TxnLog.local(base)
+    assert(log.tryCommit(7, Commit(gen)))
+    assert((log.head, log.at(7)) === ((7, Some(Commit(gen)))),
       "content must be complete at first visibility")
     // and a SECOND claim of v7 still loses even with identical content
-    assert(!XmlOps.occTryCommit(base, 7, gen), "re-claiming a version must conflict")
+    assert(!log.tryCommit(7, Commit(gen)), "re-claiming a version must conflict")
   }
 }

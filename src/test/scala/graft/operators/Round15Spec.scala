@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.LakeDir
+import graft.lake.{Commit, LakeTable, TxnLog}
 import org.apache.spark.sql.functions._
 
 /** Round-15 semantics pins, opening with the round-14 ADVICE closures:
@@ -55,7 +57,8 @@ class Round15Spec extends SparkSpec {
     assert(winners.size === 1, s"expected exactly one cross-process winner, got $exits")
     assert(losers.size === 5, s"every loser must see a clean CONFLICT, got $exits")
     // the head names exactly the winner's content — complete, never a blend
-    assert(XmlOps.occHead(base) === Some((9, s"gen_${winners.head._1}")))
+    val log = TxnLog.local(base)
+    assert((log.head, log.at(9)) === ((9, Some(Commit(s"gen_${winners.head._1}")))))
     // and no staging debris survives in the store
     val leftovers = new java.io.File(s"$base/_commits").listFiles()
       .map(_.getName).filter(_.startsWith(".tmp"))
@@ -68,47 +71,41 @@ class Round15Spec extends SparkSpec {
     graft.core.Tables.documents(spark, sf).where(col("doc_id") % 4 === b)
 
   private def logCount(base: String, upTo: Option[Int] = None): Long =
-    XmlOps.occReadAppendLog(spark, base, upTo).count()
+    LakeTable.snapshot(spark, base, upTo).count()
 
   test("x27 redelivery: the same (appId, txnVersion) committed twice lands ONE version") {
-    val base = graft.core.LakeDir.scoped(spark, "txn_redeliver", sf)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(bp, true)
-    assert(XmlOps.occTxnCommit(spark, base, "app", 0L, docBatch(0)))
+    val base = LakeDir.fresh(spark, "txn_redeliver", sf)
+    assert(LakeTable.txnAppend(spark, base, "app", 0L, docBatch(0)))
     val n1 = logCount(base)
-    assert(!XmlOps.occTxnCommit(spark, base, "app", 0L, docBatch(0)),
+    assert(!LakeTable.txnAppend(spark, base, "app", 0L, docBatch(0)),
       "redelivery must no-op")
-    assert(XmlOps.occHead(base).map(_._1) === Some(1), "head must not move on redelivery")
+    assert(TxnLog.local(base).head === 1, "head must not move on redelivery")
     assert(logCount(base) === n1, "redelivery must not change the snapshot")
     // a LOWER txnVersion arriving late (out-of-order redelivery) also no-ops
-    assert(XmlOps.occTxnCommit(spark, base, "app", 3L, docBatch(1)))
-    assert(!XmlOps.occTxnCommit(spark, base, "app", 2L, docBatch(2)),
+    assert(LakeTable.txnAppend(spark, base, "app", 3L, docBatch(1)))
+    assert(!LakeTable.txnAppend(spark, base, "app", 2L, docBatch(2)),
       "a stale lower txnVersion must no-op after a higher one committed")
-    assert(XmlOps.occHead(base).map(_._1) === Some(2))
+    assert(TxnLog.local(base).head === 2)
   }
 
   test("x27 mid-batch reader: a prepared-but-uncommitted generation is invisible") {
-    val base = graft.core.LakeDir.scoped(spark, "txn_midbatch", sf)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(bp, true)
-    assert(XmlOps.occTxnCommit(spark, base, "app", 0L, docBatch(0)))
+    val base = LakeDir.fresh(spark, "txn_midbatch", sf)
+    assert(LakeTable.txnAppend(spark, base, "app", 0L, docBatch(0)))
     val before = logCount(base)
     // the writer is mid-batch: generation fully prepared, pointer not linked
-    val gen = XmlOps.occPrepare(spark, base, docBatch(1))
+    val gen = LakeTable.prepare(spark, base, docBatch(1))
     assert(logCount(base) === before,
       "a reader racing the writer must not see the half-committed batch")
-    assert(XmlOps.occHead(base).map(_._1) === Some(1))
+    assert(TxnLog.local(base).head === 1)
     // ...and the commit makes it visible atomically, in full
-    assert(XmlOps.occTryCommit(base, 2, s"$gen\ntxn app 1"))
+    assert(TxnLog.local(base).tryCommit(2, Commit(gen, adds = true, txn = Some("app" -> 1L))))
     assert(logCount(base) === before + docBatch(1).count())
   }
 
   test("x27 time travel: version k's snapshot is the union of the first k batches") {
-    val base = graft.core.LakeDir.scoped(spark, "txn_tt", sf)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(bp, true)
+    val base = LakeDir.fresh(spark, "txn_tt", sf)
     val sizes = (0 until 3).map { b =>
-      assert(XmlOps.occTxnCommit(spark, base, "app", b.toLong, docBatch(b)))
+      assert(LakeTable.txnAppend(spark, base, "app", b.toLong, docBatch(b)))
       docBatch(b).count()
     }
     (1 to 3).foreach { v =>
@@ -118,15 +115,13 @@ class Round15Spec extends SparkSpec {
   }
 
   test("x27 concurrent writers: distinct apps racing the log all land, history linear") {
-    val base = graft.core.LakeDir.scoped(spark, "txn_race", sf)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(bp, true)
+    val base = LakeDir.fresh(spark, "txn_race", sf)
     val gate = new java.util.concurrent.CountDownLatch(1)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map { i =>
       new Thread(() => {
         gate.await()
-        try assert(XmlOps.occTxnCommit(spark, base, s"app_$i", 0L, docBatch(i)))
+        try assert(LakeTable.txnAppend(spark, base, s"app_$i", 0L, docBatch(i)))
         catch { case t: Throwable => errs.add(t) }
       })
     }
@@ -134,18 +129,12 @@ class Round15Spec extends SparkSpec {
     assert(errs.isEmpty, s"concurrent txn writers failed: ${errs.peek()}")
     // all four landed at distinct, gap-free versions (appends commute —
     // a CAS loss retries, never conflicts)
-    assert(XmlOps.occHead(base).map(_._1) === Some(4))
+    assert(TxnLog.local(base).head === 4)
     (0 until 4).foreach { i =>
-      assert(XmlOps.occLastTxn(base, s"app_$i") === Some(0L), s"app_$i token lost")
+      assert(TxnLog.local(base).lastTxn(s"app_$i") === Some(0L), s"app_$i token lost")
     }
     // and the snapshot is exactly the whole corpus (batches partition it)
     assert(logCount(base) === graft.core.Tables.documents(spark, sf).count())
-  }
-
-  private def wipe(base: String): Unit = {
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(bp, true)
-    ()
   }
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame) =
@@ -153,51 +142,48 @@ class Round15Spec extends SparkSpec {
       r.getString(3), r.getLong(4))).toSet
 
   test("x28 losslessness: the compacted snapshot equals the fragmented one row-for-row") {
-    val base = graft.core.LakeDir.scoped(spark, "compact_rows", sf)
-    wipe(base)
+    val base = LakeDir.fresh(spark, "compact_rows", sf)
     (0 until 4).foreach { b =>
-      assert(XmlOps.occTxnCommit(spark, base, "w", b.toLong, docBatch(b)
+      assert(LakeTable.txnAppend(spark, base, "w", b.toLong, docBatch(b)
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))))
     }
-    val before = rowsOf(XmlOps.occReadAppendLog(spark, base))
-    assert(XmlOps.occCompact(spark, base) === 5)
-    val after = rowsOf(XmlOps.occReadAppendLog(spark, base))
+    val before = rowsOf(LakeTable.snapshot(spark, base))
+    assert(LakeTable.compact(spark, base) === 5)
+    val after = rowsOf(LakeTable.snapshot(spark, base))
     assert(after === before, "compaction mutated the table content")
-    assert(XmlOps.occLiveGens(base, 5).size === 1)
+    assert(TxnLog.local(base).snapshot(5).gens.size === 1)
   }
 
   test("x28 conflict: a writer that lands first forces the compactor to rebase") {
-    val base = graft.core.LakeDir.scoped(spark, "compact_race", sf)
-    wipe(base)
-    assert(XmlOps.occTxnCommit(spark, base, "w", 0L, docBatch(0)))
-    assert(XmlOps.occTxnCommit(spark, base, "w", 1L, docBatch(1)))
+    val base = LakeDir.fresh(spark, "compact_race", sf)
+    assert(LakeTable.txnAppend(spark, base, "w", 0L, docBatch(0)))
+    assert(LakeTable.txnAppend(spark, base, "w", 1L, docBatch(1)))
     // the compactor snapshots at v2... but a concurrent writer commits v3
     // between its snapshot and its CAS
-    assert(XmlOps.occTxnCommit(spark, base, "w", 2L, docBatch(2)))
-    assert(!XmlOps.occCompactAt(spark, base, 2),
+    assert(LakeTable.txnAppend(spark, base, "w", 2L, docBatch(2)))
+    assert(!LakeTable.compactAt(spark, base, 2),
       "the compactor's CAS at v3 must LOSE to the writer that got there first")
-    assert(XmlOps.occHead(base).map(_._1) === Some(3), "loser must not move the head")
+    assert(TxnLog.local(base).head === 3, "loser must not move the head")
     // rebase: recompact the new head — now it wins, and nothing was lost
-    assert(XmlOps.occCompact(spark, base) === 4)
+    assert(LakeTable.compact(spark, base) === 4)
     val want = (0 until 3).map(b => docBatch(b).count()).sum
-    assert(XmlOps.occReadAppendLog(spark, base).count() === want)
+    assert(LakeTable.snapshot(spark, base).count() === want)
   }
 
   test("x28 walk: appends after a compaction stack on the compacted base") {
-    val base = graft.core.LakeDir.scoped(spark, "compact_stack", sf)
-    wipe(base)
+    val base = LakeDir.fresh(spark, "compact_stack", sf)
     (0 until 2).foreach { b =>
-      assert(XmlOps.occTxnCommit(spark, base, "w", b.toLong, docBatch(b)))
+      assert(LakeTable.txnAppend(spark, base, "w", b.toLong, docBatch(b)))
     }
-    assert(XmlOps.occCompact(spark, base) === 3)
+    assert(LakeTable.compact(spark, base) === 3)
     // vacuum the pre-compaction pointers, then keep appending
-    (1 to 2).foreach(v => graft.lake.CommitStore.local(base).delete(s"v$v"))
-    assert(XmlOps.occTxnCommit(spark, base, "w", 2L, docBatch(2)))
-    assert(XmlOps.occTxnCommit(spark, base, "w", 3L, docBatch(3)))
+    (1 to 2).foreach(TxnLog.local(base).drop)
+    assert(LakeTable.txnAppend(spark, base, "w", 2L, docBatch(2)))
+    assert(LakeTable.txnAppend(spark, base, "w", 3L, docBatch(3)))
     // the read walks back to the compaction commit and STOPS there —
     // vacuumed history below it never blocks a head read
-    assert(XmlOps.occLiveGens(base, 5).size === 3)
-    assert(XmlOps.occReadAppendLog(spark, base).count() ===
+    assert(TxnLog.local(base).snapshot(5).gens.size === 3)
+    assert(LakeTable.snapshot(spark, base).count() ===
       graft.core.Tables.documents(spark, sf).count())
   }
 
@@ -207,15 +193,15 @@ class Round15Spec extends SparkSpec {
     // the gate's own log)
     XmlOps.schemaEvolutionLog(spark, sf).collect()
     val gateBase = graft.core.LakeDir.scoped(spark, "occschema", sf)
-    val store = graft.lake.CommitStore.local(gateBase)
+    val log = TxnLog.local(gateBase)
     // v1 and v2 reference ONE generation — ADD COLUMN moved zero data
-    val g1 = XmlOps.commitGen(store.read("v1").get)
-    val g2 = XmlOps.commitGen(store.read("v2").get)
+    val g1 = log.at(1).get.gen
+    val g2 = log.at(2).get.gen
     assert(g1 === g2, "a metadata-only ADD COLUMN must not rewrite data")
     // v1 still serves the 5-column shape; v2 the 6-column with NULL fill
-    val v1 = XmlOps.occReadAtEvolved(spark, gateBase, 1)
-    val v2 = XmlOps.occReadAtEvolved(spark, gateBase, 2)
-    val v3 = XmlOps.occReadAtEvolved(spark, gateBase, 3)
+    val v1 = LakeTable.snapshot(spark, gateBase, Some(1))
+    val v2 = LakeTable.snapshot(spark, gateBase, Some(2))
+    val v3 = LakeTable.snapshot(spark, gateBase, Some(3))
     assert(v1.columns.toSeq === Seq("doc_id", "text", "lang", "source", "n_chars"))
     assert(v2.columns.toSeq === v1.columns.toSeq :+ "quality_tier")
     assert(v2.where(col("quality_tier").isNotNull).count() === 0L,
@@ -229,7 +215,7 @@ class Round15Spec extends SparkSpec {
     // apply(v1, changes(2)) then apply(·, changes(3)) must equal v3
     val base = XmlOps.occDemoLog(spark, sf)
     val cols = Seq("doc_id", "lang", "n_chars").map(col)
-    def at(v: Int) = XmlOps.occReadAt(spark, base, v).select(cols: _*)
+    def at(v: Int) = LakeTable.snapshot(spark, base, Some(v)).select(cols: _*)
     val rebuilt = (2 to 3).foldLeft(at(1)) { (snap, v) =>
       XmlOps.cdcApply(snap, XmlOps.cdcDiffFull(snap, at(v)))
     }
@@ -239,50 +225,47 @@ class Round15Spec extends SparkSpec {
   }
 
   test("x31 plan: exactly the orphans are reclaimable, and the head survives vacuum") {
-    val base = graft.core.LakeDir.scoped(spark, "vac_spec", sf)
-    wipe(base)
+    val base = LakeDir.fresh(spark, "vac_spec", sf)
     val docs = graft.core.Tables.documents(spark, sf)
     (0 until 2).foreach { b =>
-      assert(XmlOps.occTxnCommit(spark, base, "w", b.toLong, docBatch(b)))
+      assert(LakeTable.txnAppend(spark, base, "w", b.toLong, docBatch(b)))
     }
-    val originals = XmlOps.occLiveGens(base, 2).toSet
-    val orphan = XmlOps.occPrepare(spark, base, docs.limit(3)) // CAS loser
-    assert(XmlOps.occCompact(spark, base) === 3)
-    val compacted = XmlOps.occLiveGens(base, 3).toSet
-    val store = graft.lake.CommitStore.local(base)
-    (1 to 2).foreach(v => store.delete(s"v$v"))
-    val (live, reclaim) = XmlOps.txnLogVacuumPlan(spark, base)
+    val log = TxnLog.local(base)
+    val originals = log.snapshot(2).gens.toSet
+    val orphan = LakeTable.prepare(spark, base, docs.limit(3)) // CAS loser
+    assert(LakeTable.compact(spark, base) === 3)
+    val compacted = log.snapshot(3).gens.toSet
+    (1 to 2).foreach(log.drop)
+    val (live, reclaim) = LakeTable.vacuumPlan(spark, base)
     assert(live === compacted, s"live set drifted: $live vs $compacted")
     assert(reclaim === originals + orphan,
       s"reclaim set must be exactly the orphans: $reclaim vs ${originals + orphan}")
     // deleting the plan's reclaim set leaves the head byte-complete
-    val hf = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    reclaim.foreach(g => hf.delete(new org.apache.hadoop.fs.Path(s"$base/$g"), true))
-    assert(XmlOps.occReadAppendLog(spark, base).count() ===
+    reclaim.foreach(g => LakeDir.delete(spark, s"$base/$g"))
+    assert(LakeTable.snapshot(spark, base).count() ===
       docBatch(0).count() + docBatch(1).count())
   }
 
   test("x32 rebase: a stale merger re-applies its changelog to the winner's head") {
-    val base = graft.core.LakeDir.scoped(spark, "merge_race", sf)
-    wipe(base)
+    val base = LakeDir.fresh(spark, "merge_race", sf)
     val docs = graft.core.Tables.documents(spark, sf)
-    assert(XmlOps.occTryCommit(base, 1, XmlOps.occPrepare(spark, base, docs)))
+    val log = TxnLog.local(base)
+    assert(log.tryCommit(1, Commit(LakeTable.prepare(spark, base, docs))))
     // merger A prepares against v1...
-    val snapA = XmlOps.occReadCommitted(spark, base)
+    val snapA = LakeTable.snapshot(spark, base)
     val feed = XmlOps.docsMergeFeed(docs)
-    val genA = XmlOps.occPrepare(spark, base, XmlOps.mergeDocsApply(snapA, feed))
+    val genA = LakeTable.prepare(spark, base, XmlOps.mergeDocsApply(snapA, feed))
     // ...but writer B (a disjoint op: drop the web source) lands v2 first
-    assert(XmlOps.occTryCommit(base, 2, XmlOps.occPrepare(spark, base,
-      XmlOps.occReadCommitted(spark, base).where(col("source") =!= "web"))))
-    assert(!XmlOps.occTryCommit(base, 2, genA), "stale merger must conflict")
+    assert(log.tryCommit(2, Commit(LakeTable.prepare(spark, base,
+      LakeTable.snapshot(spark, base).where(col("source") =!= "web")))))
+    assert(!log.tryCommit(2, Commit(genA)), "stale merger must conflict")
     // rebase: the SAME changelog applied to the new head, retried at v3
-    val genA2 = XmlOps.occPrepare(spark, base,
-      XmlOps.mergeDocsApply(XmlOps.occReadCommitted(spark, base), feed))
-    assert(XmlOps.occTryCommit(base, 3, genA2))
+    val genA2 = LakeTable.prepare(spark, base,
+      XmlOps.mergeDocsApply(LakeTable.snapshot(spark, base), feed))
+    assert(log.tryCommit(3, Commit(genA2)))
     // both effects present: no web rows (except feed inserts), no de rows,
     // fr repriced — restate the composed state from source predicates
-    val got = XmlOps.occReadCommitted(spark, base)
+    val got = LakeTable.snapshot(spark, base)
       .agg(count(lit(1)).as("n")).collect()(0).getLong(0)
     // independent accounting mirroring the feed arms: survivors are the
     // non-web rows whose key the feed never touched; feed update arms
@@ -322,7 +305,7 @@ class Round15Spec extends SparkSpec {
     // redelivery: re-folding an already-consumed version overwrites the
     // same partial, so the served state is unchanged
     val base = s"$stateDir/table"
-    XmlOps.occReadAt(spark, base, 3)
+    LakeTable.snapshot(spark, base, Some(3), since = 2)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -366,20 +349,20 @@ class Round15Spec extends SparkSpec {
 
   test("x33 restore: metadata-only, history-preserving, and itself undoable") {
     val base = XmlOps.occDemoLog(spark, sf)
-    val store = graft.lake.CommitStore.local(base)
-    val v1Gen = XmlOps.commitGen(store.read("v1").get)
-    val v3Gen = XmlOps.commitGen(store.read("v3").get)
-    assert(XmlOps.occRestore(spark, base, 1))
+    val log = TxnLog.local(base)
+    val v1Gen = log.at(1).get.gen
+    val v3Gen = log.at(3).get.gen
+    assert(log.restore(1) === 4)
     // metadata-only: v4's pointer names v1's generation verbatim
-    assert(XmlOps.commitGen(store.read("v4").get) === v1Gen)
+    assert(log.at(4).get.gen === v1Gen)
     // history preserved: the undone states still serve for audit
-    val v2Count = XmlOps.occReadAt(spark, base, 2).count()
+    val v2Count = LakeTable.snapshot(spark, base, Some(2)).count()
     assert(v2Count === graft.core.Tables.documents(spark, sf)
       .where(col("lang") =!= "de").count())
     // restore of the restore: back to v3's state as v5, another pointer
-    assert(XmlOps.occRestore(spark, base, 3))
-    assert(XmlOps.commitGen(store.read("v5").get) === v3Gen)
-    assert(XmlOps.occHead(base).map(_._1) === Some(5))
+    assert(log.restore(3) === 5)
+    assert(log.at(5).get.gen === v3Gen)
+    assert(log.head === 5)
   }
 
   test("t44 hand fixture: duplicated-3-gram permille computed exactly, short docs 0") {

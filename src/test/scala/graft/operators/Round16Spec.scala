@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.lake.{Commit, LakeTable, TxnLog}
 import org.apache.spark.sql.functions._
 
 /** Round-16 (optimization round) pins: the ADVICE closures that touch
@@ -11,33 +12,30 @@ class Round16Spec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("x33+x29: RESTORE of a schema-evolved version restores its schema too") {
-    // the round-15 ADVICE gap: occRestore copied only the generation
+    // the round-15 ADVICE gap: restore copied only the generation
     // line, so restoring an ADD-COLUMN version served the unconformed
     // column shape. Build v1 (5-col schema) → v2 (metadata-only ADD
     // COLUMN, same generation) → RESTORE v2 as v3: the restored head
     // must serve the 6-column shape with the added column typed-NULL.
-    val base = graft.core.LakeDir.scoped(spark, "r16_restore_schema", sf)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val hf = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hf.exists(bp)) hf.delete(bp, true)
+    val base = graft.core.LakeDir.fresh(spark, "r16_restore_schema", sf)
+    val log = TxnLog.local(base)
     val ddl5 = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     val ddl6 = s"$ddl5, quality_tier BIGINT"
-    val gen1 = XmlOps.occPrepare(spark, base, graft.core.Tables.documents(spark, sf))
-    assert(XmlOps.occTryCommit(base, 1, s"$gen1\nschema $ddl5"))
-    assert(XmlOps.occTryCommit(base, 2, s"$gen1\nschema $ddl6"))
-    assert(XmlOps.occRestore(spark, base, 2))
-    val store = graft.lake.CommitStore.local(base)
+    val gen1 = LakeTable.prepare(spark, base, graft.core.Tables.documents(spark, sf))
+    assert(log.tryCommit(1, Commit(gen1, schema = Some(ddl5))))
+    assert(log.tryCommit(2, Commit(gen1, schema = Some(ddl6))))
+    assert(log.restore(2) === 3)
     // metadata-only still: v3 names v2's generation verbatim
-    assert(XmlOps.commitGen(store.read("v3").get) === gen1)
-    // and carries v2's schema line (txn/compact lines never replay)
-    assert(XmlOps.commitSchema(store.read("v3").get) === Some(ddl6))
-    val head = XmlOps.occReadAtEvolved(spark, base, 3)
+    assert(log.at(3).get.gen === gen1)
+    // and carries v2's schema line (a txn token never replays)
+    assert(log.at(3) === Some(Commit(gen1, schema = Some(ddl6))))
+    val head = LakeTable.snapshot(spark, base, Some(3))
     assert(head.columns.toSeq ===
       Seq("doc_id", "text", "lang", "source", "n_chars", "quality_tier"))
     assert(head.where(col("quality_tier").isNotNull).count() === 0L)
     // restoring the pre-evolution version drops back to the 5-col shape
-    assert(XmlOps.occRestore(spark, base, 1))
-    assert(XmlOps.occReadAtEvolved(spark, base, 4).columns.length === 5)
+    assert(log.restore(1) === 4)
+    assert(LakeTable.snapshot(spark, base, Some(4)).columns.length === 5)
   }
 
   test("CommitStore: failed stage write leaves no .tmp_ debris") {
