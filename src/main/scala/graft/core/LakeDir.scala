@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * under `java.io.tmpdir`. Format gates (x4–x21) Overwrite into
   * [[scoped]]; the transaction-log gates (x22–x33) start from an empty
   * [[fresh]] table base, because a commit log must not inherit the
-  * previous invocation's versions.
+  * previous invocation's versions. The streaming gates' state dirs
+  * (`StreamingOps`, `s<tag>`) are [[fresh]] too: a stream must never
+  * resume an earlier invocation's checkpoint.
   *
   * Naming contract — `graft_<name>_<session>_<dataset>`:
   *   - `<session>` = appId-hash + SparkSession identityHashCode (the s17

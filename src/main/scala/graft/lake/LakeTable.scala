@@ -86,7 +86,7 @@ object LakeTable {
     * xxhash64 row-hash sum). Metadata-only — one manifest row per FILE. */
   private def manifestTotals(s: SparkSession, base: String,
       gen: String): (Long, Long, java.math.BigDecimal) = {
-    val r = s.read.parquet(s"$base/$gen/_manifest")
+    val r = MaterialiseOps.readManifest(s, s"$base/$gen")
       .agg(count(lit(1)).as("files"), sum(col("rows")).as("rows"),
         sum(col("checksum")).as("checksum")).collect()(0)
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),

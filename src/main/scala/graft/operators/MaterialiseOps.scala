@@ -2759,6 +2759,17 @@ object MaterialiseOps extends QueryModule {
     fileStats(s, dir).coalesce(1).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/_manifest")
 
+  /** The manifest [[writeManifest]] wrote under `dir`, read by the leaf
+    * paths of its part files: the `_manifest` dir itself trips Spark's
+    * hidden-path filter, which logs "All paths were ignored" on every
+    * read of it (the read still succeeds). */
+  private[graft] def readManifest(s: SparkSession, dir: String): DataFrame = {
+    val m = new org.apache.hadoop.fs.Path(s"$dir/_manifest")
+    val parts = m.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(m)
+      .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    s.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+  }
+
   /** The validating read: throws rather than serving unverified data.
     *
     * Trust model — a DOCUMENTED two-scan default: every serve re-derives
@@ -2778,7 +2789,7 @@ object MaterialiseOps extends QueryModule {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_validated")
     val hf = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!(trustOnce && hf.exists(marker))) {
-      val manifest = s.read.parquet(s"$dir/_manifest")
+      val manifest = readManifest(s, dir)
       val actual = fileStats(s, dir)
       val bad = manifest.join(actual, Seq("file"), "full_outer")
         .where(manifest("rows").isNull || actual("rows").isNull ||

@@ -22,7 +22,10 @@ object ConfigLoader {
     * `additional_equivalence_groups`, `exclude_props`,
     * `type_superclasses`, `exclude_edges`,
     * `exclude_self_referential_edges`, `bytes_per_merged_file`,
-    * `datasource_configs`. */
+    * `datasource_configs`; plus `prefix_map`, the path (relative to the
+    * config file) of a JSON object of prefix rewrites, as the reference's
+    * `prefix_maps/prefix_map_normalise.json`, read into
+    * [[SubgraphConfig.prefixMap]] so file-driven builds normalise too. */
   def loadSubgraphConfig(path: String): SubgraphConfig = {
     import scala.jdk.CollectionConverters._
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -43,7 +46,12 @@ object ConfigLoader {
       excludeEdges = strs("exclude_edges").toSet,
       excludeSelfReferentialEdges = strs("exclude_self_referential_edges").toSet,
       bytesPerMergedFile = Option(j.get("bytes_per_merged_file")).map(_.asLong),
-      datasourceConfigs = strs("datasource_configs"))
+      datasourceConfigs = strs("datasource_configs"),
+      prefixMap = Option(j.get("prefix_map")).map { rel =>
+        val file = java.nio.file.Paths.get(path).toAbsolutePath.getParent.resolve(rel.asText)
+        om.readTree(java.nio.file.Files.readString(file)).properties().asScala
+          .map(e => e.getKey -> e.getValue.asText).toMap
+      }.getOrElse(Map.empty))
   }
 
   // ---------------------------------------------------- datasource YAML

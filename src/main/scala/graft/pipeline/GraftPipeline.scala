@@ -240,21 +240,38 @@ object GraftPipeline {
     * exactly the reference's EdgeSummaryTable shape. Everything
     * collected here is a bounded summary (distinct props/types/type
     * signatures), never corpus-sized. */
-  def summaryJson(build: SubgraphBuild, subgraph: String): String = {
-    def countsMap(df: DataFrame): String =
-      df.collect().sortBy(_.getString(0))
-        .map(r => Json.str(r.getString(0)) + ":" + r.getLong(1))
-        .mkString("{", ",", "}")
+  def summaryJson(build: SubgraphBuild, subgraph: String): String =
+    summary(subgraph, counts(build.entityPropCounts), counts(build.typeCounts),
+      edgePropKeys(build.edges), edgeCube(build.edges, build.metadata), build.metadata)
 
-    val propKeys = build.entityPropCounts.collect().map(_.getString(0)).toSeq
-    val typeNames = build.typeCounts.collect().map(_.getString(0)).toSeq
-    val edgePropKeys = build.edges
-      .select(explode(json_object_keys(col("qualifiersJson"))).as("k"))
+  private def counts(df: DataFrame): Seq[(String, Long)] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+
+  private def edgePropKeys(edges: DataFrame): Seq[String] =
+    edges.select(explode(json_object_keys(col("qualifiersJson"))).as("k"))
       .distinct().collect().map(_.getString(0)).toSeq
+
+  private type CubeRow = (String, String, String, String, Long)
+
+  private def edgeCube(edges: DataFrame, metadata: DataFrame): Seq[CubeRow] =
+    Materialise.edgeSummary(edges, metadata).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .toSeq
+
+  /** The summary body over already-collected counts, edge-prop keys and
+    * cube; only the definition lookup still reads `metadata`. */
+  private def summary(subgraph: String, propCounts: Seq[(String, Long)],
+      typeCounts: Seq[(String, Long)], edgePropKeys: Seq[String], cube: Seq[CubeRow],
+      metadata: DataFrame): String = {
+    def countsMap(kvs: Seq[(String, Long)]): String =
+      kvs.sortBy(_._1).map { case (k, n) => Json.str(k) + ":" + n }.mkString("{", ",", "}")
+
+    val propKeys = propCounts.map(_._1)
+    val typeNames = typeCounts.map(_._1)
     val wanted = (propKeys ++ typeNames ++ edgePropKeys).distinct
     val defByNode: Map[String, String] =
       (if (wanted.isEmpty) Array.empty[org.apache.spark.sql.Row]
-       else build.metadata.where(col("nodeId").isin(wanted: _*)).collect())
+       else metadata.where(col("nodeId").isin(wanted: _*)).collect())
         .map { r =>
           val name = Option(r.getAs[String]("name"))
             .map(v => "," + Json.str("grebi:name") + ":" + Json.str(v)).getOrElse("")
@@ -268,22 +285,19 @@ object GraftPipeline {
         .flatMap(k => defByNode.get(k).map(Json.str(k) + ":" + _))
         .mkString("{", ",", "}")
 
-    val cube = Materialise.edgeSummary(build.edges, build.metadata)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     def nest[A](rows: Seq[A])(key: A => String)(body: Seq[A] => String): String =
       rows.groupBy(key).toSeq.sortBy(_._1)
         .map { case (k, rs) => Json.str(k) + ":" + body(rs) }
         .mkString("{", ",", "}")
-    val edgesNested = nest(cube.toSeq)(_._1)(s1 =>
+    val edgesNested = nest(cube)(_._1)(s1 =>
       nest(s1)(_._2)(s2 =>
         nest(s2)(_._3)(s3 =>
           s3.sortBy(_._4).map { case (_, _, _, ds, n) => Json.str(ds) + ":" + n }
             .mkString("{", ",", "}"))))
 
     s"""{"subgraph":${Json.str(subgraph)},""" +
-      s""""entity_props":${countsMap(build.entityPropCounts)},""" +
-      s""""types":${countsMap(build.typeCounts)},""" +
+      s""""entity_props":${countsMap(propCounts)},""" +
+      s""""types":${countsMap(typeCounts)},""" +
       s""""entity_prop_defs":${defsMap(propKeys)},""" +
       s""""edge_prop_defs":${defsMap(edgePropKeys)},""" +
       s""""type_defs":${defsMap(typeNames)},""" +
@@ -291,32 +305,79 @@ object GraftPipeline {
   }
 
   /** Persist all artifacts — parquet for the graph tables, the three
-    * serving sinks (K1/K2, K5, K6), names.txt (K7) and summary.json. */
+    * serving sinks (K1/K2, K5, K6), names.txt (K7) and summary.json — in
+    * one pass that computes each artifact once (SURVEY §3.1 steps 7–8):
+    *
+    *   1. `merged.parquet` alone: its write fills run()'s merged cache,
+    *      which every later sink reads.
+    *   2. Concurrently, everything that reads only the merge: metadata,
+    *      `edges.parquet`, the prop and type counts, the id CSVs, solr,
+    *      the KV store and names.
+    *   3. Concurrently, what needs step 2's outputs: `neo_nodes.csv` (the
+    *      prop keys), and `neo_edges.csv`, the edge-prop keys and the
+    *      summary cube, which re-scan the written `edges.parquet` — the
+    *      reference's `edges.jsonl` handoff. A re-scan, not a persist:
+    *      caching nested rows costs more than the scan it saves (TUNING
+    *      "g14 stage probe", "Sinks in one pass").
+    *   4. solr_config and summary.json on the driver.
+    */
   def write(build: SubgraphBuild, outDir: String): Unit = {
     val spark = build.merged.sparkSession
+    def parquet(df: DataFrame, name: String): Unit =
+      df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
+    parquet(build.merged.toDF(), "merged.parquet")
     // the build's actual subgraph name (stamped by run() from the config)
     val sgName = build.merged.limit(1).collect().headOption
       .map(_.subgraph).getOrElse("subgraph")
-    build.merged.write.mode(SaveMode.Overwrite).parquet(s"$outDir/merged.parquet")
-    build.metadata.write.mode(SaveMode.Overwrite).parquet(s"$outDir/metadata.parquet")
-    build.edges.write.mode(SaveMode.Overwrite).parquet(s"$outDir/edges.parquet")
-    val propKeys = build.entityPropCounts.collect().map(_.getString(0)).toSeq
-    Sinks.writeCsv(Sinks.neoNodesCsvFrame(build.merged, propKeys, build.displayTypes),
-      s"$outDir/neo_nodes.csv")
-    Sinks.writeCsv(Sinks.neoEdgesCsvFrame(build.edges), s"$outDir/neo_edges.csv")
-    Sinks.writeCsv(Sinks.neoIdNodesCsvFrame(build.merged), s"$outDir/neo_nodes_ids.csv")
-    Sinks.writeCsv(Sinks.neoIdEdgesCsvFrame(build.merged), s"$outDir/neo_edges_ids.csv")
-    Sinks.writeSolr(build.merged, s"$outDir/solr")
+
+    var propCounts, typeCounts = Seq.empty[(String, Long)]
+    concurrently(
+      () => parquet(build.metadata, "metadata.parquet"),
+      () => parquet(build.edges, "edges.parquet"),
+      () => propCounts = counts(build.entityPropCounts),
+      () => typeCounts = counts(build.typeCounts),
+      () => Sinks.writeCsv(Sinks.neoIdNodesCsvFrame(build.merged), s"$outDir/neo_nodes_ids.csv"),
+      () => Sinks.writeCsv(Sinks.neoIdEdgesCsvFrame(build.merged), s"$outDir/neo_edges_ids.csv"),
+      () => Sinks.writeSolr(build.merged, s"$outDir/solr"),
+      () => Sinks.writeKvStore(build.merged, s"$outDir/kv.parquet"),
+      () => build.names.write.mode(SaveMode.Overwrite).text(s"$outDir/names.txt"))
+
+    val edges = spark.read.parquet(s"$outDir/edges.parquet")
+    val propKeys = propCounts.map(_._1)
+    var edgeKeys = Seq.empty[String]
+    var cube = Seq.empty[CubeRow]
+    concurrently(
+      () => Sinks.writeCsv(Sinks.neoNodesCsvFrame(build.merged, propKeys, build.displayTypes),
+        s"$outDir/neo_nodes.csv"),
+      () => Sinks.writeCsv(Sinks.neoEdgesCsvFrame(edges), s"$outDir/neo_edges.csv"),
+      () => edgeKeys = edgePropKeys(edges),
+      () => cube = edgeCube(edges, build.metadata))
+
     // K5 config half: per-prop schema + autocomplete analyzers
-    val edgePropKeys = build.edges
-      .select(explode(json_object_keys(col("qualifiersJson"))).as("k"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    SolrConfig.write(s"$outDir/solr_config", sgName, propKeys, edgePropKeys)
-    Sinks.writeKvStore(build.merged, s"$outDir/kv.parquet")
-    build.names.write.mode(SaveMode.Overwrite).text(s"$outDir/names.txt")
+    SolrConfig.write(s"$outDir/solr_config", sgName, propKeys, edgeKeys)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/summary.json"),
-      summaryJson(build, sgName))
+      summary(sgName, propCounts, typeCounts, edgeKeys, cube, build.metadata))
+  }
+
+  /** Run `branches` side by side, each on a thread created here, so its
+    * Spark jobs inherit the caller's local properties (job group,
+    * scheduler pool). Every branch has ended when this returns or throws;
+    * the first failure is rethrown. */
+  private def concurrently(branches: (() => Unit)*): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = branches.zipWithIndex.map { case (b, i) =>
+      new Thread(() => try b() catch { case t: Throwable => failures.add(t); () },
+        s"graft-sinks-$i")
+    }
+    threads.foreach(_.start())
+    try threads.foreach(_.join())
+    catch { case e: InterruptedException =>
+      threads.foreach(_.interrupt())
+      threads.foreach(_.join())
+      throw e
+    }
+    Option(failures.peek()).foreach(t => throw t)
   }
 
   /** The combined-subgraphs build (second reference workflow,

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Round-16 (optimization round) pins: the ADVICE closures that touch
   * behaviour — RESTORE must carry the target's schema metadata, and the
-  * CommitStore must not leak fds or staging debris on failure paths. */
+  * CommitStore must not leak fds or staging debris on failure paths —
+  * plus the streaming gates' state dirs, which must not leak one dir per
+  * invocation either. */
 class Round16Spec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -75,5 +77,37 @@ class Round16Spec extends SparkSpec {
     val after = openFds()
     assert(after - before < 20,
       s"fd count grew from $before to $after across 200 list() calls")
+  }
+
+  private def stateDirs(tag: String): Set[String] = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith(s"graft_${tag}_")).toSet
+  }
+
+  test("a streaming gate run twice reuses one state dir") {
+    val gates = Seq("st25_stream_heavy_hitters" -> "shh", "st63_stream_mg_heavy_hitters" -> "shh2")
+    def dirs() = gates.map { case (_, tag) => tag -> stateDirs(tag) }.toMap
+    def runAll() = gates.map { case (gate, _) =>
+      StreamingOps.defs(gate).fn(spark, sf).collect().map(_.toString).sorted.toSeq
+    }
+    val before = dirs()
+    val firstRows = runAll()
+    val after1 = dirs()
+    val secondRows = runAll()
+    val after2 = dirs()
+    gates.foreach { case (gate, tag) =>
+      assert((after1(tag) -- before(tag)).size <= 1, s"$gate: more than one new state dir")
+      assert(after2(tag) === after1(tag), s"$gate: the second run added a state dir")
+    }
+    // the second run starts from an emptied dir, so it never resumes the
+    // first run's checkpoint and serves the same rows
+    assert(secondRows === firstRows)
+  }
+
+  test("StreamingOps names no random state dir") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/operators/StreamingOps.scala"))
+    assert(!src.contains("randomUUID"))
   }
 }

@@ -191,4 +191,61 @@ class ConfigLoaderSpec extends SparkSpec {
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
+
+  test("prefix_map: a config-file build normalises like run() given the map") {
+    import scala.jdk.CollectionConverters._
+    val home = java.nio.file.Files.createTempDirectory("graft_pm")
+    def write(rel: String, content: String): Unit = {
+      val p = home.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, content)
+    }
+    // one gene under two spellings of its id, plus a second gene
+    write("data/genes.jsonl",
+      """{"geneId":"http://identifiers.example.org/hgnc/1","name":"BRCA1"}
+        |{"geneId":"HGNC:2","name":"TP53","xref":"HGNC:1"}
+        |{"geneId":"HGNC:1","name":"BRCA1 alias"}
+        |""".stripMargin)
+    write("configs/datasource_configs/genes.yaml",
+      """name: GENES
+        |enabled: true
+        |ingests:
+        |  - globs: ["./data/genes.jsonl"]
+        |    command: '
+        |      grebi_transform_jsonl
+        |          --json-rename-field geneId:id
+        |          --json-rename-field name:grebi:name
+        |          --json-inject-type fx:Gene'
+        |""".stripMargin)
+    val map = Map("http://identifiers.example.org/hgnc/" -> "hgnc:", "HGNC:" -> "hgnc:")
+    write("configs/prefix_maps/normalise.json",
+      map.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ",", "}"))
+    write("configs/subgraph_configs/pm.json",
+      """{
+        |  "name": "pm",
+        |  "identifier_props": ["id"],
+        |  "prefix_map": "../prefix_maps/normalise.json",
+        |  "datasource_configs": ["./configs/datasource_configs/genes.yaml"]
+        |}""".stripMargin)
+    try {
+      val configPath = home.resolve("configs/subgraph_configs/pm.json").toString
+      val config = ConfigLoader.loadSubgraphConfig(configPath)
+      assert(config.prefixMap === map)
+      val fromFile = ConfigLoader.runFromConfigFile(spark, configPath, home.toString)
+      val ingests = ConfigLoader.discoverFiles(home.toString,
+          ConfigLoader.loadDatasource(home.resolve("configs/datasource_configs/genes.yaml").toString))
+        .map(f => ConfigLoader.ingestFile(spark, home.toString, "pm", f))
+      val direct = GraftPipeline.run(spark,
+        SubgraphConfig(name = "pm", identifierProps = Seq("id"), prefixMap = map), ingests)
+      def ids(b: SubgraphBuild) = b.merged.collect().map(_.nodeId).toSet
+      assert(ids(fromFile) === Set("hgnc:1", "hgnc:2"))
+      assert(ids(fromFile) === ids(direct))
+      // the normalised reference resolves to the merged node
+      assert(fromFile.merged.collect().find(_.nodeId == "hgnc:2").get
+        .props("xref").map(_.value) === Seq("hgnc:1"))
+    } finally {
+      java.nio.file.Files.walk(home).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
 }

@@ -163,6 +163,85 @@ class PipelineDriverSpec extends SparkSpec {
     assert(SolrConfig.fieldName("a:b&c") == "a__b_c")
   }
 
+  /** How many executed queries carried the edges plan (the `edgeId` sha2
+    * projection) while `body` ran. */
+  private def edgesPlanRuns(body: => Unit): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Sha2}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists(_.expressions.exists(_.exists {
+            case a: Alias => a.name == "edgeId" && a.child.isInstanceOf[Sha2]
+            case _ => false
+          }))) runs.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 60000L)
+    } finally spark.listenerManager.unregister(listener)
+    runs.get
+  }
+
+  test("write: the edges plan runs once; later consumers re-scan edges.parquet") {
+    val b = build
+    val out = java.nio.file.Files.createTempDirectory("graftedges").toString
+    assert(edgesPlanRuns(GraftPipeline.write(b, out)) === 1)
+    // the listener does see every edges execution: summaryJson alone runs
+    // the plan twice (edge-prop keys and the cube)
+    assert(edgesPlanRuns(GraftPipeline.summaryJson(b, "fixture_sg")) === 2)
+  }
+
+  test("write: summary.json equals summaryJson byte for byte") {
+    val out = java.nio.file.Files.createTempDirectory("graftsummary").toString
+    GraftPipeline.write(build, out)
+    val written = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/summary.json"))
+    assert(written === GraftPipeline.summaryJson(build, "fixture_sg"))
+  }
+
+  test("write: every job it submits carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val b = build
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    val out = java.nio.file.Files.createTempDirectory("graftgroup").toString
+    org.apache.spark.graftbridge.ListenerBusBridge.waitUntilEmpty(sc, 60000L)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("sinks-under-test", "write()", interruptOnCancel = false)
+      try GraftPipeline.write(b, out) finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBusBridge.waitUntilEmpty(sc, 60000L)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.size > 10)
+    assert(seen.toSet === Set("sinks-under-test"))
+  }
+
+  test("write: a failing sink's exception surfaces after every branch ended") {
+    val b = build
+    val out = java.nio.file.Files.createTempDirectory("graftfail")
+    // a plain file where the KV store's directory must go
+    java.nio.file.Files.writeString(out.resolve("kv.parquet"), "not a directory")
+    val ex = intercept[Throwable](GraftPipeline.write(b, out.toString))
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(ex).exists(t => String.valueOf(t.getMessage).contains("kv.parquet")), ex)
+    import scala.jdk.CollectionConverters._
+    val sinkThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-sinks-") && t.isAlive)
+    assert(sinkThreads.isEmpty)
+    // the other branches of that wave still ran to the end
+    assert(new java.io.File(s"$out/solr").exists())
+  }
+
   test("broadcast (small-data opt-in) pipeline produces the identical build") {
     import spark.implicits._
     val dsA = Seq(
