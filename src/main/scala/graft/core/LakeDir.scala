@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the scratch-directory naming rule for the lake
@@ -27,6 +29,11 @@ import org.apache.spark.sql.SparkSession
   * session component) at 16 XmlOps call sites; a new lake gate could
   * silently fork the convention. Now every site calls [[scoped]] or
   * [[fresh]].
+  *
+  * Lifetime: the dirs are scratch, not output. Every dir handed out is
+  * remembered per application, and one listener per SparkContext
+  * ([[Sweeper]]) deletes them when the application ends, so a Verify,
+  * Bench or test JVM leaves none of them behind.
   */
 object LakeDir {
 
@@ -38,9 +45,12 @@ object LakeDir {
 
   /** Scratch dir for gate `name` over dataset `d`, scoped per (session,
     * dataset). Not created — writers Overwrite into it. */
-  def scoped(s: SparkSession, name: String, d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
+  def scoped(s: SparkSession, name: String, d: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
       s"${sessionTag(s)}_${Integer.toHexString(d.hashCode)}"
+    sweeper(s).dirs.add(dir)
+    dir
+  }
 
   /** [[scoped]], emptied first: the lake gates rebuild their table from
     * an empty directory on every invocation. */
@@ -56,4 +66,24 @@ object LakeDir {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     ()
   }
+
+  /** Deletes the dirs handed out under one application when it ends. */
+  private[graft] final class Sweeper extends SparkListener {
+    private[core] val dirs = ConcurrentHashMap.newKeySet[String]()
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      dirs.clear()
+    }
+  }
+
+  private val sweepers = new ConcurrentHashMap[String, Sweeper]()
+
+  /** The application's [[Sweeper]]: registered on its SparkContext on
+    * first use, and only then, so each context carries exactly one. */
+  private[graft] def sweeper(s: SparkSession): Sweeper =
+    sweepers.computeIfAbsent(s.sparkContext.applicationId, _ => {
+      val w = new Sweeper
+      s.sparkContext.addSparkListener(w)
+      w
+    })
 }

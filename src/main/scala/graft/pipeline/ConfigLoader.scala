@@ -402,7 +402,12 @@ object ConfigLoader {
     * current). Ingested-file bookkeeping lives next to the state
     * (`applied_files.txt`), so dropping new dumps into a watched
     * directory and re-invoking is the whole operational loop — the
-    * incremental analog of the reference's full Nextflow re-run. */
+    * incremental analog of the reference's full Nextflow re-run.
+    *
+    * `stateDir` is a local path by construction: the inputs are local
+    * files walked with `java.nio`, and so are `applied_files.txt` and
+    * `pending_batch.txt`. The update itself keeps its exactly-once marker
+    * through [[BatchLedger]], on the state path's own filesystem. */
   def updateFromConfigFile(spark: SparkSession, configPath: String,
                            home: String, stateDir: String): Seq[String] = {
     val config = loadSubgraphConfig(configPath)

@@ -48,43 +48,25 @@ object Incremental {
   private def mergedRoot(dir: String) = s"$dir/merged"
   private def tombPath(dir: String) = s"$dir/tombstones.parquet"
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
-
   private def nextGen(spark: SparkSession, dir: String): Int = {
     val root = new org.apache.hadoop.fs.Path(mergedRoot(dir))
-    val f = fs(spark, mergedRoot(dir))
+    val f = BatchLedger.fs(spark, mergedRoot(dir))
     if (!f.exists(root)) 1
     else f.listStatus(root).map(_.getPath.getName)
       .collect { case n if n.startsWith("gen=") => n.drop(4).toInt }
       .foldLeft(0)(math.max) + 1
   }
 
-  private def sanitizeKey(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def markerFile(dir: String, key: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/applied_batches/${sanitizeKey(key)}")
-
-  /** Has a keyed batch already been fully applied? (Exposed for the
-    * callers that keep their own file-level bookkeeping.) */
-  def batchApplied(spark: SparkSession, dir: String, batchKey: String): Boolean =
-    fs(spark, dir).exists(markerFile(dir, batchKey))
-
   /** Apply one batch of ingest records to the state under `dir`.
     *
     * `batchKey`, when supplied, makes the application **idempotent**: the
     * ledger append lands in a deterministic `batch=<key>` partition
     * written with Overwrite (a crashed-and-retried batch replaces its own
-    * partial rows instead of duplicating them), and a marker under
-    * `applied_batches/` — written atomically, strictly last — makes a
-    * completed batch a no-op on redelivery. Replays of a batch that
-    * crashed mid-update are safe without the marker: the ledger rewrite
-    * is a same-data overwrite, the partial `gen=N` output is superseded
+    * partial rows instead of duplicating them), and the [[BatchLedger]]
+    * marker — written atomically, strictly last — makes a completed batch
+    * a no-op on redelivery. Replays of a batch that crashed mid-update
+    * are safe without the marker: the ledger rewrite is a same-data
+    * overwrite, the partial `gen=N` output is superseded
     * by the retry's `gen=N+1` rows (merge-on-read takes max gen per
     * nodeId, and the retry recomputes a superset of the partial gen's
     * cliques from the identical ledger), and tombstone appends are
@@ -98,8 +80,8 @@ object Incremental {
   def update(spark: SparkSession, config: SubgraphConfig, dir: String,
              newNodes: Dataset[IngestNode], batchKey: Option[String] = None): Unit = {
     import spark.implicits._
-    val fsys = fs(spark, dir)
-    if (batchKey.exists(key => fsys.exists(markerFile(dir, key)))) return
+    val fsys = BatchLedger.fs(spark, dir)
+    if (batchKey.exists(BatchLedger.applied(spark, dir, _))) return
     // crash recovery: a previous run may have died between deleting the
     // old groups table and renaming the fresh copy into place
     val gPath = new org.apache.hadoop.fs.Path(groupsPath(dir))
@@ -127,10 +109,7 @@ object Incremental {
           new org.apache.hadoop.fs.Path(legacy, st.getPath.getName)))
       }
     }
-    val batchDir = sanitizeKey(batchKey.getOrElse(
-      s"adhoc-gen$gen-${java.util.UUID.randomUUID().toString.take(8)}"))
-    normalised.write.mode(SaveMode.Overwrite)
-      .parquet(s"${ledgerPath(dir)}/batch=$batchDir")
+    BatchLedger.put(normalised.toDF(), ledgerPath(dir), BatchLedger.key(batchKey))
 
     val idProps = config.identifierProps.filter(_ != "id")
     def idSetOf(n: IngestNode): Seq[String] =
@@ -144,10 +123,8 @@ object Incremental {
       .union(config.additionalEquivalenceGroups.toDF("ids"))
     val deltaIds = deltaSets.select(explode(col("ids")).as("member")).distinct()
 
-    val firstRun = !exists(spark, groupsPath(dir))
-    val oldGroups: DataFrame =
-      if (!firstRun) spark.read.parquet(groupsPath(dir))
-      else Seq.empty[(String, String)].toDF("member", "canonical")
+    val firstRun = !BatchLedger.exists(spark, groupsPath(dir))
+    val oldGroups = BatchLedger.table(spark, groupsPath(dir), "member STRING, canonical STRING")
     // dirty-detection joins broadcast their delta-proportional side —
     // EXCEPT on the bootstrap run, where the "delta" is the whole corpus
     // and a forced broadcast would blow the driver; there the planner
@@ -234,17 +211,9 @@ object Incremental {
     fsys.delete(gPath, true)
     fsys.rename(gNext, gPath)
 
-    // the marker is written last and atomically (create-then-rename), so
-    // its existence proves the whole update landed
-    batchKey.foreach { key =>
-      val marker = markerFile(dir, key)
-      val tmpM = new org.apache.hadoop.fs.Path(marker.toString + ".tmp")
-      fsys.mkdirs(marker.getParent)
-      val out = fsys.create(tmpM, true)
-      out.write(s"gen=$gen\n".getBytes("UTF-8"))
-      out.close()
-      fsys.rename(tmpM, marker)
-    }
+    // the marker is written last and atomically, so its existence proves
+    // the whole update landed
+    batchKey.foreach(BatchLedger.markApplied(spark, dir, _))
   }
 
   /** Continuous ingestion: watch a staging directory of IngestNode
@@ -285,7 +254,7 @@ object Incremental {
       .agg(max_by(struct(rows.columns.map(col): _*), col("gen")).as("r"))
       .select(col("r.*"))
     val current =
-      if (exists(spark, tombPath(dir))) {
+      if (BatchLedger.exists(spark, tombPath(dir))) {
         val tomb = spark.read.parquet(tombPath(dir))
           .groupBy(col("nodeId")).agg(max(col("gen")).as("tgen"))
         latest.join(tomb, Seq("nodeId"), "left")
@@ -319,7 +288,7 @@ object Incremental {
     val rows = spark.read.parquet(mergedRoot(dir))
     val g = rows.agg(max(col("gen"))).head().getInt(0).toLong
     val markerP = new org.apache.hadoop.fs.Path(s"$kvPath/_last_build_gen")
-    val fsys = fs(spark, kvPath)
+    val fsys = BatchLedger.fs(spark, kvPath)
     // absent marker (first refresh, or a store initialized before the
     // marker existed) → render everything: correct-if-wasteful, upserts
     // are idempotent re-renders of current rows
@@ -337,11 +306,9 @@ object Incremental {
       .groupBy(col("nodeId"))
       .agg(max_by(struct(win.columns.map(col): _*), col("gen")).as("r"))
       .select(col("r.*"))
-    val tombWin =
-      if (exists(spark, tombPath(dir)))
-        spark.read.parquet(tombPath(dir)).where(col("gen") > last)
-          .groupBy(col("nodeId")).agg(max(col("gen")).as("tgen"))
-      else Seq.empty[(String, Int)].toDF("nodeId", "tgen")
+    val tombWin = BatchLedger.table(spark, tombPath(dir), "nodeId STRING, gen INT")
+      .where(col("gen") > last)
+      .groupBy(col("nodeId")).agg(max(col("gen")).as("tgen"))
     // a row superseded by a later tombstone within the window is dead
     val fresh = latest.join(tombWin, Seq("nodeId"), "left")
       .where(col("tgen").isNull || col("gen") >= col("tgen"))
@@ -352,17 +319,10 @@ object Incremental {
       .join(recs.select(col("key")), Seq("key"), "left_anti")
       .select(col("key"), lit(null).cast("string").as("value"))
     val kvGen = graft.sinks.KvGenStore.append(recs.union(dead), kvPath)
-    // marker write is create-then-delete-then-rename (Hadoop rename does
-    // NOT overwrite an existing destination): a crash anywhere in the
-    // sequence leaves either the old marker (same window re-renders) or
-    // no marker (everything re-renders) — both safe, upserts are
-    // idempotent re-renders of current rows
-    val tmpM = new org.apache.hadoop.fs.Path(markerP.toString + ".tmp")
-    val out = fsys.create(tmpM, true)
-    out.write(s"$g\n".getBytes("UTF-8"))
-    out.close()
-    if (fsys.exists(markerP)) fsys.delete(markerP, false)
-    require(fsys.rename(tmpM, markerP), s"marker rename failed at $markerP")
+    // the marker write is atomic: a crash leaves either the old marker
+    // (same window re-renders) or no marker (everything re-renders) — both
+    // safe, upserts are idempotent re-renders of current rows
+    BatchLedger.writeAtomically(spark, markerP.toString, s"$g\n")
     if (compactAfterGens > 0 &&
         graft.sinks.KvGenStore.generationCount(spark, kvPath) > compactAfterGens)
       graft.sinks.KvGenStore.compact(spark, kvPath)
@@ -378,7 +338,7 @@ object Incremental {
   def compact(spark: SparkSession, dir: String): Unit = {
     val tmp = s"${mergedRoot(dir)}.tmp"
     currentMerged(spark, dir).write.mode(SaveMode.Overwrite).parquet(s"$tmp/gen=1")
-    val f = fs(spark, dir)
+    val f = BatchLedger.fs(spark, dir)
     f.delete(new org.apache.hadoop.fs.Path(mergedRoot(dir)), true)
     f.delete(new org.apache.hadoop.fs.Path(tombPath(dir)), true)
     f.rename(new org.apache.hadoop.fs.Path(tmp),

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.query.Query
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the g36 2-hop neighborhood count cube
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * dropped by the anti-join, and a path whose two edges arrive in
   * different batches is counted once, by the later one.
   *
-  * State is append-only and idempotent (the house pattern):
+  * State is append-only and idempotent ([[BatchLedger.fold]]):
   * `edges.parquet/batch=<id>` holds each batch's truly-new edges (dedup
   * via left-anti against strictly earlier batches, so a redelivery
   * recomputes the identical set and overwrite replaces it) and
@@ -32,33 +32,12 @@ object IncrementalAggrCube {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def deltaPath(dir: String) = s"$dir/delta.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of (fromNodeId, toNodeId, edgeType) edges into the
     * state, maintaining the cube for every root in `roots`. */
   def update(s: SparkSession, dir: String, edges: DataFrame, types: DataFrame,
              roots: Seq[String], batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("fromNodeId"), col("toNodeId"), col("edgeType"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .drop("batch")
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "fromNodeId STRING, toNodeId STRING, edgeType STRING"))
-    // materialise the new set BEFORE touching its partition, so a
-    // redelivery that overwrites batch=<id> never reads its own output
-    val newE = edges.select(col("fromNodeId"), col("toNodeId"), col("edgeType"))
-      .distinct()
-      .join(prior, Seq("fromNodeId", "toNodeId", "edgeType"), "left_anti")
-      .localCheckpoint()
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) = BatchLedger.fold(s, edgesPath(dir),
+      "fromNodeId STRING, toNodeId STRING, edgeType STRING", edges, batchId)
     val incO = Query.incidentOriented(prior)
     val incN = Query.incidentOriented(newE)
     val delta = roots.map { r =>
@@ -68,16 +47,14 @@ object IncrementalAggrCube {
           .unionByName(Query.twoHopPaths(incN, incN, r)), types)
         .withColumn("root", lit(r))
     }.reduce(_ unionByName _)
-    delta.write.mode(SaveMode.Overwrite).parquet(s"${deltaPath(dir)}/batch=$batchId")
+    BatchLedger.put(delta, deltaPath(dir), batchId.toString)
   }
 
   /** The maintained cube — column-identical to the batch g36 gate. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, deltaPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "direction STRING, edge1 STRING, type1 STRING, edge2 STRING, " +
-            "type2 STRING, num BIGINT, path STRING, root STRING"))
+    if (!BatchLedger.exists(s, deltaPath(dir)))
+      return BatchLedger.empty(s, "direction STRING, edge1 STRING, type1 STRING, " +
+        "edge2 STRING, type2 STRING, num BIGINT, path STRING, root STRING")
     s.read.parquet(deltaPath(dir))
       .groupBy(col("root"), col("direction"), col("edge1"), col("type1"),
         col("edge2"), col("type2"), col("path"))

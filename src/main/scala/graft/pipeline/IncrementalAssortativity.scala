@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental degree-assortativity statistics under edge insertions —
@@ -31,26 +31,10 @@ object IncrementalAssortativity {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def deltaPath(dir: String) = s"$dir/delta.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of canonical (u < v) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("u"), col("v"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint() // written below; never read its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val oldDeg = prior.select(col("u").as("node")).union(prior.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("d0"))
     val dlt = newE.select(col("u").as("node")).union(newE.select(col("v")))
@@ -79,20 +63,18 @@ object IncrementalAssortativity {
     val corrTerm = oldTouched.join(dU, "u").join(dV, "v")
       .agg(coalesce(sum(col("d1u") * col("d1v") - col("d0u") * col("d0v")),
         lit(0L)).as("b"))
-    moments.crossJoin(newTerm).crossJoin(corrTerm) // three 1-row frames
+    val delta = moments.crossJoin(newTerm).crossJoin(corrTerm) // three 1-row frames
       .select(lit(batchId).as("bid"), col("d_ends"), col("d_sum_d"),
         col("d_sum_d2"), ((col("a") + col("b")) * 2).as("d_sum_dd"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${deltaPath(dir)}/batch=$batchId")
+    BatchLedger.put(delta, deltaPath(dir), batchId.toString)
   }
 
   /** The maintained statistics — shape-identical to batch g39 on the
     * union of all folded batches; the read is ONE tiny aggregate over
     * the per-batch delta rows. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, deltaPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "n_ends BIGINT, sum_d BIGINT, sum_d2 BIGINT, sum_dd BIGINT"))
+    if (!BatchLedger.exists(s, deltaPath(dir)))
+      return BatchLedger.empty(s, "n_ends BIGINT, sum_d BIGINT, sum_d2 BIGINT, sum_dd BIGINT")
     s.read.parquet(deltaPath(dir)).agg(
       coalesce(sum(col("d_ends")), lit(0L)).as("n_ends"),
       coalesce(sum(col("d_sum_d")), lit(0L)).as("sum_d"),

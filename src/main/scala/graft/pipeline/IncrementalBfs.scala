@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental bounded multi-source BFS under edge insertions — the IVM
@@ -37,21 +37,6 @@ object IncrementalBfs {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def distsPath(dir: String) = s"$dir/dists.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def priorEdges(s: SparkSession, dir: String, batchId: Long): DataFrame =
-    if (exists(s, edgesPath(dir)))
-      s.read.parquet(edgesPath(dir))
-        .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-        .where(col("batch") < batchId)
-        .select(col("u"), col("v"))
-    else
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT"))
-
   private def sym(e: DataFrame): DataFrame =
     e.select(col("u"), col("v")).union(e.select(col("v").as("u"), col("u").as("v")))
 
@@ -61,28 +46,17 @@ object IncrementalBfs {
   /** Fold one batch of canonical (u < v) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long,
       nSeeds: Int = 4, maxDist: Int = graft.operators.MaterialiseOps.BfsMaxDist): Unit = {
-    val prior = priorEdges(s, dir, batchId)
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint() // written below; never read its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val allSym = sym(prior.union(newE)).localCheckpoint() // static within this fold
     val seeds = seedsOf(allSym, nSeeds)
     // prior best distances, restricted to the current seed set (rows of
     // evicted seeds never propagate again)
-    val priorBest = (
-      if (exists(s, distsPath(dir)))
-        s.read.parquet(distsPath(dir))
-          .select(col("seed"), col("node"), col("dist"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
-          .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "seed BIGINT, node BIGINT, dist INT"))
-      ).localCheckpoint()
+    val priorBest = BatchLedger.before(s, distsPath(dir),
+        "seed BIGINT, node BIGINT, dist INT", batchId)
+      .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
+      .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
+      .localCheckpoint()
     // round-0 improvements: fresh seed roots + prior dists relaxed
     // through the NEW edges only
     val seed0 = seeds.select(col("node").as("seed"), col("node"), lit(0).as("dist"))
@@ -115,17 +89,16 @@ object IncrementalBfs {
       r += 1
     }
     // one row per (seed, node): the best improvement found this batch
-    improved.groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${distsPath(dir)}/batch=$batchId")
+    BatchLedger.put(
+      improved.groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")),
+      distsPath(dir), batchId.toString)
   }
 
   /** The maintained layer counts — equal to batch g42 on the union of
     * all folded batches. */
   def current(s: SparkSession, dir: String, nSeeds: Int = 4): DataFrame = {
-    if (!exists(s, distsPath(dir)) || !exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "seed BIGINT, dist INT, n_nodes BIGINT"))
+    if (!BatchLedger.exists(s, distsPath(dir)) || !BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s, "seed BIGINT, dist INT, n_nodes BIGINT")
     val allSym = sym(s.read.parquet(edgesPath(dir)))
     val seeds = seedsOf(allSym, nSeeds)
     s.read.parquet(distsPath(dir))

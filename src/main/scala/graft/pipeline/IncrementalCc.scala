@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.identity.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL connected components — the reference's equivalence-clique
@@ -37,34 +37,16 @@ import org.apache.spark.sql.functions._
   * costs O(|batch|); the degenerate corpus where one clique spans the
   * graph is the inherent worst case (its star IS the state).
   *
-  * State (parquet, appended per batch under `batch=<key>`, the
-  * [[IncrementalCorpus]] exactly-once pattern — deterministic partition +
-  * Overwrite + marker-written-last):
+  * State (parquet, appended per batch under `batch=<key>` through
+  * [[BatchLedger]] — deterministic partition + Overwrite +
+  * marker-written-last):
   *   - `components`: (member, component) label rows; later batches append
   *     corrections for members whose component merged.
   */
 object IncrementalCc {
 
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Read the components table excluding the batch being (re)applied — a
-    * crashed retry must not see its own partial rows
-    * ([[IncrementalCorpus.tbl]]'s rationale). */
-  private def tbl(spark: SparkSession, dir: String, excludeBatch: String): DataFrame = {
-    val p = java.nio.file.Paths.get(s"$dir/components.parquet")
-    if (java.nio.file.Files.exists(p)) {
-      val df = spark.read.parquet(p.toString)
-      val filtered =
-        if (df.columns.contains("batch")) df.where(col("batch") =!= excludeBatch)
-        else df
-      (if (filtered.columns.contains("batch")) filtered.drop("batch") else filtered)
-        .select(col("member"), col("component"))
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "member STRING, component STRING"))
-  }
+  private def components(stateDir: String) = s"$stateDir/components.parquet"
+  private val Ddl = "member STRING, component STRING"
 
   private def resolve(state: DataFrame): DataFrame =
     state.groupBy(col("member")).agg(min(col("component")).as("component"))
@@ -76,23 +58,22 @@ object IncrementalCc {
     * redelivery. */
   def update(spark: SparkSession, stateDir: String, edges: DataFrame,
              batchKey: Option[String] = None): DataFrame = {
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
-    if (batchKey.isDefined && java.nio.file.Files.exists(marker))
+    val key = BatchLedger.key(batchKey)
+    if (batchKey.exists(BatchLedger.applied(spark, stateDir, _)))
       // Replay honours the documented return contract: the rows this
       // batch originally recomputed — its persisted partition — not the
       // full resolved state (a foreachBatch retry must observe the same
       // output as the first application).
-      return spark.read.parquet(s"$stateDir/components.parquet/batch=$key")
+      return spark.read.parquet(BatchLedger.part(components(stateDir), key))
         .select(col("member"), col("component"))
 
     val e = edges
       .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
       .where(col("src") =!= col("dst"))
       .localCheckpoint() // pin: the state table is rewritten below
-    val resolved = resolve(tbl(spark, stateDir, key))
+    // every batch but this one: a crashed retry must not see its own
+    // partial rows
+    val resolved = resolve(BatchLedger.table(spark, components(stateDir), Ddl, key))
 
     // which stored components does this batch touch?
     val bnodes = e.select(col("src").as("member"))
@@ -108,12 +89,8 @@ object IncrementalCc {
     val labels = ConnectedComponents.run(ccIn).localCheckpoint()
 
     // ---- advance state, marker strictly last (exactly-once replay)
-    labels.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/components.parquet/batch=$key")
-    if (batchKey.isDefined) {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-    }
+    BatchLedger.put(labels, components(stateDir), key)
+    batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
     labels
   }
 
@@ -122,13 +99,6 @@ object IncrementalCc {
     * verdict. Equals batch [[ConnectedComponents.run]] on the union of
     * all arrived edges (IncrementalCcSpec pins the equivalence,
     * including cross-batch component merges). */
-  def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/components.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "member STRING, component STRING"))
-    resolve(spark.read.parquet(p.toString).select(col("member"), col("component")))
-  }
+  def current(spark: SparkSession, stateDir: String): DataFrame =
+    resolve(BatchLedger.table(spark, components(stateDir), Ddl))
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL corpus decisions: documents arrive in batches (a
@@ -43,29 +43,16 @@ import org.apache.spark.sql.functions._
   * holding two old labels. */
 object IncrementalCorpus {
 
-  /** Read a state table, EXCLUDING the partition of the batch being
+  private def path(dir: String, name: String) = s"$dir/$name.parquet"
+
+  /** Read a state table, EXCLUDING the partitions of the batch being
     * (re)applied: a crash after some put() calls leaves `batch=<key>`
     * partials with no marker, and a retry that read its own partial rows
     * would see every first-seen doc as already known (and then overwrite
     * the partition with wrong state — permanently). */
   private def tbl(spark: SparkSession, dir: String, name: String,
-                  schema: String, excludeBatch: Option[String] = None): DataFrame = {
-    val p = java.nio.file.Paths.get(s"$dir/$name.parquet")
-    if (java.nio.file.Files.exists(p)) {
-      val df = spark.read.parquet(p.toString)
-      val filtered = excludeBatch match {
-        case Some(k) if df.columns.contains("batch") =>
-          df.where(col("batch") =!= k && col("batch") =!= s"${k}__fix")
-        case _ => df
-      }
-      if (filtered.columns.contains("batch")) filtered.drop("batch") else filtered
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
-
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
+                  ddl: String, key: String): DataFrame =
+    BatchLedger.table(spark, path(dir, name), ddl, key, BatchLedger.fix(key))
 
   /** Apply one arriving batch; returns its decision rows (also persisted
     * under `$stateDir/decisions.parquet`). `newDocs` needs (doc_id, text,
@@ -74,25 +61,20 @@ object IncrementalCorpus {
     * lands in a deterministic `batch=<key>` partition written with
     * Overwrite — a crashed-and-retried batch replaces its own partial
     * rows — and a marker file, written strictly last, makes a completed
-    * batch a no-op (the Incremental.scala ledger pattern). */
+    * batch a no-op ([[BatchLedger]]). */
   def update(spark: SparkSession, stateDir: String, newDocs: DataFrame,
              batchKey: Option[String] = None): DataFrame = {
     import spark.implicits._
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    if (batchKey.isDefined && java.nio.file.Files.exists(marker)) {
-      return spark.read.parquet(s"$stateDir/decisions.parquet")
-        .where(col("batch") === sanitize(batchKey.get))
+    val key = BatchLedger.key(batchKey)
+    if (batchKey.exists(BatchLedger.applied(spark, stateDir, _)))
+      return spark.read.parquet(BatchLedger.part(path(stateDir, "decisions"), key))
         .select(col("doc_id"), col("exact_keep"), col("neardup_keep"),
           col("lang_ok"), col("kept"))
-    }
-    val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
     val docs = newDocs.select(col("doc_id"), col("text"), col("lang"))
       .localCheckpoint() // pin the batch: state tables are rewritten below
 
     // ---- exact dedup against the hash table
-    val stateH = tbl(spark, stateDir, "hashes", "h STRING, canonical BIGINT", Some(key))
+    val stateH = tbl(spark, stateDir, "hashes", "h STRING, canonical BIGINT", key)
     val withH = docs.select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"))
     val batchMin = withH.groupBy("h").agg(min(col("doc_id")).as("bmin"))
     val exact = withH
@@ -112,11 +94,11 @@ object IncrementalCorpus {
       .localCheckpoint()
     val newBands = parts.select(col("doc_id"), explode(col("bands")).as("band"))
     val newSets = parts.select(col("doc_id"), col("set"), col("n"))
-    val stateB = tbl(spark, stateDir, "bands", "doc_id BIGINT, band STRING", Some(key))
+    val stateB = tbl(spark, stateDir, "bands", "doc_id BIGINT, band STRING", key)
     val stateS = tbl(spark, stateDir, "sets",
-      "doc_id BIGINT, set ARRAY<STRING>, n BIGINT", Some(key))
+      "doc_id BIGINT, set ARRAY<STRING>, n BIGINT", key)
     val stateC = tbl(spark, stateDir, "comps",
-      "doc_id BIGINT, component BIGINT", Some(key))
+      "doc_id BIGINT, component BIGINT", key)
     // labels only decrease on merge, so min across a doc's appended rows
     // IS its current component — no pointer chain to chase
     val compsNow = stateC.groupBy("doc_id").agg(min(col("component")).as("component"))
@@ -201,7 +183,7 @@ object IncrementalCorpus {
     // corrected rows for demoted canonicals (the loser label IS its old
     // canonical's doc_id): same exact/lang verdicts, near-dup keep → 0
     val priorDecisions = tbl(spark, stateDir, "decisions",
-      "doc_id BIGINT, exact_keep INT, neardup_keep INT, lang_ok INT, kept INT", Some(key))
+      "doc_id BIGINT, exact_keep INT, neardup_keep INT, lang_ok INT, kept INT", key)
     val corrections = priorDecisions
       .join(merged.select(col("loser").as("doc_id")).distinct(), "doc_id")
       .groupBy("doc_id")
@@ -224,18 +206,15 @@ object IncrementalCorpus {
       .join(stateH.select(col("h")), Seq("h"), "left_anti")
       .select(col("h"), col("bmin").as("canonical"))
     def put(df: DataFrame, t: String, part: String = key): Unit =
-      df.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/$t.parquet/batch=$part")
+      BatchLedger.put(df, path(stateDir, t), part)
     put(freshHashes, "hashes")
     put(hotBuckets, "hot_buckets")
     put(newBands, "bands")
     put(newSets, "sets")
     put(compRows, "comps")
-    put(corrections, "decisions", s"${key}__fix")
+    put(corrections, "decisions", BatchLedger.fix(key))
     put(decisions, "decisions")
-    if (batchKey.isDefined) {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-    }
+    batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
     decisions
   }
 
@@ -245,7 +224,7 @@ object IncrementalCorpus {
     * per-column min across a doc's appended rows is exact — and equals a
     * one-shot t13 rebuild on the full union. */
   def currentDecisions(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/decisions.parquet")
+    spark.read.parquet(path(stateDir, "decisions"))
       .groupBy("doc_id")
       .agg(min(col("exact_keep")).as("exact_keep"),
         min(col("neardup_keep")).as("neardup_keep"),

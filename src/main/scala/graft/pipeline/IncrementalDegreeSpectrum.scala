@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental degree-spectrum maintenance under edge insertions — the
@@ -31,26 +31,10 @@ object IncrementalDegreeSpectrum {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def deltaPath(dir: String) = s"$dir/delta.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of canonical (u < v) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("u"), col("v"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint() // written below; never read its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     // touched nodes and their degree growth within this batch
     val dlt = newE.select(col("u").as("node")).union(newE.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("dd"))
@@ -63,18 +47,17 @@ object IncrementalDegreeSpectrum {
     val degs = dlt.join(d0, Seq("node"), "left")
       .select(coalesce(col("d0"), lit(0L)).as("d0"),
         (coalesce(col("d0"), lit(0L)) + col("dd")).as("d1"))
-    degs.where(col("d0") > 0).select(col("d0").as("deg"), lit(-1L).as("dn"))
+    val delta = degs.where(col("d0") > 0).select(col("d0").as("deg"), lit(-1L).as("dn"))
       .unionByName(degs.select(col("d1").as("deg"), lit(1L).as("dn")))
       .groupBy(col("deg")).agg(sum(col("dn")).as("dn"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${deltaPath(dir)}/batch=$batchId")
+    BatchLedger.put(delta, deltaPath(dir), batchId.toString)
   }
 
   /** The maintained spectrum — equal to batch g40 on the union of all
     * folded batches; the read is one groupBy-sum over delta rows. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, deltaPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("deg BIGINT, n_nodes BIGINT"))
+    if (!BatchLedger.exists(s, deltaPath(dir)))
+      return BatchLedger.empty(s, "deg BIGINT, n_nodes BIGINT")
     s.read.parquet(deltaPath(dir))
       .groupBy(col("deg")).agg(sum(col("dn")).as("n_nodes"))
       .where(col("n_nodes") > 0)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental EDGE EMBEDDEDNESS under edge insertions —
@@ -18,62 +18,27 @@ object IncrementalEdgeSupport {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def supPath(dir: String) = s"$dir/sup.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of canonical (u < v) pairs into the state. */
-  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "u BIGINT, v BIGINT, batch BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint()
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
-    val all = prior
-      .union(newE.withColumn("batch", lit(batchId)))
-      .withColumn("r", struct(col("batch"), col("u"), col("v")))
-    val adj = all.select(col("u").as("a"), col("v").as("b"), col("r"))
-      .union(all.select(col("v").as("a"), col("u").as("b"), col("r")))
-    val e = newE.select(col("u"), col("v"),
-      struct(lit(batchId).as("batch"), col("u"), col("v")).as("re"))
-    val x = adj.select(col("a").as("xu"), col("b").as("w"), col("r").as("rx"))
-    val y = adj.select(col("a").as("yv"), col("b").as("w2"), col("r").as("ry"))
-    val delta = e
-      .join(x, col("xu") === col("u"))
-      .join(y, col("yv") === col("v") && col("w2") === col("w"))
-      .where(col("rx") < col("re") && col("ry") < col("re"))
-      .select(explode(array(
-        struct(least(col("u"), col("v")).as("eu"), greatest(col("u"), col("v")).as("ev")),
-        struct(least(col("u"), col("w")).as("eu"), greatest(col("u"), col("w")).as("ev")),
-        struct(least(col("v"), col("w")).as("eu"), greatest(col("v"), col("w")).as("ev"))))
-        .as("e3"))
-      .select(col("e3.eu").as("u"), col("e3.ev").as("v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("d_sup"))
-    delta.write.mode(SaveMode.Overwrite).parquet(s"${supPath(dir)}/batch=$batchId")
-  }
+  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit =
+    BatchLedger.put(
+      IncrementalTriangles.closed(s, dir, pairs, batchId)
+        .select(explode(array(
+          struct(least(col("u"), col("v")).as("eu"), greatest(col("u"), col("v")).as("ev")),
+          struct(least(col("u"), col("w")).as("eu"), greatest(col("u"), col("w")).as("ev")),
+          struct(least(col("v"), col("w")).as("eu"), greatest(col("v"), col("w")).as("ev"))))
+          .as("e3"))
+        .select(col("e3.eu").as("u"), col("e3.ev").as("v"))
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("d_sup")),
+      supPath(dir), batchId.toString)
 
   /** The maintained support histogram — column-identical to batch g44
     * on the union of all folded batches. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "support BIGINT, n_edges BIGINT"))
+    if (!BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s, "support BIGINT, n_edges BIGINT")
     val edges = s.read.parquet(edgesPath(dir)).select(col("u"), col("v"))
-    val sup =
-      if (exists(s, supPath(dir)))
-        s.read.parquet(supPath(dir))
-          .groupBy(col("u"), col("v")).agg(sum(col("d_sup")).as("support"))
-      else edges.select(col("u"), col("v"), lit(0L).as("support")).limit(0)
+    val sup = BatchLedger.table(s, supPath(dir), "u BIGINT, v BIGINT, d_sup BIGINT")
+      .groupBy(col("u"), col("v")).agg(sum(col("d_sup")).as("support"))
     edges.join(sup, Seq("u", "v"), "left")
       .select(coalesce(col("support"), lit(0L)).as("support"))
       .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))

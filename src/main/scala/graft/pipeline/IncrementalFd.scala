@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental functional-dependency audit under row insertions — p13's
@@ -27,35 +27,17 @@ object IncrementalFd {
   private def pairsPath(dir: String) = s"$dir/pairs.parquet"
   private def deltaPath(dir: String) = s"$dir/delta.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of (fd, x, y) rows (nulls already excluded, values
     * stringified) into the state. */
   def update(s: SparkSession, dir: String, rows: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, pairsPath(dir)))
-        s.read.parquet(pairsPath(dir))
-          .select(col("fd"), col("x"), col("y"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("fd"), col("x"), col("y"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "fd STRING, x STRING, y STRING"))
-    val newP = rows.select(col("fd"), col("x"), col("y")).distinct()
-      .join(prior, Seq("fd", "x", "y"), "left_anti")
-      .localCheckpoint() // written below; never read its own partition
-    newP.write.mode(SaveMode.Overwrite).parquet(s"${pairsPath(dir)}/batch=$batchId")
+    val (prior, newP) =
+      BatchLedger.fold(s, pairsPath(dir), "fd STRING, x STRING, y STRING", rows, batchId)
     val dk = newP.groupBy(col("fd"), col("x")).agg(count(lit(1)).as("dk"))
       .localCheckpoint() // probed twice (semi-join + join)
     val k0 = prior
       .join(dk.select(col("fd"), col("x")), Seq("fd", "x"), "left_semi")
       .groupBy(col("fd"), col("x")).agg(count(lit(1)).as("k0"))
-    dk.join(k0, Seq("fd", "x"), "left")
+    val delta = dk.join(k0, Seq("fd", "x"), "left")
       .select(col("fd"), coalesce(col("k0"), lit(0L)).as("k0"), col("dk"))
       .groupBy(col("fd"))
       .agg(
@@ -63,7 +45,7 @@ object IncrementalFd {
         sum(when(col("k0") < 2 && col("k0") + col("dk") >= 2, 1L).otherwise(0L))
           .as("d_bad"),
         sum(col("dk") - when(col("k0") === 0, 1L).otherwise(0L)).as("d_viol"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${deltaPath(dir)}/batch=$batchId")
+    BatchLedger.put(delta, deltaPath(dir), batchId.toString)
   }
 
   /** The maintained audit — shape-identical to batch p13 on the union
@@ -72,16 +54,11 @@ object IncrementalFd {
   def current(s: SparkSession, dir: String, fds: Seq[String]): DataFrame = {
     import s.implicits._
     val dim = fds.toDF("fd")
-    val sums =
-      if (exists(s, deltaPath(dir)))
-        s.read.parquet(deltaPath(dir))
-          .groupBy(col("fd"))
-          .agg(sum(col("d_groups")).as("g"), sum(col("d_bad")).as("b"),
-            sum(col("d_viol")).as("v"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "fd STRING, g BIGINT, b BIGINT, v BIGINT"))
+    val sums = BatchLedger.table(s, deltaPath(dir),
+        "fd STRING, d_groups BIGINT, d_bad BIGINT, d_viol BIGINT")
+      .groupBy(col("fd"))
+      .agg(sum(col("d_groups")).as("g"), sum(col("d_bad")).as("b"),
+        sum(col("d_viol")).as("v"))
     dim.join(sums, Seq("fd"), "left")
       .select(col("fd"),
         coalesce(col("g"), lit(0L)).as("n_groups"),

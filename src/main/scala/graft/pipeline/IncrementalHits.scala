@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental HITS under edge insertions — the IVM twin of g55's four
@@ -32,40 +32,15 @@ object IncrementalHits {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def scoresPath(dir: String) = s"$dir/scores.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of directed (c, p) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("c"), col("p"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("c"), col("p"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("c BIGINT, p BIGINT"))
-    val newE = pairs.select(col("c"), col("p")).distinct()
-      .join(prior, Seq("c", "p"), "left_anti")
-      .localCheckpoint() // written below; never reads its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "c BIGINT, p BIGINT", pairs, batchId)
     val allE = prior.union(newE).localCheckpoint()
     val dE = newE
-    val priorS = (
-      if (exists(s, scoresPath(dir)))
-        s.read.parquet(scoresPath(dir))
-          .select(col("lvl"), col("id"), col("d"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .groupBy(col("lvl"), col("id")).agg(sum(col("d")).as("sc"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "lvl INT, id BIGINT, sc BIGINT"))
-      ).localCheckpoint()
+    val priorS = BatchLedger.before(s, scoresPath(dir), "lvl INT, id BIGINT, d BIGINT", batchId)
+      .groupBy(col("lvl"), col("id")).agg(sum(col("d")).as("sc"))
+      .localCheckpoint()
     def priorLvl(k: Int): DataFrame =
       priorS.where(col("lvl") === k).select(col("id"), col("sc").as("x"))
     // hub-side scores flow c→p (Bᵀ·w); auth-side scores flow p→c (B·w)
@@ -86,20 +61,18 @@ object IncrementalHits {
     val d2 = step(2, d1, toHub)
     val d3 = step(3, d2, toAuth)
     val d4 = step(4, d3, toHub)
-    Seq(d1, d2, d3, d4).zipWithIndex
+    val delta = Seq(d1, d2, d3, d4).zipWithIndex
       .map { case (df, i) => df.select(lit(i + 1).as("lvl"), col("id"),
         col("x").as("d")) }
       .reduce(_ unionByName _)
-      .write.mode(SaveMode.Overwrite).parquet(s"${scoresPath(dir)}/batch=$batchId")
+    BatchLedger.put(delta, scoresPath(dir), batchId.toString)
   }
 
   /** The maintained scores — equal to batch g55 on the union of all
     * folded batches. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, scoresPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "kind STRING, id BIGINT, s1 BIGINT, s2 BIGINT"))
+    if (!BatchLedger.exists(s, scoresPath(dir)))
+      return BatchLedger.empty(s, "kind STRING, id BIGINT, s1 BIGINT, s2 BIGINT")
     val w = s.read.parquet(scoresPath(dir))
       .groupBy(col("lvl"), col("id")).agg(sum(col("d")).as("sc"))
     def lvl(k: Int, n: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental Katz walk counts under edge insertions — the IVM twin of
@@ -28,44 +28,19 @@ object IncrementalKatz {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def walksPath(dir: String) = s"$dir/walks.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   private def sym(e: DataFrame): DataFrame =
     e.select(col("u"), col("v")).union(e.select(col("v").as("u"), col("u").as("v")))
 
   /** Fold one batch of canonical (u < v) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long,
              hops: Int = 3): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("u"), col("v"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint() // written below; never reads its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val allSym = sym(prior.union(newE)).localCheckpoint()
     val dSym = sym(newE).localCheckpoint()
-    val priorW = (
-      if (exists(s, walksPath(dir)))
-        s.read.parquet(walksPath(dir))
-          .select(col("id"), col("k"), col("dwk"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .groupBy(col("id"), col("k")).agg(sum(col("dwk")).as("wk"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "id BIGINT, k INT, wk BIGINT"))
-      ).localCheckpoint()
+    val priorW = BatchLedger.before(s, walksPath(dir), "id BIGINT, k INT, dwk BIGINT", batchId)
+      .groupBy(col("id"), col("k")).agg(sum(col("dwk")).as("wk"))
+      .localCheckpoint()
     // matvec of a (id, x) frame through an edge frame: out(u) = Σ_{u~v} x(v)
     def matvec(e: DataFrame, w: DataFrame): DataFrame = e
       .join(w.select(col("id").as("v"), col("x")), Seq("v"))
@@ -83,16 +58,14 @@ object IncrementalKatz {
       out = out.unionByName(dK.select(col("id"), lit(k).as("k"), col("x").as("dwk")))
       dPrev = dK
     }
-    out.write.mode(SaveMode.Overwrite).parquet(s"${walksPath(dir)}/batch=$batchId")
+    BatchLedger.put(out, walksPath(dir), batchId.toString)
   }
 
   /** The maintained walk counts — equal to batch g43 on the union of all
     * folded batches. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, walksPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "id BIGINT, w1 BIGINT, w2 BIGINT, w3 BIGINT, katz16 BIGINT"))
+    if (!BatchLedger.exists(s, walksPath(dir)))
+      return BatchLedger.empty(s, "id BIGINT, w1 BIGINT, w2 BIGINT, w3 BIGINT, katz16 BIGINT")
     val w = s.read.parquet(walksPath(dir))
       .groupBy(col("id"), col("k")).agg(sum(col("dwk")).as("wk"))
     val p = (k: Int, n: String) =>

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL k-CORE MEMBERSHIP (fixed k) under a GROWING edge set — the
@@ -37,9 +37,8 @@ import org.apache.spark.sql.functions._
   * degrees only grew), and the usual maximality argument gives that the
   * survivors are exactly core(G′) \ M.
   *
-  * State (parquet under `stateDir`, the [[IncrementalCorpus]]
-  * exactly-once pattern — deterministic partition + Overwrite + marker
-  * written last):
+  * State (parquet under `stateDir`, kept by [[BatchLedger]] —
+  * deterministic partition + Overwrite + marker written last):
   *   - `edges.parquet/batch=<key>`: the arrived edges;
   *   - `members.parquet/batch=<key>`: the members that batch admitted.
   * `k` is a property of the store; callers must pass the same k for its
@@ -47,27 +46,8 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalKcore {
 
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def emptyDf(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-  /** Read a state table excluding the batch being (re)applied — a crashed
-    * retry must not see its own partial rows. */
-  private def tbl(spark: SparkSession, path: String, excludeBatch: String,
-                  ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyDf(spark, ddl)
-    val df = spark.read.parquet(path)
-    val filtered =
-      if (df.columns.contains("batch")) df.where(col("batch") =!= excludeBatch).drop("batch")
-      else df
-    filtered.selectExpr(ddl.split(",").map(_.trim.split(" ")(0)).toIndexedSeq: _*)
-  }
+  private def edgesPath(dir: String) = s"$dir/edges.parquet"
+  private def membersPath(dir: String) = s"$dir/members.parquet"
 
   private def symmetric(e: DataFrame): DataFrame =
     e.select(col("src").as("f"), col("dst").as("t"))
@@ -86,23 +66,22 @@ object IncrementalKcore {
              batchKey: Option[String] = None, reliableEvery: Int = 0): DataFrame = {
     def save(df: DataFrame, round: Int): DataFrame =
       graft.core.Iterate.save(df, reliableEvery, round)
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
-    if (batchKey.isDefined && java.nio.file.Files.exists(marker))
-      return spark.read.parquet(s"$stateDir/members.parquet/batch=$key")
+    val key = BatchLedger.key(batchKey)
+    if (batchKey.exists(BatchLedger.applied(spark, stateDir, _)))
+      return spark.read.parquet(BatchLedger.part(membersPath(stateDir), key))
         .select(col("member"))
 
     val e = edges
       .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
       .where(col("src") =!= col("dst"))
       .localCheckpoint()
-    e.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/edges.parquet/batch=$key")
+    BatchLedger.put(e, edgesPath(stateDir), key)
+    // every batch but this one: a crashed retry must not see its own
+    // partial rows
     val sym = save(symmetric(
-      tbl(spark, s"$stateDir/edges.parquet", key, "src STRING, dst STRING")
+      BatchLedger.table(spark, edgesPath(stateDir), "src STRING, dst STRING", key)
         .union(e)), 0)
-    val memb = save(tbl(spark, s"$stateDir/members.parquet", key, "member STRING")
+    val memb = save(BatchLedger.table(spark, membersPath(stateDir), "member STRING", key)
       .distinct(), 0)
 
     def fullDegOk(vs: DataFrame): DataFrame = // keep only candidates of degree >= k
@@ -153,12 +132,8 @@ object IncrementalKcore {
     val admitted = save(alive.select(col("v").as("member")), 1)
 
     // ---- advance state, marker strictly last (exactly-once replay)
-    admitted.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/members.parquet/batch=$key")
-    if (batchKey.isDefined) {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-    }
+    BatchLedger.put(admitted, membersPath(stateDir), key)
+    batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
     admitted
   }
 
@@ -167,14 +142,11 @@ object IncrementalKcore {
     * ([[graft.operators.MaterialiseOps.kCoreOf]]); IncrementalKcoreSpec
     * pins the equivalence on the union of all arrived edges. */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val ep = new org.apache.hadoop.fs.Path(s"$stateDir/edges.parquet")
-    if (!ep.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ep))
-      return emptyDf(spark, "member STRING, deg_in_core BIGINT")
-    val sym = symmetric(spark.read.parquet(ep.toString).select(col("src"), col("dst")))
-    val mp = new org.apache.hadoop.fs.Path(s"$stateDir/members.parquet")
-    if (!mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp))
-      return emptyDf(spark, "member STRING, deg_in_core BIGINT")
-    val memb = spark.read.parquet(mp.toString).select(col("member")).distinct()
+    if (!BatchLedger.exists(spark, edgesPath(stateDir)) ||
+        !BatchLedger.exists(spark, membersPath(stateDir)))
+      return BatchLedger.empty(spark, "member STRING, deg_in_core BIGINT")
+    val sym = symmetric(spark.read.parquet(edgesPath(stateDir)).select(col("src"), col("dst")))
+    val memb = spark.read.parquet(membersPath(stateDir)).select(col("member")).distinct()
     sym.join(memb.select(col("member").as("f")), "f")
       .join(memb.select(col("member").as("t")), "t")
       .groupBy(col("f")).agg(count(lit(1)).as("deg_in_core"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental LOCAL CLUSTERING COEFFICIENT under edge insertions —
@@ -21,58 +21,24 @@ object IncrementalLcc {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def triPath(dir: String) = s"$dir/tri.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of canonical (u < v) pairs into the state. */
-  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "u BIGINT, v BIGINT, batch BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint()
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
-    val all = prior
-      .union(newE.withColumn("batch", lit(batchId)))
-      .withColumn("r", struct(col("batch"), col("u"), col("v")))
-    val adj = all.select(col("u").as("a"), col("v").as("b"), col("r"))
-      .union(all.select(col("v").as("a"), col("u").as("b"), col("r")))
-    val e = newE.select(col("u"), col("v"),
-      struct(lit(batchId).as("batch"), col("u"), col("v")).as("re"))
-    val x = adj.select(col("a").as("xu"), col("b").as("w"), col("r").as("rx"))
-    val y = adj.select(col("a").as("yv"), col("b").as("w2"), col("r").as("ry"))
-    val delta = e
-      .join(x, col("xu") === col("u"))
-      .join(y, col("yv") === col("v") && col("w2") === col("w"))
-      .where(col("rx") < col("re") && col("ry") < col("re"))
-      .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("d_tri"))
-    delta.write.mode(SaveMode.Overwrite).parquet(s"${triPath(dir)}/batch=$batchId")
-  }
+  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit =
+    BatchLedger.put(
+      IncrementalTriangles.closed(s, dir, pairs, batchId)
+        .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("d_tri")),
+      triPath(dir), batchId.toString)
 
   /** The maintained per-node (id, deg, n_tri, lcc_ppm) — column-identical
     * to batch g37 on the union of all folded batches. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "id BIGINT, deg BIGINT, n_tri BIGINT, lcc_ppm BIGINT"))
+    if (!BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s, "id BIGINT, deg BIGINT, n_tri BIGINT, lcc_ppm BIGINT")
     val edges = s.read.parquet(edgesPath(dir))
     val deg = edges.select(col("u").as("id")).union(edges.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    val tri =
-      if (exists(s, triPath(dir)))
-        s.read.parquet(triPath(dir)).groupBy("id").agg(sum(col("d_tri")).as("n_tri"))
-      else deg.select(col("id"), lit(0L).as("n_tri")).limit(0)
+    val tri = BatchLedger.table(s, triPath(dir), "id BIGINT, d_tri BIGINT")
+      .groupBy("id").agg(sum(col("d_tri")).as("n_tri"))
     deg.join(tri, Seq("id"), "left")
       .select(col("id"), col("deg"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .withColumn("lcc_ppm",

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** INCREMENTAL MIXTURE: [[MixturePipeline]]'s sampling policy as an
   * update path over a growing corpus — the allocation twin of
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   * partition is written with Overwrite into its deterministic key — a
   * crashed-and-retried batch replaces its own partial rows — and a
   * marker file written strictly last makes a completed batch a no-op
-  * (the Incremental.scala ledger pattern).
+  * ([[BatchLedger]]).
   *
   * Scale shape: appending a batch is one projection write of that batch;
   * the rebuild-from-state work is [[MixturePipeline.runOn]]'s — a
@@ -34,36 +33,17 @@ import org.apache.spark.sql.functions._
   * re-reads raw text. */
 object IncrementalMixture {
 
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def docsState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = s"$stateDir/docs.parquet"
-    if (new java.io.File(p).exists)
-      spark.read.parquet(p).select("source", "doc_id", "tokens")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "source STRING, doc_id BIGINT, tokens BIGINT"))
-  }
+  private def docsPath(stateDir: String) = s"$stateDir/docs.parquet"
 
   /** Apply one arriving batch of documents (source, doc_id, text) and
     * return the refreshed build over the union of all applied batches. */
   def update(spark: SparkSession, stateDir: String, newDocs: DataFrame,
              config: MixtureConfig = MixtureConfig(),
              batchKey: Option[String] = None): MixtureBuild = {
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    if (batchKey.isEmpty || !java.nio.file.Files.exists(marker)) {
-      val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
-      MixturePipeline.tokensOf(newDocs)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$stateDir/docs.parquet/batch=$key")
-      if (batchKey.isDefined) {
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.createFile(marker)
-      }
+    if (!batchKey.exists(BatchLedger.applied(spark, stateDir, _))) {
+      BatchLedger.put(MixturePipeline.tokensOf(newDocs), docsPath(stateDir),
+        BatchLedger.key(batchKey))
+      batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
     }
     currentBuild(spark, stateDir, config)
   }
@@ -71,5 +51,6 @@ object IncrementalMixture {
   /** The mixture over all applied batches, derived from state only. */
   def currentBuild(spark: SparkSession, stateDir: String,
                    config: MixtureConfig = MixtureConfig()): MixtureBuild =
-    MixturePipeline.runOn(docsState(spark, stateDir), config)
+    MixturePipeline.runOn(BatchLedger.table(spark, docsPath(stateDir),
+      "source STRING, doc_id BIGINT, tokens BIGINT"), config)
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental bounded MUTUAL reachability under edge insertions — the
@@ -32,11 +32,6 @@ object IncrementalMutualReach {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def distsPath(dir: String, tag: String) = s"$dir/dists_$tag.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   private def seedsOf(all: DataFrame, nSeeds: Int): DataFrame =
     all.select(col("u").as("node")).distinct().orderBy(col("node")).limit(nSeeds)
 
@@ -44,19 +39,11 @@ object IncrementalMutualReach {
   private def foldDirection(s: SparkSession, dir: String, tag: String,
       all: DataFrame, dE: DataFrame, seeds: DataFrame, batchId: Long,
       maxDist: Int): Unit = {
-    val priorBest = (
-      if (exists(s, distsPath(dir, tag)))
-        s.read.parquet(distsPath(dir, tag))
-          .select(col("seed"), col("node"), col("dist"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
-          .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "seed BIGINT, node BIGINT, dist INT"))
-      ).localCheckpoint()
+    val priorBest = BatchLedger.before(s, distsPath(dir, tag),
+        "seed BIGINT, node BIGINT, dist INT", batchId)
+      .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
+      .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
+      .localCheckpoint()
     val seed0 = seeds.select(col("node").as("seed"), col("node"), lit(0).as("dist"))
       .join(priorBest.select(col("seed"), col("node")), Seq("seed", "node"), "left_anti")
     val relaxNew = priorBest
@@ -86,8 +73,9 @@ object IncrementalMutualReach {
       improved = graft.core.Iterate.save(improved.unionByName(frontier), 0, r)
       r += 1
     }
-    improved.groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${distsPath(dir, tag)}/batch=$batchId")
+    BatchLedger.put(
+      improved.groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")),
+      distsPath(dir, tag), batchId.toString)
   }
 
   /** Fold one batch of DIRECTED (u, v) edges (derived from complete
@@ -95,19 +83,8 @@ object IncrementalMutualReach {
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long,
       nSeeds: Int = 4,
       maxDist: Int = graft.operators.MaterialiseOps.BfsMaxDist): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .select(col("u"), col("v"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT"))
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint()
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    val (prior, newE) =
+      BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val all = prior.union(newE).localCheckpoint()
     val seeds = seedsOf(all, nSeeds).localCheckpoint()
     val rAll = all.select(col("v").as("u"), col("u").as("v"))
@@ -119,11 +96,9 @@ object IncrementalMutualReach {
   /** The maintained mutual-set rollup — equal to batch g57 on the union
     * of all folded batches. */
   def current(s: SparkSession, dir: String, nSeeds: Int = 4): DataFrame = {
-    if (!exists(s, distsPath(dir, "fwd")) || !exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "seed BIGINT, n_mutual BIGINT, min_node BIGINT, " +
-            "max_node BIGINT, sum_nodes BIGINT"))
+    if (!BatchLedger.exists(s, distsPath(dir, "fwd")) || !BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s,
+        "seed BIGINT, n_mutual BIGINT, min_node BIGINT, max_node BIGINT, sum_nodes BIGINT")
     val seeds = seedsOf(s.read.parquet(edgesPath(dir)), nSeeds)
     def side(tag: String): DataFrame =
       s.read.parquet(distsPath(dir, tag))

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *
   * State (parquet under `stateDir`):
   *   - `memberships.parquet/batch=<key>`: arrived (sk, p) rows
-  *     (the exactly-once append pattern of [[IncrementalCorpus]]);
+  *     (the keyed exactly-once append of [[BatchLedger]]);
   *   - `contribs.parquet/pb=<bucket>`: per-bucket pair-contribution
   *     blocks, dynamically overwritten — partition layout IS the IVM
   *     bookkeeping.
@@ -40,31 +40,8 @@ object IncrementalRa {
   private def bucketed(df: DataFrame): DataFrame =
     df.withColumn("pb", pmod(hash(col("p")), lit(Buckets)))
 
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def emptyDf(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-  /** None when no state exists yet — callers must not union an
-    * empty placeholder frame with the live batch (type coercion would
-    * silently stringify numeric keys). */
-  private def memberships(spark: SparkSession, dir: String,
-                          excludeBatch: String): Option[DataFrame] = {
-    val path = s"$dir/memberships.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return None
-    // an all-empty store (only zero-row batch partitions) has no footers
-    // to infer from — treat it as absent
-    val df = try spark.read.parquet(path) catch {
-      case _: org.apache.spark.sql.AnalysisException => return None
-    }
-    Some((if (df.columns.contains("batch")) df.where(col("batch") =!= excludeBatch).drop("batch")
-     else df).select(col("sk"), col("p")))
-  }
+  private def membershipsPath(dir: String) = s"$dir/memberships.parquet"
+  private def contribsPath(dir: String) = s"$dir/contribs.parquet"
 
   /** The per-part contribution recompute — shared by every touched part:
     * distinct members, pair expansion, `10⁶ div deg` discount. */
@@ -83,18 +60,16 @@ object IncrementalRa {
     * the parts the batch touches. */
   def update(spark: SparkSession, stateDir: String, batch: DataFrame,
              batchKey: Option[String] = None): Unit = {
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
-    if (batchKey.isDefined && java.nio.file.Files.exists(marker)) return
+    val key = BatchLedger.key(batchKey)
+    if (batchKey.exists(BatchLedger.applied(spark, stateDir, _))) return
 
     val b = batch.select(col("sk"), col("p")).distinct().localCheckpoint()
-    b.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/memberships.parquet/batch=$key")
+    BatchLedger.put(b, membershipsPath(stateDir), key)
     val touched = bucketed(b).select(col("pb")).distinct()
-    val touchedMembers = bucketed(memberships(spark, stateDir, key)
-      .map(_.union(b)).getOrElse(b))
+    // the prior state is typed like the batch, so the union never
+    // coerces (a STRING placeholder would silently stringify numeric keys)
+    val touchedMembers = bucketed(
+      BatchLedger.table(spark, membershipsPath(stateDir), b.schema.toDDL, key).union(b))
       .join(touched, Seq("pb"), "left_semi")
       .drop("pb")
     // dynamic overwrite: only the touched buckets' partitions are replaced
@@ -102,11 +77,8 @@ object IncrementalRa {
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pb")
-      .parquet(s"$stateDir/contribs.parquet")
-    if (batchKey.isDefined) {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-    }
+      .parquet(contribsPath(stateDir))
+    batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
   }
 
   /** The CURRENT scores: one aggregation over the maintained
@@ -114,17 +86,9 @@ object IncrementalRa {
     * ([[graft.operators.MaterialiseOps.raScoresOf]]) on the union of
     * all arrived memberships (spec + st21 gate pin it). */
   def current(spark: SparkSession, stateDir: String, minCommon: Int): DataFrame = {
-    val path = s"$stateDir/contribs.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyDf(spark,
-        "sa STRING, sb STRING, n_common BIGINT, ra_score BIGINT")
-    val contribs = try spark.read.parquet(path) catch {
-      // a store whose batches produced no pairs yet: no footers, no scores
-      case _: org.apache.spark.sql.AnalysisException =>
-        return emptyDf(spark,
-          "sa STRING, sb STRING, n_common BIGINT, ra_score BIGINT")
-    }
+    // a store whose batches produced no pairs yet has no scores
+    val contribs = BatchLedger.table(spark, contribsPath(stateDir),
+      "sa STRING, sb STRING, contrib BIGINT")
     contribs
       .groupBy("sa", "sb")
       .agg(count(lit(1)).as("n_common"), sum(col("contrib")).as("ra_score"))

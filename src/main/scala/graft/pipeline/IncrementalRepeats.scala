@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL exact-substring repeat removal — d19's cleaning ACTION
@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * (IncrementalRepeatsSpec pins the equivalence — no monotone-doc_id
   * assumption is even needed; removal has no canonical election).
   *
-  * State (parquet, appended per batch under `batch=<key>`, the
-  * [[IncrementalCorpus]] exactly-once pattern — deterministic partition +
-  * Overwrite + marker-written-last):
+  * State (parquet, appended per batch under `batch=<key>` through
+  * [[BatchLedger]] — deterministic partition + Overwrite +
+  * marker-written-last):
   *   - `docs`:    (doc_id, text)  — the arrived corpus (re-clean source)
   *   - `whashes`: (doc_id, i, h)  — per-position 8-byte rolling window
   *     hashes, the growing inverted index every batch probes
@@ -42,27 +42,14 @@ object IncrementalRepeats {
 
   private val L = 40
 
-  private def sanitize(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_")
+  private def path(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Read a state table excluding the batch being (re)applied — a crashed
-    * retry must not see its own partial rows ([[IncrementalCorpus.tbl]]'s
-    * rationale). */
+  /** Read a state table excluding the partitions of the batch being
+    * (re)applied — a crashed retry must not see its own partial rows
+    * ([[IncrementalCorpus]]'s rationale). */
   private def tbl(spark: SparkSession, dir: String, name: String,
-                  schema: String, excludeBatch: String): DataFrame = {
-    val p = java.nio.file.Paths.get(s"$dir/$name.parquet")
-    if (java.nio.file.Files.exists(p)) {
-      val df = spark.read.parquet(p.toString)
-      val filtered =
-        if (df.columns.contains("batch"))
-          df.where(col("batch") =!= excludeBatch &&
-            col("batch") =!= s"${excludeBatch}__fix")
-        else df
-      if (filtered.columns.contains("batch")) filtered.drop("batch") else filtered
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
+                  ddl: String, key: String): DataFrame =
+    BatchLedger.table(spark, path(dir, name), ddl, key, BatchLedger.fix(key))
 
   /** Per-position window hashes of a (doc_id, text) frame, computed
     * ROW-LOCALLY (no shuffle): one (doc_id, i, h) row per codepoint
@@ -92,15 +79,11 @@ object IncrementalRepeats {
     * exactly-once under foreachBatch redelivery. */
   def update(spark: SparkSession, stateDir: String, newDocs: DataFrame,
              batchKey: Option[String] = None): DataFrame = {
-    new java.io.File(stateDir).mkdirs()
-    val marker = java.nio.file.Paths.get(
-      s"$stateDir/applied_batches/${sanitize(batchKey.getOrElse(""))}")
-    if (batchKey.isDefined && java.nio.file.Files.exists(marker))
-      return spark.read.parquet(s"$stateDir/cleaned.parquet")
-        .where(col("batch") === sanitize(batchKey.get))
+    val key = BatchLedger.key(batchKey)
+    if (batchKey.exists(BatchLedger.applied(spark, stateDir, _)))
+      return spark.read.parquet(BatchLedger.part(path(stateDir, "cleaned"), key))
         .select(col("doc_id"), col("n_removed"), col("removed_chars"),
           col("cleaned_len"), col("cleaned_hash"))
-    val key = sanitize(batchKey.getOrElse(java.util.UUID.randomUUID.toString))
 
     val docs = newDocs
       .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
@@ -155,15 +138,12 @@ object IncrementalRepeats {
 
     // ---- advance state, marker strictly last (exactly-once replay)
     def put(df: DataFrame, t: String, part: String = key): Unit =
-      df.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/$t.parquet/batch=$part")
+      BatchLedger.put(df, path(stateDir, t), part)
     put(docs, "docs")
     put(batchPos, "whashes")
-    put(fixRows, "cleaned", s"${key}__fix")
+    put(fixRows, "cleaned", BatchLedger.fix(key))
     put(batchRows, "cleaned")
-    if (batchKey.isDefined) {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-    }
+    batchKey.foreach(BatchLedger.markApplied(spark, stateDir, _))
     batchRows
   }
 
@@ -175,14 +155,9 @@ object IncrementalRepeats {
   def currentCleaned(spark: SparkSession, stateDir: String): DataFrame = {
     // a store that never saw a batch (empty corpus, first run) has no
     // cleaned table yet — degrade to the typed empty view, not an error
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/cleaned.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, n_removed BIGINT, removed_chars BIGINT, " +
-            "cleaned_len BIGINT, cleaned_hash STRING"))
-    spark.read.parquet(s"$stateDir/cleaned.parquet")
+    BatchLedger.table(spark, path(stateDir, "cleaned"),
+      "doc_id BIGINT, n_removed BIGINT, removed_chars BIGINT, " +
+        "cleaned_len BIGINT, cleaned_hash STRING")
       .groupBy(col("doc_id"))
       .agg(max(struct(col("removed_chars"), col("n_removed"),
         col("cleaned_len"), col("cleaned_hash"))).as("f"))

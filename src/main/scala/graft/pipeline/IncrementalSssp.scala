@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental bounded weighted shortest paths under co-order-count
@@ -57,16 +57,11 @@ object IncrementalSssp {
   private def distsPath(dir: String) = s"$dir/dists.parquet"
   private def countsPath(dir: String) = s"$dir/counts.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Largest merged-count snapshot id strictly before `batchId` — a
     * directory listing (partition names), never a data scan. */
   private def priorSnapshot(s: SparkSession, dir: String, batchId: Long): Option[Long] = {
     val hp = new org.apache.hadoop.fs.Path(countsPath(dir))
-    val hf = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val hf = BatchLedger.fs(s, countsPath(dir))
     if (!hf.exists(hp)) None
     else hf.listStatus(hp).toSeq
       .map(_.getPath.getName)
@@ -84,25 +79,21 @@ object IncrementalSssp {
              nSeeds: Int = 4, rounds: Int = 3): Unit = {
     val newCnt = pairsCnt.select(col("u"), col("v"), col("cnt").cast("long").as("cnt"))
       .localCheckpoint() // written below; never reads its own partition
-    newCnt.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    BatchLedger.put(newCnt, edgesPath(dir), batchId.toString)
     // maintained merged counts: ONE prior snapshot + this batch's deltas
     // (never a re-aggregation of all historical batch partitions)
-    val priorMerged = priorSnapshot(s, dir, batchId) match {
-      case Some(b) =>
-        s.read.schema("u BIGINT, v BIGINT, cnt BIGINT")
-          .parquet(s"${countsPath(dir)}/batch=$b")
-      case None =>
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT, cnt BIGINT"))
+    val countsDdl = "u BIGINT, v BIGINT, cnt BIGINT"
+    val priorMerged = priorSnapshot(s, dir, batchId).fold(BatchLedger.empty(s, countsDdl)) {
+      b => s.read.schema(countsDdl).parquet(BatchLedger.part(countsPath(dir), b.toString))
     }
-    priorMerged.union(newCnt)
-      .groupBy(col("u"), col("v")).agg(sum(col("cnt")).as("cnt"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${countsPath(dir)}/batch=$batchId")
+    BatchLedger.put(
+      priorMerged.union(newCnt).groupBy(col("u"), col("v")).agg(sum(col("cnt")).as("cnt")),
+      countsPath(dir), batchId.toString)
     // current prices over the accumulated graph, read back from the
     // snapshot just written (parquet IS the checkpoint; bucket-by-(u,v)
     // on a real cluster makes the merge above partition-local)
-    val costE = s.read.schema("u BIGINT, v BIGINT, cnt BIGINT")
-      .parquet(s"${countsPath(dir)}/batch=$batchId")
+    val costE = s.read.schema(countsDdl)
+      .parquet(BatchLedger.part(countsPath(dir), batchId.toString))
       .select(col("u"), col("v"), expr("1000000 div cnt").as("cost"))
     val costSym = costE.select(col("u"), col("v"), col("cost"))
       .union(costE.select(col("v").as("u"), col("u").as("v"), col("cost")))
@@ -114,19 +105,11 @@ object IncrementalSssp {
       .localCheckpoint()
     val seeds = costSym.select(col("u").as("node")).distinct()
       .orderBy(col("node")).limit(nSeeds)
-    val priorBest = (
-      if (exists(s, distsPath(dir)))
-        s.read.parquet(distsPath(dir))
-          .select(col("seed"), col("node"), col("h"), col("c"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
-          .groupBy(col("seed"), col("node"), col("h")).agg(min(col("c")).as("c"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "seed BIGINT, node BIGINT, h INT, c BIGINT"))
-      ).localCheckpoint()
+    val priorBest = BatchLedger.before(s, distsPath(dir),
+        "seed BIGINT, node BIGINT, h INT, c BIGINT", batchId)
+      .join(seeds.select(col("node").as("seed")), Seq("seed"), "left_semi")
+      .groupBy(col("seed"), col("node"), col("h")).agg(min(col("c")).as("c"))
+      .localCheckpoint()
     // level 0: seeds not yet rooted (the seed set only moves DOWN as
     // nodes arrive; evicted seeds are filtered at read, never rewritten)
     val imp0 = seeds.select(col("node").as("seed"), col("node"),
@@ -159,17 +142,16 @@ object IncrementalSssp {
       improvedAll = graft.core.Iterate.save(improvedAll.unionByName(
         impH.select(col("seed"), col("node"), col("h"), col("c"))), 0, h)
     }
-    improvedAll.groupBy(col("seed"), col("node"), col("h")).agg(min(col("c")).as("c"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${distsPath(dir)}/batch=$batchId")
+    BatchLedger.put(
+      improvedAll.groupBy(col("seed"), col("node"), col("h")).agg(min(col("c")).as("c")),
+      distsPath(dir), batchId.toString)
   }
 
   /** The maintained bounded distances — equal to batch g45 on the union
     * of all folded batches. */
   def current(s: SparkSession, dir: String, nSeeds: Int = 4): DataFrame = {
-    if (!exists(s, distsPath(dir)) || !exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "seed BIGINT, node BIGINT, cost BIGINT"))
+    if (!BatchLedger.exists(s, distsPath(dir)) || !BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s, "seed BIGINT, node BIGINT, cost BIGINT")
     val allSym = sym(s.read.parquet(edgesPath(dir)))
     val seeds = allSym.select(col("u").as("node")).distinct()
       .orderBy(col("node")).limit(nSeeds)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental bounded TIME-RESPECTING reachability — the IVM twin of
@@ -34,34 +34,21 @@ object IncrementalTemporal {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def distsPath(dir: String) = s"$dir/dists.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Fold one batch of (from, to, dt) contacts. `seeds` is the static
     * (seed, node, arr) level-0 frame, identical every fold. */
   def update(s: SparkSession, dir: String, contacts: DataFrame,
              seeds: DataFrame, batchId: Long, rounds: Int = 3): Unit = {
     val newE = contacts.select(col("from"), col("to"), col("dt"))
       .localCheckpoint() // written below; never reads its own partition
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+    BatchLedger.put(newE, edgesPath(dir), batchId.toString)
     val allE = s.read.parquet(edgesPath(dir))
       .where(col("batch").cast("long") <= batchId)
       .select(col("from"), col("to"), col("dt"))
       .localCheckpoint() // static within this fold
-    val priorBest = (
-      if (exists(s, distsPath(dir)))
-        s.read.parquet(distsPath(dir))
-          .select(col("seed"), col("node"), col("h"), col("arr"),
-            col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-          .groupBy(col("seed"), col("node"), col("h")).agg(min(col("arr")).as("arr"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "seed STRING, node STRING, h INT, arr TIMESTAMP"))
-      ).localCheckpoint()
+    val priorBest = BatchLedger.before(s, distsPath(dir),
+        "seed STRING, node STRING, h INT, arr TIMESTAMP", batchId)
+      .groupBy(col("seed"), col("node"), col("h")).agg(min(col("arr")).as("arr"))
+      .localCheckpoint()
     // level 0: static seeds not yet rooted
     val imp0 = seeds.select(col("seed"), col("node"), lit(0).as("h"), col("arr"))
       .join(priorBest.where(col("h") === 0).select(col("seed"), col("node")),
@@ -92,17 +79,16 @@ object IncrementalTemporal {
       improvedAll = graft.core.Iterate.save(improvedAll.unionByName(
         impH.select(col("seed"), col("node"), col("h"), col("arr"))), 0, h)
     }
-    improvedAll.groupBy(col("seed"), col("node"), col("h")).agg(min(col("arr")).as("arr"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${distsPath(dir)}/batch=$batchId")
+    BatchLedger.put(
+      improvedAll.groupBy(col("seed"), col("node"), col("h")).agg(min(col("arr")).as("arr")),
+      distsPath(dir), batchId.toString)
   }
 
   /** The maintained foremost arrivals — min over levels, equal to batch
     * g54 on the union of all folded contacts. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, distsPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "seed STRING, node STRING, arr TIMESTAMP"))
+    if (!BatchLedger.exists(s, distsPath(dir)))
+      return BatchLedger.empty(s, "seed STRING, node STRING, arr TIMESTAMP")
     s.read.parquet(distsPath(dir))
       .groupBy(col("seed"), col("node")).agg(min(col("arr")).as("arr"))
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental triangle counting under edge insertions — join-delta IVM
@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   * adjacency index — proportional to the delta's wedge work, never to
   * the accumulated graph's.
   *
-  * State is append-only and idempotent: `edges.parquet/batch=<id>`
-  * holds each batch's truly-new canonical edges (dedup via left-anti
-  * against STRICTLY EARLIER batches, so a redelivered batch recomputes
-  * the identical set and overwrite replaces it), and
+  * State is append-only and idempotent ([[BatchLedger.fold]]):
+  * `edges.parquet/batch=<id>` holds each batch's truly-new canonical
+  * edges (dedup via left-anti against STRICTLY EARLIER batches, so a
+  * redelivered batch recomputes the identical set and overwrite replaces
+  * it), and
   * `delta.parquet/batch=<id>` one delta row per batch. The serving read
   * is two tiny aggregates. */
 object IncrementalTriangles {
@@ -29,28 +30,17 @@ object IncrementalTriangles {
   private def edgesPath(dir: String) = s"$dir/edges.parquet"
   private def deltaPath(dir: String) = s"$dir/delta.parquet"
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** Fold one batch of canonical (u < v) pairs into the state. */
-  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit = {
-    val prior =
-      if (exists(s, edgesPath(dir)))
-        s.read.parquet(edgesPath(dir))
-          .select(col("u"), col("v"), col("batch").cast("long").as("batch"))
-          .where(col("batch") < batchId)
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "u BIGINT, v BIGINT, batch BIGINT"))
-    // materialise the new set BEFORE touching its partition, so a
-    // redelivery that overwrites batch=<id> never reads its own output
-    val newE = pairs.select(col("u"), col("v")).distinct()
-      .join(prior, Seq("u", "v"), "left_anti")
-      .localCheckpoint()
-    newE.write.mode(SaveMode.Overwrite).parquet(s"${edgesPath(dir)}/batch=$batchId")
+  /** Fold one batch of canonical (u < v) pairs into the edge state
+    * under `dir` ([[BatchLedger.fold]]) and return the triangles it
+    * closes as (u, v, w) rows, (u, v) being the closing new edge: the
+    * arrival-rank wedge join, each triangle appearing exactly once, in the
+    * batch of its max-rank edge. [[IncrementalLcc]] and
+    * [[IncrementalEdgeSupport]] attribute the same rows to corners and
+    * edges. */
+  private[pipeline] def closed(s: SparkSession, dir: String, pairs: DataFrame,
+                               batchId: Long): DataFrame = {
+    val (prior, newE) = BatchLedger.fold(s, edgesPath(dir),
+      "u BIGINT, v BIGINT, batch BIGINT", pairs, batchId)
     val all = prior
       .union(newE.withColumn("batch", lit(batchId)))
       .withColumn("r", struct(col("batch"), col("u"), col("v")))
@@ -60,22 +50,24 @@ object IncrementalTriangles {
       struct(lit(batchId).as("batch"), col("u"), col("v")).as("re"))
     val x = adj.select(col("a").as("xu"), col("b").as("w"), col("r").as("rx"))
     val y = adj.select(col("a").as("yv"), col("b").as("w2"), col("r").as("ry"))
-    val delta = e
-      .join(x, col("xu") === col("u"))
+    e.join(x, col("xu") === col("u"))
       .join(y, col("yv") === col("v") && col("w2") === col("w"))
       .where(col("rx") < col("re") && col("ry") < col("re"))
-      .agg(count(lit(1)).as("delta"))
-    delta.select(lit(batchId).as("bid"), col("delta"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${deltaPath(dir)}/batch=$batchId")
+      .select(col("u"), col("v"), col("w"))
   }
+
+  /** Fold one batch of canonical (u < v) pairs into the state. */
+  def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long): Unit =
+    BatchLedger.put(
+      closed(s, dir, pairs, batchId).agg(count(lit(1)).as("delta"))
+        .select(lit(batchId).as("bid"), col("delta")),
+      deltaPath(dir), batchId.toString)
 
   /** The maintained (n_edges, n_triangles) — shape-identical to the
     * batch g19 operator on the union of all folded batches. */
   def current(s: SparkSession, dir: String): DataFrame = {
-    if (!exists(s, edgesPath(dir)))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "n_edges BIGINT, n_triangles BIGINT"))
+    if (!BatchLedger.exists(s, edgesPath(dir)))
+      return BatchLedger.empty(s, "n_edges BIGINT, n_triangles BIGINT")
     val ne = s.read.parquet(edgesPath(dir)).agg(count(lit(1)).as("n_edges"))
     val nt = s.read.parquet(deltaPath(dir))
       .agg(coalesce(sum(col("delta")), lit(0L)).as("n_triangles"))

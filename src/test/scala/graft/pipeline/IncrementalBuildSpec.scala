@@ -180,7 +180,7 @@ class IncrementalBuildSpec extends SparkSpec {
     val b1 = Seq(mk(Seq("a:1"), "ds1", Seq("T"), "grebi:name" -> "one"))
 
     Incremental.update(spark, config, dir, b1.toDS(), Some("b1"))
-    assert(Incremental.batchApplied(spark, dir, "b1"))
+    assert(BatchLedger.applied(spark, dir, "b1"))
     def gens = new java.io.File(s"$dir/merged").list().count(_.startsWith("gen="))
     def ledgerRows = spark.read.parquet(s"$dir/ledger.parquet").count()
     assert(gens == 1 && ledgerRows == 1)
