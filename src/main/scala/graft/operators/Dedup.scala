@@ -1904,7 +1904,7 @@ object Dedup extends QueryModule {
     // oracle-gated in its own right (round-9 verdict item #6) — same
     // oracle as d16 because output identity is the contract
     "d16s_repeats_staged" -> QueryDef(
-      (s, d) => maximalRepeatsStaged(s, d, s"/tmp/graft_d16s_${math.abs(d.hashCode)}"),
+      (s, d) => maximalRepeatsStaged(s, d, graft.core.LakeDir.scoped(s, "d16s", d)),
       Some(maximalRepeatsSql)),
     "d17_centroid_dendrogram" -> QueryDef(centroidDendrogram, Some(centroidDendrogramSql)),
     "d18_lsh_param_sweep" -> QueryDef(lshParamSweep, Some(lshParamSweepSql)),

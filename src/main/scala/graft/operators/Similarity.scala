@@ -1591,15 +1591,13 @@ object Similarity extends QueryModule {
     // and ONE directory instead of leaking a UUID-named pair per
     // invocation, while the session component keeps two concurrent
     // sessions (parallel suites, two drivers on one host) from dropping
-    // each other's table mid-scan — the round-12 ADVICE race. appId
-    // separates JVMs; identityHashCode separates sessions within one.
-    val sess = graft.core.LakeDir.sessionTag(s)
-    val tbl = s"graft_bucket_idx_${sess}_${Integer.toHexString(d.hashCode)}"
-    val loc = s"${System.getProperty("java.io.tmpdir")}/$tbl"
+    // each other's table mid-scan — the round-12 ADVICE race. The
+    // location is a LakeDir, so it is also deleted when the application
+    // ends; the table is named after it.
+    val loc = graft.core.LakeDir.scoped(s, "bucket_idx", d)
+    val tbl = new java.io.File(loc).getName
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val lp = new org.apache.hadoop.fs.Path(loc)
-    val hf = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hf.exists(lp)) hf.delete(lp, true)
+    graft.core.LakeDir.delete(s, loc)
     emb.write.bucketBy(16, "bucket").sortBy("bucket")
       .option("path", loc).format("parquet").saveAsTable(tbl)
     val t = s.table(tbl)

@@ -225,23 +225,16 @@ object Incremental {
     * true exactly-once comes from keying [[update]] by the Spark batchId,
     * which makes any redelivery (crash between the state mutation and the
     * checkpoint commit) an idempotent replay. Returns after draining
-    * everything currently staged. */
+    * everything currently staged ([[graft.streaming.Replay.drain]]). */
   def applyStream(spark: SparkSession, config: SubgraphConfig, dir: String,
                   stagingDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = org.apache.spark.sql.Encoders.product[IngestNode].schema
-    val q = spark.readStream
-      .schema(schema)
+    import spark.implicits._
+    val staged = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[IngestNode].schema)
       .parquet(stagingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        update(spark, config, dir, batch.as[IngestNode], Some(s"stream-$batchId"))
-      }
-      .option("checkpointLocation", s"$dir/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Replay.drain(staged, s"$dir/checkpoint") { (batch, batchId) =>
+      update(spark, config, dir, batch.as[IngestNode], Some(s"stream-$batchId"))
+    }
   }
 
   /** Merge-on-read view of the current graph: latest generation per

@@ -1,21 +1,42 @@
 package graft.streaming
 
 import graft.core.Exact
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.pipeline.BatchLedger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming layer. The reference is purely batch (SURVEY
-  * §2.10) — this extends the engine with the incremental path: the same
-  * events table consumed as a file stream (`Trigger.AvailableNow` replays
-  * it as a bounded stream), windowed aggregation with watermarks, and
-  * stateful sessionization via `flatMapGroupsWithState`.
+  * §2.10) — this extends the engine with the incremental path.
   *
   * Design rule: every streaming operator has a batch twin
   * (eventsWindowed ↔ Relational.eventsHourly, sessionize ↔
-  * Relational.sessionize) and must produce identical results on a replay
-  * — which is exactly what the oracle checks.
+  * Relational.sessionize, …) and must produce identical results on a
+  * bounded replay — which is exactly what the oracle checks, since the
+  * twins share one oracle.
+  *
+  * Every gate replays through [[Replay]]: `Replay.source` streams one
+  * table of the sf dir (`Trigger.AvailableNow` makes it a bounded
+  * stream), and one lifecycle runs the stream to completion. A gate
+  * takes one of three shapes:
+  *   - memory sink ([[Replay.toTable]]): a streaming plan — windowed
+  *     aggregation with watermarks, Complete-mode aggregation,
+  *     `flatMapGroupsWithState`, a stream-static join — drained into a
+  *     named in-memory table that the serving read finishes;
+  *   - keyed fold ([[Replay.drain]]): each micro-batch goes, with its
+  *     Spark batch id as the key, to an `Incremental*` module's `update`,
+  *     which applies it exactly once against its
+  *     [[graft.pipeline.BatchLedger]]. The graph gates seed the even
+  *     orderkeys as batch 0 and stream the odd ones as batch `id + 1`
+  *     ([[Replay.evenThenOdd]]);
+  *   - partials ([[Replay.drain]]): each micro-batch overwrites its own
+  *     `batch=<id>` partition with mergeable partial state
+  *     ([[graft.pipeline.BatchLedger.put]]), and the serving read merges
+  *     every partition ([[graft.pipeline.BatchLedger.table]]: a typed
+  *     empty frame when nothing landed).
+  * A stateful gate keeps its state under the `stateDir` it is given and
+  * its stream checkpoint at `<stateDir>/_stream_checkpoint`.
   */
 object Streaming {
 
@@ -29,36 +50,20 @@ object Streaming {
     if (graft.core.Tables.tsIsNanos(s, s"$d/events.parquet") &&
         !s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    // the file-stream source wants a directory: stream the sf dir with a
-    // glob filter selecting just the events table
     // NOTE: watermarks require TIMESTAMP (LTZ), so the stream keeps epoch
     // time and the batch-twin parity (which uses TIMESTAMP_NTZ) holds
     // under the engine's pinned UTC session zone — the harness sets
     // spark.sql.session.timeZone=UTC everywhere.
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-    schema("ts").dataType match {
+    val raw = Replay.source(s, d, "events")
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
 
-  /** Run a streaming DataFrame to completion (AvailableNow) into a named
-    * memory sink and return the sink table — the one place the
-    * start/processAllAvailable/stop lifecycle lives. */
-  private def runToTable(df: DataFrame, mode: OutputMode, name: String): DataFrame = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(name)
-  }
+  /** Where a stateful gate's stream checkpoint lives under its state dir. */
+  private def checkpoint(stateDir: String): String = s"$stateDir/_stream_checkpoint"
 
   /** Hourly tumbling-window aggregate with a 1-hour watermark, run to
     * completion with AvailableNow and surfaced as a DataFrame. Complete
@@ -69,7 +74,7 @@ object Streaming {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), Exact.sumd(col("value")).as("sum_value"))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .select(col("window.start").cast("timestamp_ntz").as("hour"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -85,7 +90,7 @@ object Streaming {
       .join(broadcast(customers), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), Exact.sumd(col("value")).as("sum_value"))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .orderBy(col("c_mktsegment"), col("event_type"))
   }
 
@@ -101,7 +106,7 @@ object Streaming {
     // whole events table into driver memory)
     val ev = eventsStream(s, d).select(col("event_id"), col("event_type"))
     val doubled = ev.unionByName(ev)
-    runToTable(doubled.dropDuplicates("event_id"), OutputMode.Append, name)
+    Replay.toTable(doubled.dropDuplicates("event_id"), OutputMode.Append, name)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("event_type"))
@@ -126,7 +131,7 @@ object Streaming {
       col("a_user") === col("b_user") &&
         col("b_ts") >= col("a_ts") &&
         col("b_ts") <= col("a_ts") + expr("INTERVAL 5 MINUTES"))
-    runToTable(joined, OutputMode.Append, name)
+    Replay.toTable(joined, OutputMode.Append, name)
       .select(col("a_user").as("user_id"),
         col("a_event").cast("long").as("a_event"),
         col("b_event").cast("long").as("b_event"),
@@ -148,7 +153,7 @@ object Streaming {
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n"))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .groupBy(col("user_id"))
       .agg(sum(col("n")).as("n_events"), count(lit(1)).as("n_sessions"))
       .orderBy(col("user_id"))
@@ -156,12 +161,8 @@ object Streaming {
 
   /** The documents table as a bounded file stream (same glob trick as
     * [[eventsStream]]; no timestamp normalisation needed). */
-  def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
-  }
+  def documentsStream(s: SparkSession, d: String): DataFrame =
+    Replay.source(s, d, "documents")
 
   /** Streaming exact corpus dedup: content-hash aggregation over the
     * document stream — min doc_id as canonical plus copy count, i.e. the
@@ -176,7 +177,7 @@ object Streaming {
       .select(md5(col("text")).as("content_hash"), col("doc_id"))
       .groupBy(col("content_hash"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .orderBy(col("content_hash"))
   }
 
@@ -216,7 +217,7 @@ object Streaming {
       .where(lit(3) * col("inter") >= col("na") + col("nb"))
       .select(col("old_id").as("da"), col("new_id").as("db"),
         col("inter"), col("na"), col("nb"))
-    runToTable(verified, OutputMode.Append, name)
+    Replay.toTable(verified, OutputMode.Append, name)
       .orderBy(col("da"), col("db"))
   }
 
@@ -259,7 +260,7 @@ object Streaming {
         expr("1000 - (1000 * edit) div greatest(length(ta), length(tb), 1)"))
       .select(col("old_id").as("da"), col("new_id").as("db"), col("edit"),
         col("sim_permille"), (col("sim_permille") >= 900).cast("int").as("is_dup"))
-    runToTable(verified, OutputMode.Append, name)
+    Replay.toTable(verified, OutputMode.Append, name)
       .orderBy(col("da"), col("db"))
   }
 
@@ -302,7 +303,7 @@ object Streaming {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"),
         sum((coalesce(col("ndocs"), lit(1L)) >= 2).cast("long")).as("n_shared"))
-    runToTable(probed, OutputMode.Complete, name)
+    Replay.toTable(probed, OutputMode.Complete, name)
       .orderBy(col("doc_id"))
   }
 
@@ -355,7 +356,7 @@ object Streaming {
       .groupBy(col("doc_id"))
       .agg(count(col("g")).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
-    runToTable(probed, OutputMode.Complete, name)
+    Replay.toTable(probed, OutputMode.Complete, name)
       .orderBy(col("doc_id"))
   }
 
@@ -384,7 +385,7 @@ object Streaming {
         top.zipWithIndex.map { case ((_, id), i) => (src, i + 1, id) }
       }
       .toDF("source", "rank", "doc_id")
-    runToTable(admitted, OutputMode.Complete, name)
+    Replay.toTable(admitted, OutputMode.Complete, name)
       .orderBy(col("source"), col("rank"))
   }
 
@@ -423,7 +424,7 @@ object Streaming {
         top.zipWithIndex.map { case ((_, id), i) => (src, i + 1, id) }
       }
       .toDF("source", "rank", "doc_id")
-    runToTable(admitted, OutputMode.Complete, name)
+    Replay.toTable(admitted, OutputMode.Complete, name)
       .join(broadcast(quotas), "source")
       .where(col("rank") <= col("quota"))
       .select(col("source"), col("rank"), col("doc_id"))
@@ -453,20 +454,10 @@ object Streaming {
     * t13 table, so the gate shares t13's oracle — the streaming twin of
     * the corpus side the way st7 is for d1. */
   def streamCorpus(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val q = documentsStream(s, d)
-      .select(col("doc_id"), col("text"), col("lang"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalCorpus.update(s, stateDir, batch,
-          Some(s"stream-$id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(documentsStream(s, d).select(col("doc_id"), col("text"), col("lang")),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalCorpus.update(s, stateDir, batch, Some(s"stream-$id"))
+    }
     s.read.parquet(s"$stateDir/decisions.parquet")
       .select(col("doc_id"), col("exact_keep"), col("neardup_keep"),
         col("lang_ok"), col("kept"))
@@ -485,20 +476,10 @@ object Streaming {
     * resolved log equals the one-shot batch d19 on the replayed corpus,
     * so the gate shares d19's oracle verbatim. */
   def streamRepeatRemoval(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val q = documentsStream(s, d)
-      .select(col("doc_id"), col("text"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalRepeats.update(s, stateDir, batch,
-          Some(s"stream-$id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(documentsStream(s, d).select(col("doc_id"), col("text")),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalRepeats.update(s, stateDir, batch, Some(s"stream-$id"))
+    }
     graft.pipeline.IncrementalRepeats.currentCleaned(s, stateDir)
       .orderBy(col("doc_id"))
   }
@@ -523,22 +504,11 @@ object Streaming {
       .union(Tables.nation(s, d)
         .select(node("n:", col("n_nationkey")).as("src"), node("r:", col("n_regionkey")).as("dst")))
     graft.pipeline.IncrementalCc.update(s, stateDir, base, Some("base"))
-    val schema = s.read.parquet(s"$d/customer.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(d)
-      .select(node("c:", col("c_custkey")).as("src"), node("n:", col("c_nationkey")).as("dst"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalCc.update(s, stateDir, batch, Some(s"stream-$id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(Replay.source(s, d, "customer")
+        .select(node("c:", col("c_custkey")).as("src"), node("n:", col("c_nationkey")).as("dst")),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalCc.update(s, stateDir, batch, Some(s"stream-$id"))
+    }
     graft.pipeline.IncrementalCc.current(s, stateDir)
       .orderBy(col("member"))
   }
@@ -562,24 +532,12 @@ object Streaming {
       .select(node("s:", col("l_suppkey")).as("src"), node("p:", col("l_partkey")).as("dst"))
       .distinct()
     graft.pipeline.IncrementalKcore.update(s, stateDir, base, 26, Some("base"))
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(node("s:", col("l_suppkey")).as("src"), node("p:", col("l_partkey")).as("dst"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalKcore.update(s, stateDir,
-          batch.dropDuplicates("src", "dst"), 26, Some(s"stream-$id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(Replay.source(s, d, "lineitem").where(col("l_orderkey") % 2 === 1)
+        .select(node("s:", col("l_suppkey")).as("src"), node("p:", col("l_partkey")).as("dst")),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalKcore.update(s, stateDir,
+        batch.dropDuplicates("src", "dst"), 26, Some(s"stream-$id"))
+    }
     graft.pipeline.IncrementalKcore.current(s, stateDir)
       .orderBy(col("member"))
   }
@@ -599,24 +557,12 @@ object Streaming {
     val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
       .select(col("l_suppkey").as("sk"), col("l_partkey").as("p")).distinct()
     graft.pipeline.IncrementalRa.update(s, stateDir, base, Some("base"))
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_suppkey").as("sk"), col("l_partkey").as("p"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalRa.update(s, stateDir,
-          batch.dropDuplicates("sk", "p"), Some(s"stream-$id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(Replay.source(s, d, "lineitem").where(col("l_orderkey") % 2 === 1)
+        .select(col("l_suppkey").as("sk"), col("l_partkey").as("p")),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalRa.update(s, stateDir,
+        batch.dropDuplicates("sk", "p"), Some(s"stream-$id"))
+    }
     graft.pipeline.IncrementalRa.current(s, stateDir, minCommon = 12)
       .orderBy(col("sa"), col("sb"))
   }
@@ -639,32 +585,10 @@ object Streaming {
       .groupBy(col("o_custkey").as("user_id"), col("o_orderdate"))
       .agg(max(col("o_orderkey")).as("o_orderkey"))
       .localCheckpoint() // static dim: computed once, probed every batch
-    val q = eventsStream(s, d)
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.Temporal.asofJoin(
-            batch.dropDuplicates("event_id"), ord,
-            "user_id", "ts", "o_orderdate", Seq("o_orderkey", "o_orderdate"))
-          .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_orderdate"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/out.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/out.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, user_id BIGINT, o_orderkey BIGINT, o_orderdate DATE"))
-    s.read.parquet(s"$stateDir/out.parquet")
-      .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_orderdate"))
-      .orderBy(col("event_id"))
+    asofProbe(s, d, stateDir, ord) { (ev, o) =>
+      graft.operators.Temporal.asofJoin(ev, o,
+        "user_id", "ts", "o_orderdate", Seq("o_orderkey", "o_orderdate"))
+    }
   }
 
   /** Streaming FORWARD AS-OF PROBE (st23): a6's forward as-of join as a
@@ -683,31 +607,25 @@ object Streaming {
       .groupBy(col("o_custkey").as("user_id"), col("o_orderdate"))
       .agg(min(col("o_orderkey")).as("o_orderkey"))
       .localCheckpoint() // static dim: computed once, probed every batch
-    val q = eventsStream(s, d)
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.Temporal.asofJoinForward(
-            batch.dropDuplicates("event_id"), ord,
-            "user_id", "ts", "o_orderdate", Seq("o_orderkey", "o_orderdate"))
-          .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_orderdate"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/out.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/out.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, user_id BIGINT, o_orderkey BIGINT, o_orderdate DATE"))
-    s.read.parquet(s"$stateDir/out.parquet")
-      .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_orderdate"))
+    asofProbe(s, d, stateDir, ord) { (ev, o) =>
+      graft.operators.Temporal.asofJoinForward(ev, o,
+        "user_id", "ts", "o_orderdate", Seq("o_orderkey", "o_orderdate"))
+    }
+  }
+
+  /** st22/st23's per-batch probe: each micro-batch of events, deduped on
+    * event_id, probes the static order dim `ord` through `join` and lands
+    * in its own partition; the serving read is every partition. */
+  private def asofProbe(s: SparkSession, d: String, stateDir: String, ord: DataFrame)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val out = s"$stateDir/out.parquet"
+    Replay.drain(eventsStream(s, d).select(col("event_id"), col("user_id"), col("ts")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(join(batch.dropDuplicates("event_id"), ord)
+        .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_orderdate")),
+        out, id.toString)
+    }
+    BatchLedger.table(s, out, "event_id BIGINT, user_id BIGINT, o_orderkey BIGINT, o_orderdate DATE")
       .orderBy(col("event_id"))
   }
 
@@ -751,29 +669,17 @@ object Streaming {
 
   def streamTimeBars(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val barUs = 3600L * 1000000
-    val q = eventsStream(s, d)
-      .select(col("event_type"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
-        col("event_id"), col("value"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        barPartials(batch, barUs)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/bars.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/bars.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_type STRING, bar BIGINT, open DOUBLE, high DOUBLE, low DOUBLE, close DOUBLE, n BIGINT"))
-    barMerge(s.read.parquet(s"$stateDir/bars.parquet").drop("batch"))
+    val bars = s"$stateDir/bars.parquet"
+    Replay.drain(eventsStream(s, d)
+        .select(col("event_type"),
+          unix_micros(col("ts").cast("timestamp")).as("us"),
+          col("event_id"), col("value")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(barPartials(batch, barUs), bars, id.toString)
+    }
+    val pick = "STRUCT<us: BIGINT, event_id: BIGINT, value: DOUBLE>"
+    barMerge(BatchLedger.table(s, bars, s"event_type STRING, bar BIGINT, open_s $pick, " +
+      s"high DOUBLE, low DOUBLE, close_s $pick, n BIGINT"))
   }
 
   /** Streaming SESSIONIZATION (st38): a10's inactivity-gap sessions
@@ -795,29 +701,15 @@ object Streaming {
     * the merged table equals batch a10 and shares its oracle. */
   def streamSessionize(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val gapUs = 30L * 60 * 1000000
-    val q = eventsStream(s, d)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sessionPartials(batch.toDF(), gapUs)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/sessions.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/sessions.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, session_idx BIGINT, n_events BIGINT, " +
-            "start_us BIGINT, end_us BIGINT, dur_us BIGINT"))
-    sessionMerge(s.read.parquet(s"$stateDir/sessions.parquet").drop("batch"), gapUs)
+    val sessions = s"$stateDir/sessions.parquet"
+    Replay.drain(eventsStream(s, d)
+        .select(col("user_id"), col("event_id"),
+          unix_micros(col("ts").cast("timestamp")).as("us")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(sessionPartials(batch, gapUs), sessions, id.toString)
+    }
+    sessionMerge(BatchLedger.table(s, sessions,
+        "user_id BIGINT, start_us BIGINT, end_us BIGINT, n_events BIGINT"), gapUs)
       .orderBy(col("user_id"), col("session_idx"))
   }
 
@@ -858,29 +750,16 @@ object Streaming {
     * replay the table equals batch a9 and shares its oracle. */
   def streamIntervalCoverage(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val us = unix_micros(col("ts").cast("timestamp"))
-    val q = eventsStream(s, d)
-      .select(col("user_id"), col("event_id"), us.as("s0"),
-        (us + (graft.core.Exact.dec(col("value")) * 60000000).cast("long")).as("e0"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.Temporal.islandsOf(batch.toDF())
-          .select(col("user_id"), col("i_start"), col("i_end"), col("n"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/islands.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/islands.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, n_events BIGINT, n_islands BIGINT, covered_us BIGINT"))
-    mergeIslands(s.read.parquet(s"$stateDir/islands.parquet").drop("batch"))
+    val islands = s"$stateDir/islands.parquet"
+    Replay.drain(eventsStream(s, d)
+        .select(col("user_id"), col("event_id"), us.as("s0"),
+          (us + (graft.core.Exact.dec(col("value")) * 60000000).cast("long")).as("e0")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(graft.operators.Temporal.islandsOf(batch)
+        .select(col("user_id"), col("i_start"), col("i_end"), col("n")), islands, id.toString)
+    }
+    mergeIslands(BatchLedger.table(s, islands,
+        "user_id BIGINT, i_start BIGINT, i_end BIGINT, n BIGINT"))
       .orderBy(col("user_id"))
   }
 
@@ -921,30 +800,16 @@ object Streaming {
     * replay the table equals batch p9 and the gate shares its oracle. */
   def streamHeavyHitters(s: SparkSession, d: String, stateDir: String): DataFrame = {
     import s.implicits._
-    val q = documentsStream(s, d)
-      .select(col("doc_id"), col("text"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.where(col("text").isNotNull)
-          .select(col("text")).as[String]
-          .flatMap(_.trim.split("\\s+"))
-          .toDF("word")
-          .groupBy(col("word")).agg(count(lit(1)).as("n"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/wc.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/wc.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("word STRING, n BIGINT"))
-    val merged = s.read.parquet(s"$stateDir/wc.parquet")
+    val wc = s"$stateDir/wc.parquet"
+    Replay.drain(documentsStream(s, d).select(col("doc_id"), col("text")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(batch.where(col("text").isNotNull)
+        .select(col("text")).as[String]
+        .flatMap(_.trim.split("\\s+"))
+        .toDF("word")
+        .groupBy(col("word")).agg(count(lit(1)).as("n")), wc, id.toString)
+    }
+    val merged = BatchLedger.table(s, wc, "word STRING, n BIGINT")
       .groupBy(col("word")).agg(sum(col("n")).as("n"))
     merged.crossJoin(merged.agg(sum(col("n")).as("tot")))
       .where(col("n") >= expr("(tot + 1999) div 2000"))
@@ -965,35 +830,23 @@ object Streaming {
     * cumulative-window pass over it. On full replay the result equals
     * batch p10 and shares its oracle. */
   def streamExactQuantiles(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .select(col("o_orderpriority").as("g"),
-        expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("v"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/hist.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/hist.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "g STRING, p50_cents BIGINT, p90_cents BIGINT, p99_cents BIGINT"))
-    graft.operators.ProfilerOps.quantilesOfCounts(
-        s.read.parquet(s"$stateDir/hist.parquet")
-          .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt")),
-        Seq(50, 90, 99))
+    graft.operators.ProfilerOps.quantilesOfCounts(priceHist(s, d, stateDir), Seq(50, 90, 99))
       .orderBy(col("g"))
+  }
+
+  /** st30/st49's state: each micro-batch of orders writes its
+    * per-(priority, price-in-cents) counts, and the read sums them. */
+  private def priceHist(s: SparkSession, d: String, stateDir: String): DataFrame = {
+    val hist = s"$stateDir/hist.parquet"
+    Replay.drain(Replay.source(s, d, "orders")
+        .select(col("o_orderpriority").as("g"),
+          expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("v")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(batch.groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")),
+        hist, id.toString)
+    }
+    BatchLedger.table(s, hist, "g STRING, v BIGINT, cnt BIGINT")
+      .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))
   }
 
   /** Streaming GAP-FILLED BARS (st27): the serving-side composition of
@@ -1008,18 +861,6 @@ object Streaming {
   def streamGapFill(s: SparkSession, d: String, stateDir: String): DataFrame =
     graft.operators.Temporal.gapFillOf(streamTimeBars(s, d, stateDir))
 
-  /** Streaming TRIANGLE COUNT (st26): g19's global triangle count
-    * maintained by [[graft.pipeline.IncrementalTriangles]] — arrival-
-    * rank join-delta IVM where each triangle is counted exactly once by
-    * its last-arriving edge, so a batch costs the DELTA's wedge work,
-    * never a recount of the accumulated graph. An even/odd orderkey
-    * split seeds half the graph as a base batch and streams the rest,
-    * exercising the cross-batch triangle paths (base-base-new,
-    * base-new-new, new-new-new) even in single-file replay; co-order
-    * pairs are built per batch, so batches must be order-atomic (file
-    * granularity guarantees that here). On full replay the maintained
-    * (n_edges, n_triangles) row equals batch g19 and shares its
-    * oracle. */
   /** st26/st28 precondition, checked loudly: the triangle IVM builds
     * co-order pairs PER MICRO-BATCH, so every order's rows must arrive in
     * one batch — guaranteed here only because the streamed table is a
@@ -1045,35 +886,41 @@ object Streaming {
         "granularity guarantees (and pathGlobFilter matches leaf files only)")
   }
 
-  def streamTriangleCount(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
+  /** The co-order graph gates' replay: the precondition above, then the
+    * even/odd lineitem replay, each batch folding its lineitem rows. */
+  private def coOrderReplay(s: SparkSession, d: String, stateDir: String)(
+      fold: (DataFrame, Long) => Unit): Unit = {
     requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir))(fold)
+  }
+
+  /** Line pairs of one order with the lower part key on the left (`a`). */
+  private def coOrder(li: DataFrame): DataFrame =
+    li.as("a").join(li.as("b"),
+      col("a.l_orderkey") === col("b.l_orderkey") &&
+        col("a.l_partkey") < col("b.l_partkey"))
+
+  /** The distinct co-order part pairs (u, v), u < v, of a batch of lineitem
+    * rows: the edges of the co-purchase graph. */
+  private def coPairs(li: DataFrame): DataFrame =
+    coOrder(li).select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v")).distinct()
+
+  /** Streaming TRIANGLE COUNT (st26): g19's global triangle count
+    * maintained by [[graft.pipeline.IncrementalTriangles]] — arrival-
+    * rank join-delta IVM where each triangle is counted exactly once by
+    * its last-arriving edge, so a batch costs the DELTA's wedge work,
+    * never a recount of the accumulated graph. An even/odd orderkey
+    * split seeds half the graph as a base batch and streams the rest,
+    * exercising the cross-batch triangle paths (base-base-new,
+    * base-new-new, new-new-new) even in single-file replay; co-order
+    * pairs are built per batch, so batches must be order-atomic (file
+    * granularity guarantees that here). On full replay the maintained
+    * (n_edges, n_triangles) row equals batch g19 and shares its
+    * oracle. */
+  def streamTriangleCount(s: SparkSession, d: String, stateDir: String): DataFrame = {
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalTriangles.current(s, stateDir)
   }
 
@@ -1087,34 +934,9 @@ object Streaming {
     * replay the maintained row equals batch g39 and shares its
     * oracle. */
   def streamAssortativity(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalAssortativity.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalAssortativity.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalAssortativity.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalAssortativity.current(s, stateDir)
   }
 
@@ -1129,34 +951,9 @@ object Streaming {
     * built per batch). On full replay the histogram equals batch g40
     * and shares its oracle. */
   def streamDegreeSpectrum(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalDegreeSpectrum.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalDegreeSpectrum.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalDegreeSpectrum.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalDegreeSpectrum.current(s, stateDir).orderBy(col("deg"))
   }
 
@@ -1171,34 +968,9 @@ object Streaming {
     * st26. On full replay the layers equal batch g42 and share its
     * oracle. */
   def streamBfsLayers(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalBfs.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalBfs.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalBfs.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalBfs.current(s, stateDir)
       .orderBy(col("seed"), col("dist"))
   }
@@ -1213,34 +985,9 @@ object Streaming {
     * precondition as st26. On full replay the counts equal batch g43
     * and share its oracle. */
   def streamKatzWalks(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalKatz.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalKatz.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalKatz.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalKatz.current(s, stateDir).orderBy(col("id"))
   }
 
@@ -1255,34 +1002,12 @@ object Streaming {
     * (counts are additive only if every order lands in one batch). On
     * full replay the distances equal batch g45 and share its oracle. */
   def streamBoundedSssp(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairsW(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .agg(count_distinct(col("a.l_orderkey")).as("cnt"))
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalSssp.update(s, stateDir, coPairsW(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalSssp.update(s, stateDir, coPairsW(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    // edge weight = the number of orders the pair shares
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalSssp.update(s, stateDir,
+        coOrder(li).groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+          .agg(count_distinct(col("a.l_orderkey")).as("cnt")), id)
+    }
     graft.pipeline.IncrementalSssp.current(s, stateDir)
       .orderBy(col("seed"), col("node"))
   }
@@ -1306,32 +1031,14 @@ object Streaming {
         .where(col("fd") =!= "")
         .select(col("fd").cast("long").as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val base = graft.core.Tables.orders(s, d).where(col("o_orderkey") % 2 === 0)
-    digitCounts(base).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$stateDir/digits.parquet/batch=0")
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .where(col("o_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        digitCounts(batch.toDF()).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/digits.parquet/batch=${id + 1}")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val digits = s"$stateDir/digits.parquet"
+    Replay.evenThenOdd(s, d, "orders", "o_orderkey", checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(digitCounts(batch), digits, id.toString)
+    }
     import s.implicits._
     val benford = graft.operators.ProfilerOps.BenfordPpm
       .toDF("digit", "benford_ppm")
-    val counts = s.read.parquet(s"$stateDir/digits.parquet").drop("batch")
+    val counts = BatchLedger.table(s, digits, "digit BIGINT, n BIGINT")
       .groupBy(col("digit")).agg(sum(col("n")).as("n"))
     val total = counts.agg(coalesce(sum(col("n")), lit(0L)).as("tot"))
     benford.join(counts, Seq("digit"), "left")
@@ -1372,24 +1079,11 @@ object Streaming {
       fdRows("part_to_brand", Tables.part(s, d), "p_partkey", "p_brand"),
     ).reduce[DataFrame](_ unionByName _)
     graft.pipeline.IncrementalFd.update(s, stateDir, base, 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalFd.update(s, stateDir,
-          fdRows("lineitem_order_to_supplier", batch.toDF(), "l_orderkey", "l_suppkey"),
-          id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(Replay.source(s, d, "lineitem").where(col("l_orderkey") % 2 === 1),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.pipeline.IncrementalFd.update(s, stateDir,
+        fdRows("lineitem_order_to_supplier", batch, "l_orderkey", "l_suppkey"), id + 1L)
+    }
     graft.pipeline.IncrementalFd.current(s, stateDir,
       graft.operators.ProfilerOps.FdNames)
   }
@@ -1406,37 +1100,11 @@ object Streaming {
     * even/odd split and order-atomicity precondition as st26; on full
     * replay the row equals batch g46 and shares its oracle. */
   def streamTriadCensus(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalDegreeSpectrum.update(s, s"$stateDir/spec", coPairs(base), 0L)
-    graft.pipeline.IncrementalTriangles.update(s, s"$stateDir/tri", coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val pairs = coPairs(batch).localCheckpoint() // folded into BOTH states
-        graft.pipeline.IncrementalDegreeSpectrum.update(s, s"$stateDir/spec", pairs, id + 1L)
-        graft.pipeline.IncrementalTriangles.update(s, s"$stateDir/tri", pairs, id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      val pairs = coPairs(li).localCheckpoint() // folded into BOTH states
+      graft.pipeline.IncrementalDegreeSpectrum.update(s, s"$stateDir/spec", pairs, id)
+      graft.pipeline.IncrementalTriangles.update(s, s"$stateDir/tri", pairs, id)
+    }
     val moments = graft.pipeline.IncrementalDegreeSpectrum.current(s, s"$stateDir/spec")
       .agg(coalesce(sum(col("n_nodes")), lit(0L)).as("nv"),
         expr("coalesce(sum(deg * n_nodes), 0L) div 2").as("ne"),
@@ -1463,34 +1131,9 @@ object Streaming {
     * precondition as st26. On full replay the histogram equals batch
     * g44 and shares its oracle. */
   def streamEdgeSupport(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalEdgeSupport.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalEdgeSupport.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalEdgeSupport.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalEdgeSupport.current(s, stateDir)
   }
 
@@ -1503,35 +1146,10 @@ object Streaming {
     * delta-proportionality — the two scale levers stack. On full replay
     * the row equals batch g32 and shares its oracle. */
   def streamTrianglesSampled(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
     val keep = graft.core.Exact.edgeDraw(col("u"), col("v"))
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct().where(keep)
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(li).where(keep), id)
+    }
     graft.pipeline.IncrementalTriangles.current(s, stateDir)
       .select(col("n_edges").as("n_sampled_edges"),
         col("n_triangles").as("n_sampled_triangles"),
@@ -1545,34 +1163,9 @@ object Streaming {
     * precondition as st26 (co-order pairs are built per batch). On full
     * replay the table equals batch g37 and shares its oracle. */
   def streamLocalClustering(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    import graft.core.Tables
-    requireOrderAtomicFile(s, d, "lineitem.parquet")
-    def coPairs(li: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-    val base = Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    graft.pipeline.IncrementalLcc.update(s, stateDir, coPairs(base), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalLcc.update(s, stateDir, coPairs(batch), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    coOrderReplay(s, d, stateDir) { (li, id) =>
+      graft.pipeline.IncrementalLcc.update(s, stateDir, coPairs(li), id)
+    }
     graft.pipeline.IncrementalLcc.current(s, stateDir)
   }
 
@@ -1594,25 +1187,13 @@ object Streaming {
       substring(col("fromNodeId"), 3, 9).cast("long") % 2 === 1
     val roots = graft.operators.MaterialiseOps.aggrCubeRoots
     IncrementalAggrCube.update(s, stateDir, edges.where(!oddSupplier), ty, roots, 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .select(graft.core.Pad.node("o:", col("l_orderkey")).as("fromNodeId"),
-        graft.core.Pad.node("s:", col("l_suppkey")).as("toNodeId"),
-        lit("ord:supplier").as("edgeType"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        IncrementalAggrCube.update(s, stateDir, batch.toDF(), ty, roots, id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(Replay.source(s, d, "lineitem").where(col("l_orderkey") % 2 === 1)
+        .select(graft.core.Pad.node("o:", col("l_orderkey")).as("fromNodeId"),
+          graft.core.Pad.node("s:", col("l_suppkey")).as("toNodeId"),
+          lit("ord:supplier").as("edgeType")),
+        checkpoint(stateDir)) { (batch, id) =>
+      IncrementalAggrCube.update(s, stateDir, batch, ty, roots, id + 1L)
+    }
     IncrementalAggrCube.current(s, stateDir)
   }
 
@@ -1636,10 +1217,7 @@ object Streaming {
       .withColumn("bucket", bucket)
       .select(col("vec_id").as("neighbor_id"), col("bucket"),
         graft.core.Exact.quantize(col("embedding"), 10000).as("q"))
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(d)
+    val stream = Replay.source(s, d, "embeddings")
       .where(col("vec_id") < 50)
       .withColumn("bucket", bucket)
       .select(col("vec_id").as("query_id"), col("bucket"),
@@ -1650,7 +1228,7 @@ object Streaming {
       .select(col("query_id"), col("neighbor_id"), col("dot"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("dot").desc, col("neighbor_id").asc)
-    runToTable(probed, OutputMode.Append, name)
+    Replay.toTable(probed, OutputMode.Append, name)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("dot"))
@@ -1681,10 +1259,7 @@ object Streaming {
       .select(col("vec_id").as("neighbor_id"), col("lang"),
         col("bucket").as("nbucket"),
         graft.core.Exact.quantize(col("embedding"), 10000).as("q"))
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(d)
+    val stream = Replay.source(s, d, "embeddings")
       .where(col("vec_id") < 20)
       .withColumn("bucket", bucket)
       .join(lang, col("vec_id") === col("doc_id"))
@@ -1698,7 +1273,7 @@ object Streaming {
         when(col("nbucket") === col("qbucket"), lit(1L)).otherwise(lit(0L)).as("in_bucket"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("dot").desc, col("neighbor_id").asc)
-    runToTable(probed, OutputMode.Append, name)
+    Replay.toTable(probed, OutputMode.Append, name)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("dot"),
@@ -1734,7 +1309,7 @@ object Streaming {
     // reference resolution), and the serving read should see one
     // consistent generation anyway
     TextAnalysis.signatureMatrix(
-        runToTable(sig, OutputMode.Complete, name).localCheckpoint())
+        Replay.toTable(sig, OutputMode.Complete, name).localCheckpoint())
       .orderBy(col("src_a"), col("src_b"))
   }
 
@@ -1752,7 +1327,7 @@ object Streaming {
     * count-min (st19) and heavy-hitter (st25) state. */
   def streamHllRegisters(s: SparkSession, d: String, name: String): DataFrame = {
     val agg = graft.operators.TextAnalysis.hllRegistersOf(documentsStream(s, d))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .orderBy(col("source"), col("bucket"))
   }
 
@@ -1771,7 +1346,7 @@ object Streaming {
       documentsStream(s, d).select(col("doc_id")))
     val agg = prints.groupBy(col("media_type"), col("checksum"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
-    runToTable(agg, OutputMode.Complete, name)
+    Replay.toTable(agg, OutputMode.Complete, name)
       .orderBy(col("media_type"), col("checksum"))
   }
 
@@ -1799,7 +1374,7 @@ object Streaming {
         struct(lit(dd).as("d"), ProfilerOps.cmBucket(dd).as("bucket"))): _*)).as("db"))
       .select(col("db.d").as("d"), col("db.bucket").as("bucket"))
     val sketch = shb.groupBy("d", "bucket").agg(count(lit(1)).as("bsum"))
-    val table = runToTable(sketch, OutputMode.Complete, name)
+    val table = Replay.toTable(sketch, OutputMode.Complete, name)
     // serving-side probe: exact top-20 from the static corpus, estimated
     // from the streamed sketch
     val toks = s.read.parquet(s"$d/documents.parquet")
@@ -1868,7 +1443,7 @@ object Streaming {
             else if (t1.isDefined) 1 else 0
           Iterator(FunnelOut(user, stage, t1, t2, t3, seen))
       }
-    val table = runToTable(out.toDF(), OutputMode.Append, name)
+    val table = Replay.toTable(out.toDF(), OutputMode.Append, name)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("seen").desc)
     table.withColumn("rn", row_number().over(w))
@@ -1916,7 +1491,7 @@ object Streaming {
     // final emission per user = the one with the highest n_events
     // (monotone across batches; n_sessions alone is NOT monotone — a
     // late event can merge two sessions — so pick the row, not max())
-    runToTable(out.toDF(), OutputMode.Append, name)
+    Replay.toTable(out.toDF(), OutputMode.Append, name)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("fin"))
       .select(col("user_id"), col("fin.n_events").as("n_events"),
@@ -1945,27 +1520,12 @@ object Streaming {
     * permanently; this append-only harness drops them at read. On full
     * replay the matrix equals batch a4 and shares its oracle. */
   def streamRetention(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val q = eventsStream(s, d)
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().distinct()
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/act.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/act.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "cohort TIMESTAMP, offset INT, n_users BIGINT"))
-    retentionMerge(s.read.parquet(s"$stateDir/act.parquet").drop("batch"))
+    val act = s"$stateDir/act.parquet"
+    Replay.drain(eventsStream(s, d).select(col("user_id"), date_trunc("day", col("ts")).as("day")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(batch.distinct(), act, id.toString)
+    }
+    retentionMerge(BatchLedger.table(s, act, "user_id BIGINT, day TIMESTAMP"))
   }
 
   /** Streaming COLLOCATION MONITOR (st48): t41's PMI-rank collocation
@@ -1982,41 +1542,22 @@ object Streaming {
     * pair spectrum, not its token volume. On full replay the table
     * equals batch t41 and shares its oracle. */
   def streamCollocations(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val q = documentsStream(s, d)
-      .select(col("text"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        import batch.sparkSession.implicits._
-        val docs = batch.select(col("text")).as[String]
-        docs.flatMap(t => (if (t == null) "" else t).split(" ").filter(_.nonEmpty))
-          .toDF("w").groupBy("w").agg(count(lit(1)).as("c"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/uni.parquet/batch=$id")
-        docs.flatMap { t =>
-            val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
-            (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
-          }
-          .toDF("w1", "w2").groupBy("w1", "w2").agg(count(lit(1)).as("n12"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/bg.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/bg.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "w1 STRING, w2 STRING, n12 BIGINT, c1 BIGINT, c2 BIGINT, " +
-            "n_total BIGINT, lift_ppm BIGINT"))
+    val (uni, bg) = (s"$stateDir/uni.parquet", s"$stateDir/bg.parquet")
+    Replay.drain(documentsStream(s, d).select(col("text")), checkpoint(stateDir)) { (batch, id) =>
+      import batch.sparkSession.implicits._
+      val docs = batch.select(col("text")).as[String]
+      BatchLedger.put(docs.flatMap(t => (if (t == null) "" else t).split(" ").filter(_.nonEmpty))
+        .toDF("w").groupBy("w").agg(count(lit(1)).as("c")), uni, id.toString)
+      BatchLedger.put(docs.flatMap { t =>
+          val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+          (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
+        }
+        .toDF("w1", "w2").groupBy("w1", "w2").agg(count(lit(1)).as("n12")), bg, id.toString)
+    }
     graft.operators.TextAnalysis.collocationsScore(
-      s.read.parquet(s"$stateDir/uni.parquet").drop("batch")
+      BatchLedger.table(s, uni, "w STRING, c BIGINT")
         .groupBy("w").agg(sum(col("c")).as("c")),
-      s.read.parquet(s"$stateDir/bg.parquet").drop("batch")
+      BatchLedger.table(s, bg, "w1 STRING, w2 STRING, n12 BIGINT")
         .groupBy("w1", "w2").agg(sum(col("n12")).as("n12")),
       minSupport = 5L, topK = 50)
   }
@@ -2034,34 +1575,7 @@ object Streaming {
     * drifts). On full replay the table equals batch p17, shared
     * oracle. */
   def streamMadOutliers(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .select(col("o_orderpriority").as("g"),
-        expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("v"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/hist.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/hist.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "g STRING, median_cents BIGINT, mad_cents BIGINT, " +
-            "n_rows BIGINT, n_outliers BIGINT"))
-    graft.operators.ProfilerOps.madOutliersOfCounts(
-        s.read.parquet(s"$stateDir/hist.parquet").drop("batch")
-          .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt")))
+    graft.operators.ProfilerOps.madOutliersOfCounts(priceHist(s, d, stateDir))
       .orderBy(col("g"))
   }
 
@@ -2088,26 +1602,15 @@ object Streaming {
       graft.core.Tables.orders(s, d).select(lit("orders.o_custkey").as("tag"),
         col("o_custkey").cast("long").as("k")),
     ).reduce(_ unionByName _)
-    keyCounts(base).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$stateDir/keys.parquet/batch=base")
-    val q = eventsStream(s, d)
-      .select(lit("events.user_id").as("tag"), col("user_id").cast("long").as("k"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        keyCounts(batch.toDF()).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/keys.parquet/batch=ev$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val keys = s"$stateDir/keys.parquet"
+    BatchLedger.put(keyCounts(base), keys, "base")
+    Replay.drain(eventsStream(s, d)
+        .select(lit("events.user_id").as("tag"), col("user_id").cast("long").as("k")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(keyCounts(batch), keys, s"ev$id")
+    }
     graft.operators.ProfilerOps.giniOfCounts(
-        s.read.parquet(s"$stateDir/keys.parquet").drop("batch")
+        BatchLedger.table(s, keys, "tag STRING, k BIGINT, cnt BIGINT")
           .groupBy(col("tag"), col("k")).agg(sum(col("cnt")).as("c")))
       .orderBy(col("tag"))
   }
@@ -2127,32 +1630,18 @@ object Streaming {
   def streamContingency(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val cellCounts = (df: DataFrame) =>
       df.groupBy(col("pair"), col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
-    cellCounts(graft.core.Tables.orders(s, d)
+    val cells = s"$stateDir/cells.parquet"
+    BatchLedger.put(cellCounts(graft.core.Tables.orders(s, d)
         .select(lit("orders.orderstatus*orderpriority").as("pair"),
-          col("o_orderstatus").as("a"), col("o_orderpriority").as("b")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$stateDir/cells.parquet/batch=base")
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .select(lit("lineitem.returnflag*linestatus").as("pair"),
-        col("l_returnflag").as("a"), col("l_linestatus").as("b"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        cellCounts(batch.toDF())
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/cells.parquet/batch=li$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+          col("o_orderstatus").as("a"), col("o_orderpriority").as("b"))), cells, "base")
+    Replay.drain(Replay.source(s, d, "lineitem")
+        .select(lit("lineitem.returnflag*linestatus").as("pair"),
+          col("l_returnflag").as("a"), col("l_linestatus").as("b")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(cellCounts(batch), cells, s"li$id")
+    }
     graft.operators.ProfilerOps.contingencyScore(
-        s.read.parquet(s"$stateDir/cells.parquet").drop("batch")
+        BatchLedger.table(s, cells, "pair STRING, a STRING, b STRING, n_ab BIGINT")
           .groupBy(col("pair"), col("a"), col("b")).agg(sum(col("n_ab")).as("n_ab")))
       .orderBy(col("pair"), col("a"), col("b"))
   }
@@ -2170,38 +1659,27 @@ object Streaming {
     * with per-batch cost bounded by the batch's observed buckets. On
     * full replay the table equals batch p19, shared oracle. */
   def streamSliceDrift(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .select((col("o_custkey") % 2 === 0).as("is_ref"),
-        expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint) div 5000000")
-          .as("bucket"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().groupBy(col("bucket"))
-          .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
-            sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_cur"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/hist.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/hist.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "bucket BIGINT, n_ref BIGINT, n_cur BIGINT, " +
-            "drift_x BIGINT, share_ratio_ppm BIGINT"))
-    graft.operators.ProfilerOps.sliceDriftOfHist(
-      s.read.parquet(s"$stateDir/hist.parquet").drop("batch")
-        .groupBy(col("bucket"))
-        .agg(sum(col("n_ref")).as("n_ref"), sum(col("n_cur")).as("n_cur")))
+    graft.operators.ProfilerOps.sliceDriftOfHist(refCurHist(s, d, stateDir, 5000000L))
+  }
+
+  /** st55/st59's state: each micro-batch of orders writes its per-price-
+    * bucket (`bucketCents` wide) counts of reference (even custkey) and
+    * current rows, and the read sums them. */
+  private def refCurHist(s: SparkSession, d: String, stateDir: String,
+                         bucketCents: Long): DataFrame = {
+    val hist = s"$stateDir/hist.parquet"
+    Replay.drain(Replay.source(s, d, "orders")
+        .select((col("o_custkey") % 2 === 0).as("is_ref"),
+          expr(s"cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint) div $bucketCents")
+            .as("bucket")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(batch.groupBy(col("bucket"))
+        .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
+          sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_cur")), hist, id.toString)
+    }
+    BatchLedger.table(s, hist, "bucket BIGINT, n_ref BIGINT, n_cur BIGINT")
+      .groupBy(col("bucket"))
+      .agg(sum(col("n_ref")).as("n_ref"), sum(col("n_cur")).as("n_cur"))
   }
 
   /** Streaming EXPECTATIONS MONITOR (st60): x21's constraint triage as a
@@ -2218,29 +1696,11 @@ object Streaming {
       .select(col("n_chars"), graft.lake.LakeTable.triageReason.as("reason"))
       .groupBy(col("reason"))
       .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"))
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        triage(batch.toDF())
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/triage.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/triage.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "disposition STRING, reason STRING, n_rows BIGINT, sum_chars BIGINT"))
-    s.read.parquet(s"$stateDir/triage.parquet").drop("batch")
+    val triaged = s"$stateDir/triage.parquet"
+    Replay.drain(documentsStream(s, d), checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(triage(batch), triaged, id.toString)
+    }
+    BatchLedger.table(s, triaged, "reason STRING, n_rows BIGINT, sum_chars BIGINT")
       .groupBy(col("reason"))
       .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_chars")).as("sum_chars"))
       .select(
@@ -2261,37 +1721,19 @@ object Streaming {
     * have to earn via dedup, this one gets from the algebra). On full
     * replay the table equals batch p21, shared oracle. */
   def streamSketchQuantiles(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .select(col("o_orderpriority").as("g"),
-        expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("v"),
-        col("o_orderkey").as("id"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.ProfilerOps.bottomK(
-            graft.operators.ProfilerOps.drawKeyed(batch.toDF()),
-            graft.operators.ProfilerOps.SketchK)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/samp.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/samp.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "g STRING, p50_cents BIGINT, p90_cents BIGINT, p99_cents BIGINT"))
-    graft.operators.ProfilerOps.quantilesOfCounts(
-        graft.operators.ProfilerOps.bottomK(
-            s.read.parquet(s"$stateDir/samp.parquet").drop("batch"),
-            graft.operators.ProfilerOps.SketchK)
+    import graft.operators.ProfilerOps
+    val samp = s"$stateDir/samp.parquet"
+    Replay.drain(Replay.source(s, d, "orders")
+        .select(col("o_orderpriority").as("g"),
+          expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("v"),
+          col("o_orderkey").as("id")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(ProfilerOps.bottomK(ProfilerOps.drawKeyed(batch), ProfilerOps.SketchK),
+        samp, id.toString)
+    }
+    ProfilerOps.quantilesOfCounts(
+        ProfilerOps.bottomK(BatchLedger.table(s, samp, "g STRING, hk STRING, v BIGINT"),
+            ProfilerOps.SketchK)
           .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")),
         Seq(50, 90, 99))
       .orderBy(col("g"))
@@ -2310,42 +1752,23 @@ object Streaming {
     * the batch gate's on full replay, shared oracle. */
   def streamMgHeavyHitters(s: SparkSession, d: String, stateDir: String): DataFrame = {
     import graft.operators.ProfilerOps
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .select(expr("cast(length(bin(l_orderkey)) as long)").as("v"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = batch.toDF()
-        val bs = b.sparkSession
-        import bs.implicits._
-        val agg = new graft.functions.MisraGriesAgg(ProfilerOps.HhM)
-        val summary = b.select(col("v")).as[Long].select(agg.toColumn)
-          .collect().headOption.getOrElse(Map.empty[Long, Long])
-        summary.toSeq.toDF("v", "c")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/mg.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/mg.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("v BIGINT, n_rows BIGINT"))
-    val cands = s.read.parquet(s"$stateDir/mg.parquet")
+    val mg = s"$stateDir/mg.parquet"
+    Replay.drain(Replay.source(s, d, "lineitem")
+        .select(expr("cast(length(bin(l_orderkey)) as long)").as("v")),
+        checkpoint(stateDir)) { (batch, id) =>
+      val bs = batch.sparkSession
+      import bs.implicits._
+      val agg = new graft.functions.MisraGriesAgg(ProfilerOps.HhM)
+      val summary = batch.select(col("v")).as[Long].select(agg.toColumn)
+        .collect().headOption.getOrElse(Map.empty[Long, Long])
+      BatchLedger.put(summary.toSeq.toDF("v", "c"), mg, id.toString)
+    }
+    val cands = BatchLedger.table(s, mg, "v BIGINT, c BIGINT")
       .groupBy(col("v")).agg(sum(col("c")).as("c"))
       .collect().map(_.getLong(0)).toSeq.sorted // batches·m-bounded read
     val src = graft.core.Tables.lineitem(s, d)
       .select(expr("cast(length(bin(l_orderkey)) as long)").as("v"))
-    if (cands.isEmpty)
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("v BIGINT, n_rows BIGINT"))
+    if (cands.isEmpty) return BatchLedger.empty(s, "v BIGINT, n_rows BIGINT")
     val counts = src.where(col("v").isin(cands: _*))
       .groupBy(col("v")).agg(count(lit(1)).as("n_rows"))
     counts.crossJoin(broadcast(src.agg(count(lit(1)).as("n"))))
@@ -2365,31 +1788,15 @@ object Streaming {
     * batch s19 — deletion semantics cannot fork. On full replay the
     * table equals batch s19, shared oracle. */
   def streamTombstonedAnn(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(d)
-      .where(col("vec_id") % 5 === 3) // the delete-request feed
-      .select(col("vec_id"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/dead.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/dead.parquet")
-    val dead =
-      if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT"))
-      else s.read.parquet(s"$stateDir/dead.parquet").select(col("vec_id"))
-    graft.operators.Similarity.tombstonedAnnOf(s, d, dead)
+    val dead = s"$stateDir/dead.parquet"
+    Replay.drain(Replay.source(s, d, "embeddings")
+        .where(col("vec_id") % 5 === 3) // the delete-request feed
+        .select(col("vec_id")),
+        checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(batch, dead, id.toString)
+    }
+    graft.operators.Similarity.tombstonedAnnOf(s, d,
+      BatchLedger.table(s, dead, "vec_id BIGINT"))
   }
 
   /** st65 — TRANSACTIONAL STREAMING SINK through the OCC log (x22∘x27,
@@ -2413,22 +1820,12 @@ object Streaming {
     graft.core.Tables.documents(s, d).repartition(4)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(feed)
     val base = s"$stateDir/table"
-    val schema = s.read.parquet(feed).schema
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.lake.LakeTable.txnAppend(
-          batch.sparkSession, base, "st65_sink", id, batch.toDF())
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.drain(s.readStream.schema(s.read.parquet(feed).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(feed),
+        checkpoint(stateDir)) { (batch, id) =>
+      graft.lake.LakeTable.txnAppend(batch.sparkSession, base, "st65_sink", id, batch)
+    }
     graft.lake.LakeTable.snapshot(s, base)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -2486,10 +1883,10 @@ object Streaming {
   /** The consumer's derived offset: the highest per-version state dir
     * already folded (0 on a fresh consumer). Listing-scale. */
   private[graft] def consumedVersions(s: SparkSession, stateDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/state")
-    val hf = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!hf.exists(p)) 0
-    else hf.listStatus(p).map(_.getPath.getName)
+    val state = s"$stateDir/state"
+    if (!BatchLedger.exists(s, state)) 0
+    else BatchLedger.fs(s, state).listStatus(new org.apache.hadoop.fs.Path(state))
+      .map(_.getPath.getName)
       .collect { case n if n.startsWith("v=") => n.drop(2).toInt }
       .foldLeft(0)(math.max)
   }
@@ -2511,37 +1908,13 @@ object Streaming {
     * distribution-shift alarm, updating per batch at observed-bucket
     * cost. On full replay the row equals batch p20, shared oracle. */
   def streamKsDrift(s: SparkSession, d: String, stateDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/orders.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(d)
-      .select((col("o_custkey") % 2 === 0).as("is_ref"),
-        expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint) div 100000")
-          .as("bucket"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().groupBy(col("bucket"))
-          .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
-            sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_cur"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/hist.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/hist.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "t_ref BIGINT, t_cur BIGINT, max_dx BIGINT, at_bucket BIGINT"))
-    graft.operators.ProfilerOps.ksDriftOfHist(
-      s.read.parquet(s"$stateDir/hist.parquet").drop("batch")
-        .groupBy(col("bucket"))
-        .agg(sum(col("n_ref")).as("n_ref"), sum(col("n_cur")).as("n_cur")))
+    val hist = refCurHist(s, d, stateDir, 100000L)
+    // the statistic is a global aggregate, one all-null row over no
+    // state; a replay that landed no batch (an empty directory-shaped
+    // table streams none) serves no row
+    if (BatchLedger.exists(s, s"$stateDir/hist.parquet"))
+      graft.operators.ProfilerOps.ksDriftOfHist(hist)
+    else BatchLedger.empty(s, "t_ref BIGINT, t_cur BIGINT, max_dx BIGINT, at_bucket BIGINT")
   }
 
   /** Streaming MUTUAL REACHABILITY (st58): g57's forward∩backward
@@ -2558,26 +1931,10 @@ object Streaming {
   def streamMutualReachability(s: SparkSession, d: String, stateDir: String): DataFrame = {
     import graft.operators.MaterialiseOps
     import graft.pipeline.IncrementalMutualReach
-    def fold(li: DataFrame, id: Long): Unit =
-      IncrementalMutualReach.update(s, stateDir, MaterialiseOps.orderRingEdges(li), id)
-    fold(graft.core.Tables.lineitem(s, d)
-      .where(col("l_orderkey") % 17 === 0 && col("l_orderkey") % 2 === 0), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 17 === 0 && col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold(batch.toDF(), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir)) { (li, id) =>
+      IncrementalMutualReach.update(s, stateDir,
+        MaterialiseOps.orderRingEdges(li.where(col("l_orderkey") % 17 === 0)), id)
+    }
     IncrementalMutualReach.current(s, stateDir).orderBy(col("seed"))
   }
 
@@ -2605,46 +1962,29 @@ object Streaming {
       .groupBy(col("user_id"))
       .agg(sum(col("v")).as("v_part"),
         max(struct(col("us"), col("event_id"), col("event_type"))).as("last"))
-    val q = eventsStream(s, d)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        partials(batch.toDF())
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/chg.parquet/batch=$id")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val chg = s"$stateDir/chg.parquet"
+    Replay.drain(eventsStream(s, d), checkpoint(stateDir)) { (batch, id) =>
+      BatchLedger.put(partials(batch), chg, id.toString)
+    }
     val base = graft.core.Tables.customer(s, d).select(col("c_custkey").as("k"),
       col("c_name").as("name"), cents(col("c_acctbal")).as("bal_cents"),
       col("c_mktsegment").as("seg"))
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/chg.parquet")
-    val merged =
-      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        s.read.parquet(s"$stateDir/chg.parquet").drop("batch")
-          .groupBy(col("user_id"))
-          .agg(sum(col("v_part")).as("v_cents"), max(col("last")).as("last"))
-          .select(col("user_id"), col("v_cents"),
-            col("last").getField("event_type").as("lt"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, v_cents BIGINT, lt STRING"))
+    val merged = BatchLedger.table(s, chg, "user_id BIGINT, v_part BIGINT, " +
+        "last STRUCT<us: BIGINT, event_id: BIGINT, event_type: STRING>")
+      .groupBy(col("user_id"))
+      .agg(sum(col("v_part")).as("v_cents"), max(col("last")).as("last"))
+      .select(col("user_id"), col("v_cents"), col("last").getField("event_type").as("lt"))
     def maxKey(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).collect().headOption
         .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
         .getOrElse(0L)
     val off = math.max(maxKey(merged, "user_id"), maxKey(base, "k")) + 1L
-    val chg = merged.select(col("user_id").as("k"),
+    val changes = merged.select(col("user_id").as("k"),
         when(col("lt") === "error", lit("delete")).otherwise(lit("upsert")).as("op"),
         col("v_cents"))
       .unionByName(merged.select((col("user_id") + off).as("k"),
         lit("upsert").as("op"), col("v_cents")))
-    graft.lake.LakeTable.mergeApply(base, chg).orderBy(col("k"))
+    graft.lake.LakeTable.mergeApply(base, changes).orderBy(col("k"))
   }
 
   /** Streaming HITS (st56): g55's hubs-and-authorities maintained under
@@ -2666,24 +2006,9 @@ object Streaming {
       .select(col("l_orderkey"), col("l_suppkey").cast("long").as("p"))
       .join(ordersDim, col("o_orderkey") === col("l_orderkey"))
       .select(col("c"), col("p")).distinct()
-    IncrementalHits.update(s, stateDir,
-      toPairs(graft.core.Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        IncrementalHits.update(s, stateDir, toPairs(batch.toDF()), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir)) { (li, id) =>
+      IncrementalHits.update(s, stateDir, toPairs(li), id)
+    }
     IncrementalHits.current(s, stateDir).orderBy(col("kind"), col("id"))
   }
 
@@ -2714,25 +2039,9 @@ object Streaming {
     def toPairs(li: DataFrame): DataFrame =
       li.select(graft.core.Pad.node("s:", col("l_suppkey")).as("massoc"),
         graft.core.Pad.node("p:", col("l_partkey")).as("allele")).distinct()
-    def fold(batchPairs: DataFrame, id: Long): Unit =
-      gwasChainFold(s, stateDir, prefix, alleles, batchPairs, id)
-    fold(toPairs(graft.core.Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold(toPairs(batch.toDF()), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir)) { (li, id) =>
+      gwasChainFold(s, stateDir, prefix, alleles, toPairs(li), id)
+    }
     gwasChainServe(s, stateDir)
   }
 
@@ -2741,25 +2050,10 @@ object Streaming {
   private[graft] def gwasChainFold(s: SparkSession, stateDir: String,
       prefix: DataFrame, alleles: DataFrame,
       batchPairs: DataFrame, id: Long): Unit = {
-    val pairsPath = s"$stateDir/pairs.parquet"
-    val p = new org.apache.hadoop.fs.Path(pairsPath)
-    val seen =
-      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        s.read.parquet(pairsPath)
-          .where(col("batch").cast("long") < id)
-          .select(col("massoc"), col("allele"))
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "massoc STRING, allele STRING"))
-    val newPairs = batchPairs.distinct()
-      .join(seen, Seq("massoc", "allele"), "left_anti")
-      .localCheckpoint()
-    newPairs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$pairsPath/batch=$id")
-    graft.operators.MaterialiseOps.gwasRollup(prefix, newPairs, alleles)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$stateDir/groups.parquet/batch=$id")
+    val (_, newPairs) = BatchLedger.fold(s, s"$stateDir/pairs.parquet",
+      "massoc STRING, allele STRING", batchPairs, id)
+    BatchLedger.put(graft.operators.MaterialiseOps.gwasRollup(prefix, newPairs, alleles),
+      s"$stateDir/groups.parquet", id.toString)
   }
 
   /** Merge the grouped deltas: counts over disjoint pair sets add,
@@ -2818,23 +2112,7 @@ object Streaming {
       chemDiseasesFold(s, stateDir, chems, geneNames, diseaseNames,
         batchEv, batchAff, id)
     }
-    fold(graft.core.Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0), 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold(batch.toDF(), id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir))(fold)
     chemDiseasesServe(s, stateDir)
   }
 
@@ -2849,27 +2127,17 @@ object Streaming {
       batchEv: DataFrame, batchAff: DataFrame, id: Long): Unit = {
     val evPath = s"$stateDir/ev.parquet"
     val affPath = s"$stateDir/aff.parquet"
-    def existing(path: String, ddl: String): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        s.read.parquet(path)
-          .where(col("batch").cast("long") < id).drop("batch")
-      else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
-    val seenEvOld = existing(evPath, "ev STRING, gene STRING, disease STRING, centi BIGINT")
-    val seenAffOld = existing(affPath, "chem STRING, gene STRING")
+    val seenEvOld = BatchLedger.before(s, evPath,
+      "ev STRING, gene STRING, disease STRING, centi BIGINT", id)
+    val seenAffOld = BatchLedger.before(s, affPath, "chem STRING, gene STRING", id)
     val evDelta = batchEv.distinct()
       .join(seenEvOld.select(col("ev")), Seq("ev"), "left_anti")
       .localCheckpoint()
     val affDelta = batchAff.distinct()
       .join(seenAffOld, Seq("chem", "gene"), "left_anti")
       .localCheckpoint()
-    evDelta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$evPath/batch=$id")
-    affDelta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$affPath/batch=$id")
+    BatchLedger.put(evDelta, evPath, id.toString)
+    BatchLedger.put(affDelta, affPath, id.toString)
     // the mid-chain threshold is a static per-tuple property
     def hot(ev: DataFrame): DataFrame = ev.where(col("centi") >= 90)
     // bilinear delta: Δa ⋈ ev^new  +  a^old ⋈ Δev  (Δa⋈Δe lands once,
@@ -2877,25 +2145,20 @@ object Streaming {
     val evNewAcc = hot(seenEvOld.unionByName(evDelta))
     val t1 = affDelta.join(evNewAcc, "gene")
     val t2 = seenAffOld.join(hot(evDelta), "gene")
-    t1.unionByName(t2)
+    BatchLedger.put(t1.unionByName(t2)
       .join(chems.select(col("chemical").as("chem"), col("chem_nm")), "chem")
       .join(geneNames, "gene").join(diseaseNames, "disease")
       .groupBy(col("chem_nm").as("chemical"), col("disease_nm").as("disease_name"),
         col("gene"), col("gene_nm"))
-      .agg(count(lit(1)).as("n"), sum(col("centi")).as("sum_centi"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$stateDir/pathagg.parquet/batch=$id")
+      .agg(count(lit(1)).as("n"), sum(col("centi")).as("sum_centi")),
+      s"$stateDir/pathagg.parquet", id.toString)
   }
 
   /** Serving read: the gate's DISTINCT-collect aggregates derived from
     * the additive per-(chemical, disease, gene) path state. */
-  private[graft] def chemDiseasesServe(s: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/pathagg.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "chemical STRING, disease STRING, genes STRING, num_genes BIGINT, avg_score DOUBLE"))
-    s.read.parquet(s"$stateDir/pathagg.parquet").drop("batch")
+  private[graft] def chemDiseasesServe(s: SparkSession, stateDir: String): DataFrame =
+    BatchLedger.table(s, s"$stateDir/pathagg.parquet", "chemical STRING, " +
+        "disease_name STRING, gene STRING, gene_nm STRING, n BIGINT, sum_centi BIGINT")
       .groupBy(col("chemical"), col("disease_name"))
       .agg(
         array_join(sort_array(collect_set(col("gene_nm"))), "|").as("genes"),
@@ -2904,7 +2167,6 @@ object Streaming {
       .select(col("chemical"), col("disease_name").as("disease"),
         col("genes"), col("num_genes"), col("avg_score"))
       .orderBy(col("chemical"), col("disease"))
-  }
 
   /** Streaming TEMPORAL REACHABILITY (st54): g54's bounded
     * foremost-arrival table maintained by [[graft.pipeline
@@ -2933,25 +2195,9 @@ object Streaming {
       e0.select(col("c").as("from"), col("p").as("to"), col("dt"))
         .union(e0.select(col("p").as("from"), col("c").as("to"), col("dt")))
     }
-    graft.pipeline.IncrementalTemporal.update(s, stateDir,
-      contacts(Tables.lineitem(s, d).where(col("l_orderkey") % 2 === 0)), seeds, 0L)
-    val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(d)
-      .where(col("l_orderkey") % 2 === 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.IncrementalTemporal.update(s, stateDir,
-          contacts(batch.toDF()), seeds, id + 1L)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_stream_checkpoint")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir)) { (li, id) =>
+      graft.pipeline.IncrementalTemporal.update(s, stateDir, contacts(li), seeds, id)
+    }
     graft.pipeline.IncrementalTemporal.current(s, stateDir)
       .orderBy(col("seed"), col("node"))
   }
