@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Checkpoint discipline for the engine's long iterative loops (connected
-  * components, BPE training, k-NN recall sweeps): per-round
+/** Checkpoint discipline for the engine's long iterative DataFrame loops
+  * (BPE training, k-NN recall sweeps, k-truss and coreness peels): per-round
   * `localCheckpoint` truncates lineage cheaply but stores its blocks ON
   * EXECUTORS — non-recomputable, so one lost executor kills a multi-hour
   * run. `reliableEvery > 0` swaps every k-th round's truncation for a

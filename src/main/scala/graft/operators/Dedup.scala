@@ -470,15 +470,15 @@ object Dedup extends QueryModule {
 
   /** d7 — near-dup CLUSTERS with canonical selection: the actual "dedup"
     * action that d3's pair list feeds. Verified LSH pairs become edges,
-    * [[graft.identity.ConnectedComponents]] (semi-naive min-label + path
-    * halving — the same operator that merges identifier cliques) folds
-    * them into clusters, and the min doc_id per cluster is kept as the
-    * canonical copy. Every document appears: singletons keep themselves.
-    * Scale shape: pairs are LSH-band-joined (never all-pairs), CC is
-    * O(log diameter) rounds over the pair set only, and the final
+    * [[graft.identity.ConnectedComponents]] (large-star/small-star —
+    * the same operator that merges identifier cliques) folds them into
+    * clusters, and the min doc_id per cluster is kept as the canonical
+    * copy. Every document appears: singletons keep themselves.
+    * Scale shape: pairs are LSH-band-joined (never all-pairs), CC runs
+    * one job per round over the pair set only, and the final
     * labeling is one left join — near-dup clusters are tiny, so the CC
     * input is a vanishing fraction of the corpus. doc_ids are zero-padded
-    * for the string min-label CC so lexicographic min = numeric min.
+    * for the string-ordered CC so lexicographic min = numeric min.
     *
     * EXACT-DUP PRE-ROUTE: documents are first collapsed by content hash
     * (d1's one groupBy) and only each exact group's minimum-id

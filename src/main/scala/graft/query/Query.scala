@@ -217,10 +217,10 @@ object Query {
   /** Multi-source weighted shortest paths (non-negative integer weights)
     * — distributed Bellman-Ford with a frontier: each round relaxes only
     * edges leaving nodes whose distance improved, so settled regions of
-    * the graph stop shuffling (the same semi-naive discipline as
-    * ConnectedComponents). Input `edges` needs (fromNodeId, toNodeId,
-    * weight); `seeds` one nodeId column, all at distance 0. Converges in
-    * O(longest shortest-path hop count) rounds, capped at `maxIter`;
+    * the graph stop shuffling (semi-naive evaluation). Input `edges`
+    * needs (fromNodeId, toNodeId, weight); `seeds` one nodeId column,
+    * all at distance 0. Converges in O(longest shortest-path hop count)
+    * rounds, capped at `maxIter`;
     * per-round lineage truncation keeps the plan O(1). */
   /** Shared iterative-checkpoint policy (see ConnectedComponents.run):
     * `reliableEvery > 0` → every k-th round checkpoints reliably

@@ -55,6 +55,12 @@ object Replay {
 
   private def run(writer: DataStreamWriter[Row]): Unit = {
     val q = writer.trigger(Trigger.AvailableNow()).start()
-    try q.processAllAvailable() finally q.stop()
+    // An AvailableNow query ends by itself once its source is drained, but
+    // its thread is still finishing when processAllAvailable returns, and
+    // stop() on it cancels a job group with no jobs left (two scheduler
+    // warnings per query). So wait for the end, and stop() only a query
+    // that a failure or an interrupt left running.
+    try { q.processAllAvailable(); q.awaitTermination() }
+    finally if (q.isActive) q.stop()
   }
 }

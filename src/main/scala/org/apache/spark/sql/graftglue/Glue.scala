@@ -1,10 +1,14 @@
 package org.apache.spark.sql.graftglue
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils}
+import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils,
+  SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. `classic.ExpressionUtils` is
   * `private[sql]`, so this one-file glue lives under the spark.sql package
@@ -13,6 +17,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Glue {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over rows already in Catalyst's internal form (an RDD
+    * kernel's output), with no per-row conversion. */
+  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                        schema: StructType): DataFrame =
+    spark.asInstanceOf[CSparkSession].internalCreateDataFrame(rows, schema)
 
   /** Stats-lineage truncation for iterative loops. `Dataset
     * .localCheckpoint`/`.checkpoint` truncate the RDD lineage but attach

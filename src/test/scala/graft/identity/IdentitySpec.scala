@@ -33,6 +33,17 @@ class IdentitySpec extends SparkSpec {
     assert(cc.forall(_.getString(1) == "v001"))
   }
 
+  test("connected components: a 200-id path in random id order is one component") {
+    import spark.implicits._
+    // min-label propagation with pointer jumping needs over 50 rounds for
+    // this path, and a 50-round cap returned it as three components
+    val ids = new scala.util.Random(1).shuffle((1 to 200).map(i => f"v$i%03d"))
+    val edges = ids.zip(ids.tail).toDF("src", "dst")
+    val cc = ConnectedComponents.run(edges).collect()
+    assert(cc.length == 200)
+    assert(cc.forall(_.getString(1) == "v001"))
+  }
+
   test("connected components: reliable checkpointing yields identical labels") {
     import spark.implicits._
     val prev = spark.sparkContext.getCheckpointDir

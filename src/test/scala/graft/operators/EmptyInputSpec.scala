@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.SaveMode
+import org.scalatest.BeforeAndAfterAll
 
 /** Library-grade degradation: every operator must survive an EMPTY corpus
   * (first run of a new pipeline, a filter that drops everything) without
@@ -9,11 +10,18 @@ import org.apache.spark.sql.SaveMode
   * zero) instead. The oracle gates never exercise this; real deployments
   * hit it on day one. */
 @graft.DeepTest
-class EmptyInputSpec extends SparkSpec {
+class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private var made: Option[String] = None
+
+  override def afterAll(): Unit =
+    try made.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
 
   /** Empty twin of the testdata layout: same schemas, zero rows. */
   private lazy val emptyDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    made = Some(dir)
     // events carries TIMESTAMP(NANOS): read nanos-as-long (what
     // Tables.events expects of the raw file) so the empty twin keeps the
     // same physical schema contract
