@@ -18,6 +18,7 @@ object SparkEntry {
     graft.operators.Relational2,
     graft.operators.GraphOps,
     graft.operators.MaterialiseOps,
+    graft.operators.CoOrderGraph,
     graft.operators.TextAnalysis,
     graft.operators.Dedup,
     graft.operators.Similarity,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Tables, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
@@ -431,7 +431,7 @@ object Dedup extends QueryModule {
     val windows = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val ws = (if (text == null) "" else text).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(text)
         (0 to ws.length - 8).iterator.map(i => (id, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("doc_id", "w")

@@ -142,13 +142,13 @@ object StreamingOps extends QueryModule {
       Some(ProfilerOps.heavyHittersSql)),
     "st26_stream_triangles" -> QueryDef(
       (s, d) => Streaming.streamTriangleCount(s, d, LakeDir.fresh(s, "stri", d)),
-      Some(MaterialiseOps.trianglesSql)),
+      Some(CoOrderGraph.trianglesSql)),
     "st27_stream_gap_fill" -> QueryDef(
       (s, d) => Streaming.streamGapFill(s, d, LakeDir.fresh(s, "sgap", d)),
       Some(Temporal.gapFillBarsSql)),
     "st28_stream_triangles_sampled" -> QueryDef(
       (s, d) => Streaming.streamTrianglesSampled(s, d, LakeDir.fresh(s, "stris", d)),
-      Some(MaterialiseOps.trianglesSampledSql)),
+      Some(CoOrderGraph.trianglesSampledSql)),
     "st29_stream_aggr_cube" -> QueryDef(
       (s, d) => Streaming.streamAggrCube(s, d, LakeDir.fresh(s, "scube", d)),
       Some(MaterialiseOps.aggrCountCubeSql)),
@@ -157,7 +157,7 @@ object StreamingOps extends QueryModule {
       Some(ProfilerOps.exactQuantilesSql)),
     "st31_stream_local_clustering" -> QueryDef(
       (s, d) => Streaming.streamLocalClustering(s, d, LakeDir.fresh(s, "slcc", d)),
-      Some(MaterialiseOps.localClusteringCoeffSql)),
+      Some(CoOrderGraph.localClusteringCoeffSql)),
     // shares s16's oracle: the bounded replay emits exactly the batch
     // filtered-ANN table (same pre-filter, same exact re-rank)
     "st32_stream_filtered_ann" -> QueryDef(
@@ -182,12 +182,12 @@ object StreamingOps extends QueryModule {
     // semi-join correction replay to the exact batch statistics
     "st36_stream_assortativity" -> QueryDef(
       (s, d) => Streaming.streamAssortativity(s, d, LakeDir.fresh(s, "sassort", d)),
-      Some(MaterialiseOps.assortativitySql)),
+      Some(CoOrderGraph.assortativitySql)),
     // shares g40's oracle: touched-node bucket moves replay to the
     // exact batch histogram
     "st37_stream_degree_spectrum" -> QueryDef(
       (s, d) => Streaming.streamDegreeSpectrum(s, d, LakeDir.fresh(s, "sdspec", d)),
-      Some(MaterialiseOps.degreeSpectrumSql)),
+      Some(CoOrderGraph.degreeSpectrumSql)),
     // shares a10's oracle: session runs are a semigroup under
     // gap-tolerant island merging, so the replayed table equals batch
     // sessionization (the partial-partition alternative to st2's
@@ -199,7 +199,7 @@ object StreamingOps extends QueryModule {
     // relaxation replay to the exact batch layers
     "st39_stream_bfs_layers" -> QueryDef(
       (s, d) => Streaming.streamBfsLayers(s, d, LakeDir.fresh(s, "sbfs", d)),
-      Some(MaterialiseOps.bfsLayersSql)),
+      Some(CoOrderGraph.bfsLayersSql)),
     // shares p14's oracle: digit counts are plain addition, so the
     // replayed monitor equals the batch audit
     "st40_stream_benford" -> QueryDef(
@@ -220,17 +220,17 @@ object StreamingOps extends QueryModule {
     // is a pure read-side composition of two existing states
     "st43_stream_triad_census" -> QueryDef(
       (s, d) => Streaming.streamTriadCensus(s, d, LakeDir.fresh(s, "stcen", d)),
-      Some(MaterialiseOps.triadCensusSql)),
+      Some(CoOrderGraph.triadCensusSql)),
     // shares g44's oracle: 3-edge triangle attribution replays to the
     // exact batch support histogram, local bridges included
     "st44_stream_edge_support" -> QueryDef(
       (s, d) => Streaming.streamEdgeSupport(s, d, LakeDir.fresh(s, "sesup", d)),
-      Some(MaterialiseOps.edgeEmbeddednessSql)),
+      Some(CoOrderGraph.edgeEmbeddednessSql)),
     // shares g45's oracle: min-plus relaxation with re-priced edges
     // replays to the exact batch bounded-cost table
     "st45_stream_bounded_sssp" -> QueryDef(
       (s, d) => Streaming.streamBoundedSssp(s, d, LakeDir.fresh(s, "ssssp", d)),
-      Some(MaterialiseOps.boundedSsspSql)),
+      Some(CoOrderGraph.boundedSsspSql)),
     // shares g48's oracle: the 4-hop chain's only fact-derived hop is
     // the allele edge set, so the join-chain product rule degenerates to
     // one delta term (new-distinct pairs x the static prefix) and the
@@ -312,7 +312,7 @@ object StreamingOps extends QueryModule {
     // batch walk counts
     "st46_stream_katz_walks" -> QueryDef(
       (s, d) => Streaming.streamKatzWalks(s, d, LakeDir.fresh(s, "skatz", d)),
-      Some(MaterialiseOps.katzWalksSql)),
+      Some(CoOrderGraph.katzWalksSql)),
     // shares a4's oracle: distinct-activity partials are an idempotent
     // set-union state, so the replayed cohort matrix equals batch
     // retention even under duplicated delivery

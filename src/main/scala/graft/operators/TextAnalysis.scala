@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Tables, Tokens}
 import graft.functions.RollingHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -339,7 +339,7 @@ object TextAnalysis extends QueryModule {
     Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
-        val words = (if (text == null) "" else text).split(" ").filter(_.nonEmpty)
+        val words = Tokens.words(text)
         val distinct = new scala.collection.mutable.HashSet[String]
         var chars = 0L
         // codepoint count, matching DuckDB len() beyond the BMP
@@ -399,7 +399,7 @@ object TextAnalysis extends QueryModule {
     val grams = split.select(col("doc_id"), col("split"), col("text"))
       .as[(Long, String, String)]
       .flatMap { case (id, sp, text) =>
-        val ws = (if (text == null) "" else text).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(text)
         (0 to ws.length - 8).iterator.map(i => (id, sp, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("doc_id", "split", "g")
@@ -999,7 +999,7 @@ object TextAnalysis extends QueryModule {
     val bigrams = Tables.documents(s, d)
       .select(col("text")).as[String]
       .flatMap { t =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
       }
       .toDF("w1", "w2")
@@ -1129,7 +1129,7 @@ object TextAnalysis extends QueryModule {
       .select(col("doc_id"), splitCol.as("split"), col("text"))
       .as[(Long, String, String)]
       .flatMap { case (id, sp, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 until math.max(ws.length - 1, 0)).iterator
           .map(i => (id, sp, ws(i), ws(i + 1)))
       }
@@ -1220,7 +1220,7 @@ object TextAnalysis extends QueryModule {
     val grams = Tables.documents(s, d)
       .select(col("source"), col("text")).as[(String, String)]
       .flatMap { case (src, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 to ws.length - 8).iterator.map(i => (src, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("source", "g")
@@ -1270,7 +1270,7 @@ object TextAnalysis extends QueryModule {
     val grams = Tables.documents(s, d)
       .select(col("source"), col("text")).as[(String, String)]
       .flatMap { case (src, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 to ws.length - 8).iterator.map(i => (src, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("source", "g")
@@ -1559,7 +1559,7 @@ object TextAnalysis extends QueryModule {
     import s.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         ws.iterator.zipWithIndex.map { case (w, wi) => (id, wi.toLong, w) }
       }.toDF("doc_id", "word_id", "word")
   }
@@ -1641,7 +1641,7 @@ object TextAnalysis extends QueryModule {
     var seq = docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         ws.iterator.zipWithIndex.flatMap { case (w, wi) =>
           val cps = w.codePoints.toArray
           cps.iterator.zipWithIndex.map { case (cp, pi) =>
@@ -1699,7 +1699,7 @@ object TextAnalysis extends QueryModule {
     val (_, fin) = bpeRun(s, docs)
     val init = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         if (ws.isEmpty) Iterator.empty
         else Iterator((id, ws.map(w => w.codePoints.toArray.length.toLong).sum))
       }
@@ -1801,7 +1801,7 @@ object TextAnalysis extends QueryModule {
     val grams = split.select(col("doc_id"), col("split"), col("text"))
       .as[(Long, String, String)]
       .flatMap { case (id, sp, text) =>
-        val ws = (if (text == null) "" else text).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(text)
         (0 to ws.length - 8).iterator.map(i => (id, sp, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("doc_id", "split", "g")
@@ -1844,7 +1844,7 @@ object TextAnalysis extends QueryModule {
       .where(col("text").isNotNull)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = t.split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         if (ws.length < 3) Iterator.empty
         else ws.sliding(3).map(g => (id, g.mkString(" ")))
       }.toDF("doc_id", "gram")
@@ -2024,7 +2024,7 @@ object TextAnalysis extends QueryModule {
     val types = Tables.documents(s, d)
       .select(col("text")).as[String]
       .flatMap { t =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
       }
       .toDF("w1", "w2").distinct()
@@ -2078,10 +2078,10 @@ object TextAnalysis extends QueryModule {
     import s.implicits._
     val docs = Tables.documents(s, d).select(col("text")).as[String]
     val uni = docs.flatMap(t =>
-        (if (t == null) "" else t).split(" ").filter(_.nonEmpty))
+        Tokens.words(t))
       .toDF("w")
     val bg = docs.flatMap { t =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
       }
       .toDF("w1", "w2")

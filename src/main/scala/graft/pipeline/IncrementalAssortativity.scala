@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * recomputes the identical set and overwrite replaces it), and
   * `delta.parquet/batch=<id>` one 4-component delta row. The serving
   * read sums the delta rows — output shape-identical to batch
-  * [[graft.operators.MaterialiseOps.assortativity]]. */
+  * [[graft.operators.CoOrderGraph.assortativity]]. */
 object IncrementalAssortativity {
 
   private def edgesPath(dir: String) = s"$dir/edges.parquet"

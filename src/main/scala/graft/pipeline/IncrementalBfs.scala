@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * The serving read takes the min per (seed, node), filters to the
   * CURRENT seed set, and rolls up layer counts — equal to batch
-  * [[graft.operators.MaterialiseOps.bfsLayersOf]] on the union of all
+  * [[graft.operators.CoOrderGraph.bfsLayersOf]] on the union of all
   * folded batches. */
 object IncrementalBfs {
 
@@ -45,7 +45,7 @@ object IncrementalBfs {
 
   /** Fold one batch of canonical (u < v) pairs into the state. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long,
-      nSeeds: Int = 4, maxDist: Int = graft.operators.MaterialiseOps.BfsMaxDist): Unit = {
+      nSeeds: Int = 4, maxDist: Int = graft.operators.CoOrderGraph.BfsMaxDist): Unit = {
     val (prior, newE) =
       BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val allSym = sym(prior.union(newE)).localCheckpoint() // static within this fold

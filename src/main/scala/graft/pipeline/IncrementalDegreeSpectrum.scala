@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * edges (left-anti against strictly earlier batches, so redelivery
   * recomputes the identical set and overwrite replaces it), and
   * `delta.parquet/batch=<id>` that batch's (deg, dn) rows. Output
-  * shape-identical to batch [[graft.operators.MaterialiseOps.degreeSpectrumOf]]. */
+  * shape-identical to batch [[graft.operators.CoOrderGraph.degreeSpectrumOf]]. */
 object IncrementalDegreeSpectrum {
 
   private def edgesPath(dir: String) = s"$dir/edges.parquet"

@@ -35,8 +35,7 @@ object IncrementalLcc {
     if (!BatchLedger.exists(s, edgesPath(dir)))
       return BatchLedger.empty(s, "id BIGINT, deg BIGINT, n_tri BIGINT, lcc_ppm BIGINT")
     val edges = s.read.parquet(edgesPath(dir))
-    val deg = edges.select(col("u").as("id")).union(edges.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = graft.query.Query.degrees(edges)
     val tri = BatchLedger.table(s, triPath(dir), "id BIGINT, d_tri BIGINT")
       .groupBy("id").agg(sum(col("d_tri")).as("n_tri"))
     deg.join(tri, Seq("id"), "left")

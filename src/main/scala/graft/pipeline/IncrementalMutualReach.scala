@@ -82,7 +82,7 @@ object IncrementalMutualReach {
     * orders — see the class precondition) into both distance states. */
   def update(s: SparkSession, dir: String, pairs: DataFrame, batchId: Long,
       nSeeds: Int = 4,
-      maxDist: Int = graft.operators.MaterialiseOps.BfsMaxDist): Unit = {
+      maxDist: Int = graft.operators.CoOrderGraph.BfsMaxDist): Unit = {
     val (prior, newE) =
       BatchLedger.fold(s, edgesPath(dir), "u BIGINT, v BIGINT", pairs, batchId)
     val all = prior.union(newE).localCheckpoint()

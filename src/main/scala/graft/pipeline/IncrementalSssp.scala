@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * The serving read takes min c per (seed, node) over all levels,
   * filtered to the CURRENT seed set (seed churn resolves at read, as in
   * IncrementalBfs) — equal to batch
-  * [[graft.operators.MaterialiseOps.boundedSsspOf]] on the union of all
+  * [[graft.operators.CoOrderGraph.boundedSsspOf]] on the union of all
   * folded batches. */
 object IncrementalSssp {
 

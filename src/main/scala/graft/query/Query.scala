@@ -580,65 +580,66 @@ object Query {
     pr
   }
 
+  /** Degrees of an undirected `(u, v)` edge list: one `(id, deg)` row per
+    * endpoint, one map-side-combinable count over the edge ends. */
+  def degrees(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("id")).union(edges.select(col("v").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+
+  /** DEGREE-ORDERED orientation of a distinct, self-loop-free `(u, v)`
+    * edge list, given its [[degrees]]: each edge becomes `(s, t)`,
+    * pointing from its lower-(degree, id) endpoint to the higher. Every
+    * vertex's out-degree is then O(√m) even under power-law skew — hubs
+    * land on the receiving side, so the wedge work Σ outdeg² stays within
+    * O(m^{3/2}), the worst-case-optimal bound for the triangle query. The
+    * order is total, so the orientation is acyclic and each triangle has
+    * exactly one vertex whose two triangle edges both point out. */
+  def orient(edges: DataFrame, deg: DataFrame): DataFrame = {
+    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
+    edges
+      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
+      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
+      .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
+        when(uFirst, col("v")).otherwise(col("u")).as("t"))
+  }
+
+  /** Every triangle of an [[orient]]ed edge set `o` EXACTLY ONCE, as
+    * `(w, a, b)`: `w → a` and `w → b` form the wedge and `a → b` closes
+    * it. Wedges pair `w`'s out-edges in both orders (`x.t =!= y.t`), so
+    * the closing edge matches in its own orientation and the close is a
+    * pure equi-join on `(a, b)` — matching either orientation with an OR
+    * leaves Catalyst no equi-keys and plans a nested loop of
+    * |wedges|×|E|. Plan only: callers persist `o` as their reuse needs. */
+  def triangles(o: DataFrame): DataFrame =
+    o.as("x").join(o.as("y"), col("x.s") === col("y.s") && col("x.t") =!= col("y.t"))
+      .select(col("x.s").as("w"), col("x.t").as("a"), col("y.t").as("b"))
+      .join(o.as("z"), col("a") === col("z.s") && col("b") === col("z.t"))
+      .select(col("w"), col("a"), col("b"))
+
   /** Triangle count over an undirected edge set (`(u, v)` pairs, u < v,
-    * self-loop-free) via DEGREE-ORDERED orientation — each edge points
-    * from its lower-(degree, id) endpoint to the higher, so every
-    * vertex's out-degree is O(√m) even under power-law skew (the
-    * hub-node explosion that kills the naive wedge join at web scale:
-    * wedge count is Σ outdeg², and orientation moves hubs to the
-    * receiving side). One wedge self-join on the spoke vertex + one
-    * membership join closes each triangle exactly once. */
+    * self-loop-free): the row count of [[triangles]] over the
+    * [[orient]]ed distinct edges, beside the edge count. */
   def triangleCount(undirected: DataFrame): DataFrame = {
     val pairs = undirected.select(col("u"), col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = pairs.select(col("u").as("id")).union(pairs.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val o = pairs
-      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
-          .otherwise(col("v")).as("s"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wedges = o.as("x").join(o.as("y"),
-        col("x.s") === col("y.s") && col("x.t") =!= col("y.t"))
-      .select(col("x.t").as("a"), col("y.t").as("b"))
-    val tri = wedges.join(o, wedges("a") === o("s") && wedges("b") === o("t"))
-    val res = pairs.agg(count(lit(1)).as("n_edges"))
-      .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
-    res
+    val o = orient(pairs, degrees(pairs)).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs.agg(count(lit(1)).as("n_edges"))
+      .crossJoin(triangles(o).agg(count(lit(1)).as("n_triangles")))
   }
 
   /** LOCAL CLUSTERING COEFFICIENT per node — triangles(v) divided by the
     * wedge capacity deg(v)·(deg(v)−1)/2, in exact parts-per-million
-    * fixed point so both engines truncate identically. Reuses the g19
-    * once-oriented triangle discipline (degree-ordered orientation, each
-    * triangle materialised exactly once from its lowest-degree vertex)
-    * and then attributes the one row to all three corners with a 3-wide
+    * fixed point so both engines truncate identically. Each row of
+    * [[triangles]] is attributed to its three corners with a 3-wide
     * explode — per-node counting costs the SAME wedge work as the global
     * count plus one |triangles|·3 shuffle, not a per-vertex neighborhood
     * intersection. Nodes with deg < 2 emit 0 (no wedge capacity). */
   def localClustering(undirected: DataFrame): DataFrame = {
     val pairs = undirected.select(col("u"), col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = pairs.select(col("u").as("id")).union(pairs.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val o = pairs
-      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
-          .otherwise(col("v")).as("s"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tri = o.as("x").join(o.as("y"),
-        col("x.s") === col("y.s") && col("x.t") =!= col("y.t"))
-      .select(col("x.s").as("w"), col("x.t").as("a"), col("y.t").as("b"))
-      .join(o.as("z"), col("a") === col("z.s") && col("b") === col("z.t"))
-    val perNode = tri.select(explode(array(col("w"), col("a"), col("b"))).as("id"))
+    val deg = degrees(pairs)
+    val o = orient(pairs, deg).persist(StorageLevel.MEMORY_AND_DISK)
+    val perNode = triangles(o).select(explode(array(col("w"), col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
     deg.join(perNode, Seq("id"), "left")
       .select(col("id"), col("deg"),
@@ -650,32 +651,16 @@ object Query {
 
   /** Per-EDGE triangle support (embeddedness, Granovetter's weak-tie
     * measure): for every canonical (u < v) edge, how many triangles
-    * contain it = |N(u) ∩ N(v)|. Same once-oriented degree-ordered
-    * triangle plan as [[localClustering]] (each triangle enumerated
-    * exactly once, wedge work bounded by the orientation), then a
-    * 3-edge attribution explode — the edge-level companion to g37's
-    * 3-corner one. Support-0 edges are LOCAL BRIDGES: the only path
-    * between their endpoints' neighborhoods, the tie community
-    * detection must not cut. */
+    * contain it = |N(u) ∩ N(v)|. Each row of [[triangles]] is attributed
+    * to its three edges with a 3-edge explode — the edge-level companion
+    * to [[localClustering]]'s 3-corner one. Support-0 edges are LOCAL
+    * BRIDGES: the only path between their endpoints' neighborhoods, the
+    * tie community detection must not cut. */
   def edgeSupport(undirected: DataFrame): DataFrame = {
     val pairs = undirected.select(col("u"), col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = pairs.select(col("u").as("id")).union(pairs.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val o = pairs
-      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
-          .otherwise(col("v")).as("s"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tri = o.as("x").join(o.as("y"),
-        col("x.s") === col("y.s") && col("x.t") =!= col("y.t"))
-      .select(col("x.s").as("w"), col("x.t").as("a"), col("y.t").as("b"))
-      .join(o.as("z"), col("a") === col("z.s") && col("b") === col("z.t"))
-    val sup = tri.select(explode(array(
+    val o = orient(pairs, degrees(pairs)).persist(StorageLevel.MEMORY_AND_DISK)
+    val sup = triangles(o).select(explode(array(
         struct(least(col("w"), col("a")).as("u"), greatest(col("w"), col("a")).as("v")),
         struct(least(col("w"), col("b")).as("u"), greatest(col("w"), col("b")).as("v")),
         struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))))

@@ -36,9 +36,12 @@ object Replay {
       .option("checkpointLocation", checkpoint))
 
   /** Run `stream` to completion into the memory table `name` and return
-    * that table. */
+    * that table. Its checkpoint is a fresh session-scoped scratch dir, so
+    * a rerun replays the whole stream and the session's end removes it. */
   def toTable(stream: DataFrame, mode: OutputMode, name: String): DataFrame = {
-    run(stream.writeStream.outputMode(mode).format("memory").queryName(name))
+    val checkpoint = graft.core.LakeDir.fresh(stream.sparkSession, "memory_sink", name)
+    run(stream.writeStream.outputMode(mode).format("memory").queryName(name)
+      .option("checkpointLocation", checkpoint))
     stream.sparkSession.table(name)
   }
 

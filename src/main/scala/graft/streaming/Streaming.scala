@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.core.Exact
+import graft.core.{Exact, Tokens}
+import graft.operators.CoOrderGraph
 import graft.pipeline.BatchLedger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -334,7 +335,7 @@ object Streaming {
   def streamDecontamination(s: SparkSession, d: String, name: String): DataFrame = {
     import s.implicits._
     def gramsOf(t: String): Seq[String] = {
-      val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+      val ws = Tokens.words(t)
       (0 to ws.length - 8).map(i => ws.slice(i, i + 8).mkString(" ")).distinct
     }
     val split = graft.operators.TextAnalysis.splitCol
@@ -894,17 +895,6 @@ object Streaming {
     Replay.evenThenOdd(s, d, "lineitem", "l_orderkey", checkpoint(stateDir))(fold)
   }
 
-  /** Line pairs of one order with the lower part key on the left (`a`). */
-  private def coOrder(li: DataFrame): DataFrame =
-    li.as("a").join(li.as("b"),
-      col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-
-  /** The distinct co-order part pairs (u, v), u < v, of a batch of lineitem
-    * rows: the edges of the co-purchase graph. */
-  private def coPairs(li: DataFrame): DataFrame =
-    coOrder(li).select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v")).distinct()
-
   /** Streaming TRIANGLE COUNT (st26): g19's global triangle count
     * maintained by [[graft.pipeline.IncrementalTriangles]] — arrival-
     * rank join-delta IVM where each triangle is counted exactly once by
@@ -919,7 +909,8 @@ object Streaming {
     * oracle. */
   def streamTriangleCount(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalTriangles.update(s, stateDir,
+        CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalTriangles.current(s, stateDir)
   }
@@ -935,7 +926,8 @@ object Streaming {
     * oracle. */
   def streamAssortativity(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalAssortativity.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalAssortativity.update(s, stateDir,
+        CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalAssortativity.current(s, stateDir)
   }
@@ -952,7 +944,8 @@ object Streaming {
     * and shares its oracle. */
   def streamDegreeSpectrum(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalDegreeSpectrum.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalDegreeSpectrum.update(s, stateDir,
+        CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalDegreeSpectrum.current(s, stateDir).orderBy(col("deg"))
   }
@@ -969,7 +962,7 @@ object Streaming {
     * oracle. */
   def streamBfsLayers(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalBfs.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalBfs.update(s, stateDir, CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalBfs.current(s, stateDir)
       .orderBy(col("seed"), col("dist"))
@@ -986,7 +979,7 @@ object Streaming {
     * and share its oracle. */
   def streamKatzWalks(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalKatz.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalKatz.update(s, stateDir, CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalKatz.current(s, stateDir).orderBy(col("id"))
   }
@@ -1005,8 +998,8 @@ object Streaming {
     // edge weight = the number of orders the pair shares
     coOrderReplay(s, d, stateDir) { (li, id) =>
       graft.pipeline.IncrementalSssp.update(s, stateDir,
-        coOrder(li).groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-          .agg(count_distinct(col("a.l_orderkey")).as("cnt")), id)
+        CoOrderGraph.orderPairs(li).groupBy(col("u"), col("v"))
+          .agg(count_distinct(col("o")).as("cnt")), id)
     }
     graft.pipeline.IncrementalSssp.current(s, stateDir)
       .orderBy(col("seed"), col("node"))
@@ -1101,7 +1094,7 @@ object Streaming {
     * replay the row equals batch g46 and shares its oracle. */
   def streamTriadCensus(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      val pairs = coPairs(li).localCheckpoint() // folded into BOTH states
+      val pairs = CoOrderGraph.edges(li).distinct().localCheckpoint() // folded into BOTH states
       graft.pipeline.IncrementalDegreeSpectrum.update(s, s"$stateDir/spec", pairs, id)
       graft.pipeline.IncrementalTriangles.update(s, s"$stateDir/tri", pairs, id)
     }
@@ -1132,7 +1125,8 @@ object Streaming {
     * g44 and shares its oracle. */
   def streamEdgeSupport(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalEdgeSupport.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalEdgeSupport.update(s, stateDir,
+        CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalEdgeSupport.current(s, stateDir)
   }
@@ -1148,7 +1142,8 @@ object Streaming {
   def streamTrianglesSampled(s: SparkSession, d: String, stateDir: String): DataFrame = {
     val keep = graft.core.Exact.edgeDraw(col("u"), col("v"))
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalTriangles.update(s, stateDir, coPairs(li).where(keep), id)
+      graft.pipeline.IncrementalTriangles.update(s, stateDir,
+        CoOrderGraph.edges(li).distinct().where(keep), id)
     }
     graft.pipeline.IncrementalTriangles.current(s, stateDir)
       .select(col("n_edges").as("n_sampled_edges"),
@@ -1164,7 +1159,7 @@ object Streaming {
     * replay the table equals batch g37 and shares its oracle. */
   def streamLocalClustering(s: SparkSession, d: String, stateDir: String): DataFrame = {
     coOrderReplay(s, d, stateDir) { (li, id) =>
-      graft.pipeline.IncrementalLcc.update(s, stateDir, coPairs(li), id)
+      graft.pipeline.IncrementalLcc.update(s, stateDir, CoOrderGraph.edges(li).distinct(), id)
     }
     graft.pipeline.IncrementalLcc.current(s, stateDir)
   }
@@ -1299,7 +1294,7 @@ object Streaming {
     val sgrams = documentsStream(s, d)
       .select(col("source"), col("text")).as[(String, String)]
       .flatMap { case (src, t) =>
-        val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+        val ws = Tokens.words(t)
         (0 to ws.length - 8).iterator.map(i => (src, ws.slice(i, i + 8).mkString(" ")))
       }
       .toDF("source", "g")
@@ -1546,10 +1541,10 @@ object Streaming {
     Replay.drain(documentsStream(s, d).select(col("text")), checkpoint(stateDir)) { (batch, id) =>
       import batch.sparkSession.implicits._
       val docs = batch.select(col("text")).as[String]
-      BatchLedger.put(docs.flatMap(t => (if (t == null) "" else t).split(" ").filter(_.nonEmpty))
+      BatchLedger.put(docs.flatMap(t => Tokens.words(t))
         .toDF("w").groupBy("w").agg(count(lit(1)).as("c")), uni, id.toString)
       BatchLedger.put(docs.flatMap { t =>
-          val ws = (if (t == null) "" else t).split(" ").filter(_.nonEmpty)
+          val ws = Tokens.words(t)
           (0 until math.max(ws.length - 1, 0)).iterator.map(i => (ws(i), ws(i + 1)))
         }
         .toDF("w1", "w2").groupBy("w1", "w2").agg(count(lit(1)).as("n12")), bg, id.toString)

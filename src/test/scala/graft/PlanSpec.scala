@@ -264,7 +264,7 @@ class PlanSpec extends SparkSpec {
     // the maxIter=0 emit, whose lineage is the full wedge enumeration.
     import spark.implicits._
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("u", "v")
-    val p = graft.operators.MaterialiseOps.kTrussOf(e, 3, maxIter = 0)
+    val p = graft.operators.CoOrderGraph.kTrussOf(e, 3, maxIter = 0)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct"), "truss closing join degenerated to all-pairs")
@@ -299,7 +299,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val adj = Seq((1L, 2L), (2L, 1L)).toDF("node", "nbr")
     val h = Seq((1L, 1L), (2L, 1L)).toDF("node", "h")
-    val qe = graft.operators.MaterialiseOps.hIndexRound(adj, h).queryExecution
+    val qe = graft.operators.CoOrderGraph.hIndexRound(adj, h).queryExecution
     val p = qe.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct"))
@@ -324,7 +324,7 @@ class PlanSpec extends SparkSpec {
     val adj = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L)).toDF("node", "nbr")
     val deg = adj.groupBy($"node").agg(org.apache.spark.sql.functions.count(
       org.apache.spark.sql.functions.lit(1)).as("deg"))
-    val qe = graft.operators.MaterialiseOps.rankedAdjacency(adj, deg).queryExecution
+    val qe = graft.operators.CoOrderGraph.rankedAdjacency(adj, deg).queryExecution
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     val wins = qe.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty, "walk index lost its ranking windows")
@@ -518,7 +518,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val df = graft.operators.MaterialiseOps.bfsLayersOf(pairs, 2, 1)
+    val df = graft.operators.CoOrderGraph.bfsLayersOf(pairs, 2, 1)
     df.collect()
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))

@@ -23,10 +23,10 @@ class IdentitySpec extends SparkSpec {
     assert(cc.forall(_.getString(1) == "v01"))
   }
 
-  test("connected components: 200-deep chain converges within default maxIter") {
+  test("connected components: a 200-deep chain is one component") {
     import spark.implicits._
-    // would need ~200 rounds with plain neighbour propagation; pointer
-    // jumping brings it to O(log n)
+    // plain neighbour propagation would need ~200 rounds; large-star /
+    // small-star runs until no parent moves, with no round cap
     val edges = (1 until 200).map(i => (f"v$i%03d", f"v${i + 1}%03d")).toDF("src", "dst")
     val cc = ConnectedComponents.run(edges).collect()
     assert(cc.length == 200)

@@ -221,22 +221,22 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("g30: kTrussOf finds the K5 truss, peels the pendant triangle at k=4") {
     import spark.implicits._
-    val t4 = MaterialiseOps.kTrussOf(k5Graph, 4)
+    val t4 = CoOrderGraph.kTrussOf(k5Graph, 4)
       .as[(Long, Long, Long)].collect().toSet
     // exactly the 10 K5 edges, each in 3 triangles among the survivors
     val k5edges = (for (u <- 1L to 5L; v <- (u + 1) to 5L) yield (u, v, 3L)).toSet
     assert(t4 === k5edges)
     // k=3 (support >= 1) keeps the pendant triangle too, not the pendant edge
-    val t3 = MaterialiseOps.kTrussOf(k5Graph, 3)
+    val t3 = CoOrderGraph.kTrussOf(k5Graph, 3)
       .as[(Long, Long, Long)].collect().toSet
     assert(t3 === k5edges ++ Set((5L, 6L, 1L), (5L, 7L, 1L), (6L, 7L, 1L)))
     // k above any support empties the graph
-    assert(MaterialiseOps.kTrussOf(k5Graph, 6).count() === 0L)
+    assert(CoOrderGraph.kTrussOf(k5Graph, 6).count() === 0L)
   }
 
   test("g30: k<=2 keeps triangle-free edges at support 0 (2-truss = every edge)") {
     import spark.implicits._
-    val t2 = MaterialiseOps.kTrussOf(k5Graph, 2)
+    val t2 = CoOrderGraph.kTrussOf(k5Graph, 2)
       .as[(Long, Long, Long)].collect().toSet
     assert(t2.size === 14, s"2-truss must be all 14 edges, got ${t2.size}")
     assert(t2.contains((7L, 8L, 0L)), "triangle-free pendant edge must survive with support 0")
@@ -247,7 +247,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // (1,2) starts at support 2 but both its triangles lean on
     // support-1 wings; peeling the wings strands it at support 0
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L)).toDF("u", "v")
-    assert(MaterialiseOps.kTrussOf(e, 4).count() === 0L)
+    assert(CoOrderGraph.kTrussOf(e, 4).count() === 0L)
   }
 
   test("g30: kTrussOf iteration cap emits the support-filtered superset, never a silent cut") {
@@ -258,10 +258,10 @@ class GraphAnalyticsSpec extends SparkSpec {
     // strict superset of the true (empty) 4-truss
     val strip = (1L to 5L).map(i => (i, i + 1)) ++ (1L to 4L).map(i => (i, i + 2))
     val e = strip.toDF("u", "v")
-    val capped = MaterialiseOps.kTrussOf(e, 4, maxIter = 0)
+    val capped = CoOrderGraph.kTrussOf(e, 4, maxIter = 0)
       .as[(Long, Long, Long)].collect().toSet
     assert(capped === Set((2L, 3L, 2L), (3L, 4L, 2L), (4L, 5L, 2L)))
-    assert(MaterialiseOps.kTrussOf(e, 4).count() === 0L)
+    assert(CoOrderGraph.kTrussOf(e, 4).count() === 0L)
   }
 
   test("g35: strength peel keeps a two-strong-ties node the degree peel would drop") {
@@ -291,7 +291,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // K4 {a,b,c,d} + pendant chain d-e-f: coreness 3/3/3/3/1/1
     val e = Seq(("a","b"),("a","c"),("a","d"),("b","c"),("b","d"),("c","d"),
       ("d","e"),("e","f")).toDF("u","v")
-    val h = MaterialiseOps.corenessOf(e, rounds = 6).collect()
+    val h = CoOrderGraph.corenessOf(e, rounds = 6).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(h === Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 3L, "e" -> 1L, "f" -> 1L))
     // cross-check the decomposition against the per-k peel: coreness >= k
@@ -302,7 +302,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       assert(h.filter(_._2 >= k).keySet === core, s"k=$k decomposition mismatch")
     }
     // the sequence is monotone non-increasing: more rounds never raise it
-    val h2 = MaterialiseOps.corenessOf(e, rounds = 2).collect()
+    val h2 = CoOrderGraph.corenessOf(e, rounds = 2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     h.foreach { case (id, v) => assert(v <= h2(id)) }
   }
@@ -332,7 +332,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("g32: sampled triangle estimate matches the hand-filtered subgraph at sf0.001") {
     import spark.implicits._
-    val row = MaterialiseOps.trianglesSampled(spark, "/root/testdata/sf0.001")
+    val row = CoOrderGraph.trianglesSampled(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long)].collect().head
     // replicate the deterministic draw + brute-force count locally
     val li = graft.core.Tables.lineitem(spark, "/root/testdata/sf0.001")
@@ -360,7 +360,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // the sampling ratio and the estimate quality on the sf0.001 graph
     // (measured: ratio 0.2501, est/true 0.972).
     import spark.implicits._
-    val row = MaterialiseOps.trianglesSampled(spark, "/root/testdata/sf0.001")
+    val row = CoOrderGraph.trianglesSampled(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long)].collect().head
     val truth = graft.query.Query.triangleCount(
         graft.core.Tables.lineitem(spark, "/root/testdata/sf0.001")
@@ -538,22 +538,22 @@ class GraphAnalyticsSpec extends SparkSpec {
     // a true upper bound, and the sandwich argument says iterating from
     // it lands exactly on the fresh fixpoint
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
-    val old = MaterialiseOps.corenessFixpointFrom(path, degSeed(path))
+    val old = CoOrderGraph.corenessFixpointFrom(path, degSeed(path))
     val cyc = path.union(Seq((5L, 1L)).toDF("u", "v"))
-    val warm = MaterialiseOps.corenessFixpointFrom(cyc, warmSeed(cyc, old, 1L))
+    val warm = CoOrderGraph.corenessFixpointFrom(cyc, warmSeed(cyc, old, 1L))
       .as[(Long, Long)].collect().toMap
-    val fresh = MaterialiseOps.corenessFixpointFrom(cyc, degSeed(cyc))
+    val fresh = CoOrderGraph.corenessFixpointFrom(cyc, degSeed(cyc))
       .as[(Long, Long)].collect().toMap
     assert(warm === fresh)
     assert(warm.values.toSet === Set(2L))
     // K4 (coreness 3) + a batch attaching node 9 to two of its corners:
     // new node enters at coreness 2, the K4 stays at 3
     val k4 = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)).toDF("u", "v")
-    val oldK = MaterialiseOps.corenessFixpointFrom(k4, degSeed(k4))
+    val oldK = CoOrderGraph.corenessFixpointFrom(k4, degSeed(k4))
     val grown = k4.union(Seq((1L, 9L), (2L, 9L)).toDF("u", "v"))
-    val warmK = MaterialiseOps.corenessFixpointFrom(grown, warmSeed(grown, oldK, 2L))
+    val warmK = CoOrderGraph.corenessFixpointFrom(grown, warmSeed(grown, oldK, 2L))
       .as[(Long, Long)].collect().toMap
-    val freshK = MaterialiseOps.corenessFixpointFrom(grown, degSeed(grown))
+    val freshK = CoOrderGraph.corenessFixpointFrom(grown, degSeed(grown))
       .as[(Long, Long)].collect().toMap
     assert(warmK === freshK)
     assert(warmK(9L) === 2L && warmK(1L) === 3L)
@@ -563,10 +563,10 @@ class GraphAnalyticsSpec extends SparkSpec {
     import spark.implicits._
     // the nesting truss(4) ⊆ truss(3) makes the sweep's survivor-reuse
     // exact, not an approximation — pin it on the K5+pendant fixture
-    val t3edges = MaterialiseOps.kTrussOf(k5Graph, 3).select(col("u"), col("v"))
-    val reused = MaterialiseOps.kTrussOf(t3edges, 4)
+    val t3edges = CoOrderGraph.kTrussOf(k5Graph, 3).select(col("u"), col("v"))
+    val reused = CoOrderGraph.kTrussOf(t3edges, 4)
       .as[(Long, Long, Long)].collect().toSet
-    val scratch = MaterialiseOps.kTrussOf(k5Graph, 4)
+    val scratch = CoOrderGraph.kTrussOf(k5Graph, 4)
       .as[(Long, Long, Long)].collect().toSet
     assert(reused === scratch)
   }
@@ -576,15 +576,15 @@ class GraphAnalyticsSpec extends SparkSpec {
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("truss_ckpt").toString)
     try {
-      assert(MaterialiseOps.kTrussOf(k5Graph, 4, reliableEvery = 1).collect().toSet ===
-        MaterialiseOps.kTrussOf(k5Graph, 4).collect().toSet)
+      assert(CoOrderGraph.kTrussOf(k5Graph, 4, reliableEvery = 1).collect().toSet ===
+        CoOrderGraph.kTrussOf(k5Graph, 4).collect().toSet)
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
   test("g39: stats give r = -1 on a star, zero degree variance on K4, and match a local count") {
     import spark.implicits._
     def stats(edges: Seq[(Long, Long)]) = {
-      val r = MaterialiseOps.assortativityOf(edges.toDF("u", "v")).collect().head
+      val r = CoOrderGraph.assortativityOf(edges.toDF("u", "v")).collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
     // star K1,3: every edge joins deg 3 to deg 1 — perfectly disassortative
@@ -613,7 +613,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g40: spectrum identities — star shape, Σ n=|V|, Σ deg·n=2|E|, matches local recount") {
     import spark.implicits._
     def spec(edges: Seq[(Long, Long)]) =
-      MaterialiseOps.degreeSpectrumOf(edges.toDF("u", "v"))
+      CoOrderGraph.degreeSpectrumOf(edges.toDF("u", "v"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(spec(Seq((1L, 2L), (1L, 3L), (1L, 4L))) === Seq((1L, 3L), (3L, 1L)))
     val rnd = new scala.util.Random(40)
@@ -633,7 +633,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g42: path layers by hop, disconnected seeds stay local, hop bound enforced, fuzz matches local BFS") {
     import spark.implicits._
     def layers(edges: Seq[(Long, Long)], nSeeds: Int, maxDist: Int) =
-      MaterialiseOps.bfsLayersOf(edges.toDF("u", "v"), nSeeds, maxDist)
+      CoOrderGraph.bfsLayersOf(edges.toDF("u", "v"), nSeeds, maxDist)
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     // path 1-2-3-4-5-6-7 plus isolated pair 0-11; seeds (2 lowest) = {0, 1}
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (0L, 11L))
@@ -669,7 +669,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g43: walk counts on hand graphs (walks revisit nodes); fuzz matches a local matvec") {
     import spark.implicits._
     def katz(edges: Seq[(Long, Long)]) =
-      MaterialiseOps.katzWalksOf(edges.toDF("u", "v"))
+      CoOrderGraph.katzWalksOf(edges.toDF("u", "v"))
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // single edge 1-2: from 1, walks are 1→2, 1→2→1, 1→2→1→2 — one per
@@ -734,7 +734,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g45: two cheap hops beat one expensive edge; hop bound respected; fuzz matches local Bellman-Ford") {
     import spark.implicits._
     def sssp(edges: Seq[(Long, Long, Long)], nSeeds: Int, rounds: Int) =
-      MaterialiseOps.boundedSsspOf(edges.toDF("u", "v", "cost"), nSeeds, rounds)
+      CoOrderGraph.boundedSsspOf(edges.toDF("u", "v", "cost"), nSeeds, rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // 1→3 direct costs 10; 1→2→3 costs 2+2=4 — relaxation must pick 4.
     // 3→4→5→6 puts node 6 at hop 4 from seed 1 → absent under rounds=3
@@ -765,7 +765,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g46: census closed forms equal brute-force triple enumeration; bins partition C(V,3)") {
     import spark.implicits._
     def census(edges: Seq[(Long, Long)]) = {
-      val r = MaterialiseOps.triadCensusOf(edges.toDF("u", "v")).collect().head
+      val r = CoOrderGraph.triadCensusOf(edges.toDF("u", "v")).collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
     }
     // triangle: V=3 → exactly one triple and it's the triangle
@@ -803,7 +803,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g47: two disjoint triangles give Q=1/2 exactly; identities hold on random graphs") {
     import spark.implicits._
     def mod(edges: Seq[(Long, Long)]) =
-      MaterialiseOps.modularityOf(edges.toDF("u", "v"), 3)
+      CoOrderGraph.modularityOf(edges.toDF("u", "v"), 3)
         .collect().map(r =>
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     // two disjoint triangles: LPA finds each as a community; m=6,
@@ -840,7 +840,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // club(k=4) is empty → NULL φ, zero counts
     val hubs = Seq((10L, 20L), (10L, 1L), (10L, 2L), (10L, 3L),
       (20L, 4L), (20L, 5L), (20L, 6L))
-    val rows = MaterialiseOps.richClubOf(hubs.toDF("u", "v"), Seq(2L, 4L))
+    val rows = CoOrderGraph.richClubOf(hubs.toDF("u", "v"), Seq(2L, 4L))
       .orderBy(col("k")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3)))
@@ -855,7 +855,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       val club = deg.filter(_._2 > k).keySet
       val ek = edges.count { case (u, v) => club(u) && club(v) }.toLong
       val nk = club.size.toLong
-      val got = MaterialiseOps.richClubOf(edges.toDF("u", "v"), Seq(k))
+      val got = CoOrderGraph.richClubOf(edges.toDF("u", "v"), Seq(k))
         .collect().head
       assert((got.getLong(1), got.getLong(2)) === ((nk, ek)), s"k=$k")
       if (nk >= 2)
@@ -866,7 +866,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g50: parity coloring certifies even cycles, witnesses odd cycles, fuzz matches local 2-coloring") {
     import spark.implicits._
     def check(edges: Seq[(Long, Long)], nSeeds: Int, maxDist: Int) =
-      MaterialiseOps.bipartiteCheckOf(edges.toDF("u", "v"), nSeeds, maxDist)
+      CoOrderGraph.bipartiteCheckOf(edges.toDF("u", "v"), nSeeds, maxDist)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     // C6 (even cycle): ball from seed 1 covers it in 3 hops — bipartite,
@@ -910,7 +910,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g51: hand cuts countable by eye; fuzz matches local recount across every k") {
     import spark.implicits._
     def cut(edges: Seq[(Long, Long)], ks: Seq[Int]) =
-      MaterialiseOps.partitionEdgeCutOf(edges.toDF("u", "v"), ks)
+      CoOrderGraph.partitionEdgeCutOf(edges.toDF("u", "v"), ks)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     // path 0-1-2-3 at k=2: edges (0,1), (1,2), (2,3) ALL cross parity →
@@ -937,7 +937,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("g52: landmark estimates are sound upper bounds, exact through an on-path landmark, fuzz-verified") {
     import spark.implicits._
     def est(edges: Seq[(Long, Long)], nL: Int, nP: Int, maxD: Int) =
-      MaterialiseOps.landmarkDistancesOf(edges.toDF("u", "v"), nL, nP, maxD)
+      CoOrderGraph.landmarkDistancesOf(edges.toDF("u", "v"), nL, nP, maxD)
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
           ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // star around landmark 1: every probe pair (u, v) has est exactly 2

@@ -33,8 +33,77 @@ class GraphPropertySpec extends SparkSpec {
         val got = Query.triangleCount(edges.toDF("u", "v"))
           .as[(Long, Long)].collect().head
         assert(got === ((edges.size.toLong, expected)), s"trial $trial: $edges")
+
+        // the projections of the same enumerator, against brute force
+        val nbr = nodes.map(n => n -> nodes.filter(m => m != n && has(n, m)).toSet).toMap
+        val tris = for {
+          i <- nodes; j <- nodes if j > i; k <- nodes if k > j
+          if has(i, j) && has(j, k) && has(i, k)
+        } yield Set(i, j, k)
+        val nTri = nodes.map(n => n -> tris.count(_.contains(n)).toLong).toMap
+        val gotTri = Query.localClustering(edges.toDF("u", "v"))
+          .select("id", "n_tri").as[(Long, Long)].collect().toMap
+        assert(gotTri === nTri, s"trial $trial: n_tri")
+        val support = edges.map { case (u, v) => (u, v) -> (nbr(u) & nbr(v)).size.toLong }.toMap
+        val gotSup = Query.edgeSupport(edges.toDF("u", "v"))
+          .as[(Long, Long, Long)].collect().map { case (u, v, c) => (u, v) -> c }.toMap
+        assert(gotSup === support, s"trial $trial: support")
+        assert(nTri.values.sum === 3 * expected && support.values.sum === 3 * expected,
+          s"trial $trial: Σ n_tri = Σ support = 3·T")
+
+        val triads = (for {
+          i <- nodes; j <- nodes if j > i; k <- nodes if k > j
+        } yield Seq(has(i, j), has(j, k), has(i, k)).count(identity))
+          .groupBy(identity).view.mapValues(_.size.toLong).toMap.withDefaultValue(0L)
+        val census = CoOrderGraph.triadCensusOf(edges.toDF("u", "v"))
+          .selectExpr("CAST(n_empty AS BIGINT)", "CAST(n_one_edge AS BIGINT)",
+            "CAST(n_wedge AS BIGINT)", "CAST(n_triangle AS BIGINT)")
+          .as[(Long, Long, Long, Long)].collect().head
+        assert(census === ((triads(0), triads(1), triads(2), triads(3))),
+          s"trial $trial: triad census")
+
+        for (k <- Seq(3, 4)) {
+          // peel edges in fewer than k - 2 triangles until none is left
+          var alive = edges.toSet
+          def sup(e: Set[(Long, Long)]): Map[(Long, Long), Long] = {
+            def in(a: Long, b: Long) = e.contains((a min b, a max b))
+            e.map { case (u, v) => (u, v) -> nodes.count(w => in(u, w) && in(v, w)).toLong }
+              .toMap
+          }
+          var s = sup(alive)
+          while (s.exists(_._2 < k - 2)) {
+            alive = s.filter(_._2 >= k - 2).keySet
+            s = sup(alive)
+          }
+          val truss = CoOrderGraph.kTrussOf(edges.toDF("u", "v"), k)
+            .as[(Long, Long, Long)].collect().map { case (u, v, c) => (u, v) -> c }.toMap
+          assert(truss === s, s"trial $trial: $k-truss")
+        }
       }
     }
+  }
+
+  test("the co-order graph, the orientation, the wedge join and the tokeniser are written once") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val files: Seq[Path] = {
+      val walk = Files.walk(Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val text = files.map(p => p -> new String(Files.readAllBytes(p), "UTF-8")).toMap
+    def holding(needle: String): Seq[String] = files.flatMap { p =>
+      val n = text(p).split(java.util.regex.Pattern.quote(needle), -1).length - 1
+      Seq.fill(n)(p.getFileName.toString)
+    }
+    assert(holding("""col("a.l_partkey") < col("b.l_partkey")""") === Seq("CoOrderGraph.scala"))
+    assert(holding("""struct(col("du"), col("u")) < struct(col("dv"), col("v"))""")
+      === Seq("Query.scala"))
+    assert(holding("""col("x.s") === col("y.s") && col("x.t") =!= col("y.t")""")
+      === Seq("Query.scala"))
+    assert(holding(""".split(" ").filter(_.nonEmpty)""") === Seq("Tokens.scala"))
+    assert(CoOrderGraph.defs.size === 22)
+    assert(MaterialiseOps.defs.keySet.intersect(CoOrderGraph.defs.keySet).isEmpty)
   }
 
   test("perSourceShortestPaths matches driver-side Dijkstra on random weighted digraphs") {

@@ -40,7 +40,7 @@ class Round10FuzzSpec extends SparkSpec {
       if (edges.nonEmpty) {
         val df = edges.toSeq.toDF("u", "v")
         val k = 3 + rng.nextInt(3)
-        val engine = MaterialiseOps.kTrussOf(df, k)
+        val engine = CoOrderGraph.kTrussOf(df, k)
           .as[(Long, Long, Long)].collect().toSet
         assert(engine === bruteTruss(edges, k),
           s"trial $trial (k=$k, |E|=${edges.size}): peel diverged from brute force")

@@ -153,7 +153,7 @@ class Round11FuzzSpec extends SparkSpec {
         val nb = scala.collection.mutable.Map.empty[Long, Vector[Long]].withDefaultValue(Vector.empty)
         edges.foreach { case (u, v) => nb(u) :+= v; nb(v) :+= u }
         // mirror the hub-safe index's (hash-bucket, nbr) rank ordering
-        def bkt(n: Long): Long = n % M * 48271L % M % MaterialiseOps.WalkBuckets
+        def bkt(n: Long): Long = n % M * 48271L % M % CoOrderGraph.WalkBuckets
         val sortedNb = nb.map { case (k, vs) => k -> vs.sortBy(v => (bkt(v), v)) }.toMap
         val sim = (for {
           start <- sortedNb.keys.toSeq
@@ -163,7 +163,7 @@ class Round11FuzzSpec extends SparkSpec {
           }.take(5).toSeq
           (node, step) <- walk
         } yield (start, node, step.toLong)).toSet
-        val engine = MaterialiseOps.walksOf(edges.toDF("u", "v"), steps = 4)
+        val engine = CoOrderGraph.walksOf(edges.toDF("u", "v"), steps = 4)
           .as[(Long, Long, Long)].collect().toSet
         assert(engine === sim, s"trial $trial walks diverged from local simulation")
         // every hop is a real edge
@@ -217,7 +217,7 @@ class Round11FuzzSpec extends SparkSpec {
       }
       val ivm = graft.pipeline.IncrementalAssortativity.current(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      val batch = MaterialiseOps.assortativityOf(edges.toDF("u", "v"))
+      val batch = CoOrderGraph.assortativityOf(edges.toDF("u", "v"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       assert(ivm === batch, s"trial $trial ($nB batches) IVM diverged")
     }
@@ -242,7 +242,7 @@ class Round11FuzzSpec extends SparkSpec {
       }
       val ivm = graft.pipeline.IncrementalDegreeSpectrum.current(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val batch = MaterialiseOps.degreeSpectrumOf(edges.toDF("u", "v"))
+      val batch = CoOrderGraph.degreeSpectrumOf(edges.toDF("u", "v"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(ivm === batch, s"trial $trial ($nB batches) IVM diverged")
       // the −1/+1 bucket moves must drain emptied buckets exactly: no
@@ -260,7 +260,7 @@ class Round11FuzzSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     }
     def batch(edges: Seq[(Long, Long)]): Seq[(Long, Int, Long)] =
-      MaterialiseOps.bfsLayersOf(edges.toDF("u", "v"), 4, 4)
+      CoOrderGraph.bfsLayersOf(edges.toDF("u", "v"), 4, 4)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     // hand case 1: batch 2's shortcut edge must IMPROVE an existing
     // distance (path 1-2-3-4-5, then 1-5 arrives → dist(1,5) 4→1)
@@ -355,7 +355,7 @@ class Round11FuzzSpec extends SparkSpec {
           .collect().head.getLong(1)
         val derived = (nv, ne, tri, wedges - 3 * tri,
           ne * (nv - 2) - 2 * (wedges - 3 * tri) - 3 * tri)
-        val b = MaterialiseOps.triadCensusOf(edges.toDF("u", "v")).collect().head
+        val b = CoOrderGraph.triadCensusOf(edges.toDF("u", "v")).collect().head
         assert(derived === ((b.getLong(0), b.getLong(1), b.getLong(2),
           b.getLong(3), b.getLong(4))), s"trial $trial ($nB batches)")
       }

@@ -29,7 +29,7 @@ class Round12Spec extends SparkSpec {
   private def batchSssp(rows: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
     val w = pairCnt(rows).select(col("u"), col("v"),
       expr("1000000 div cnt").as("cost"))
-    MaterialiseOps.boundedSsspOf(w, nSeeds = 4, rounds = 3)
+    CoOrderGraph.boundedSsspOf(w, nSeeds = 4, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
   }
 
@@ -137,7 +137,7 @@ class Round12Spec extends SparkSpec {
   }
 
   private def batchKatz(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long, Long, Long)] =
-    MaterialiseOps.katzWalksOf(edges.toDF("u", "v"))
+    CoOrderGraph.katzWalksOf(edges.toDF("u", "v"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).sorted.toSeq
 
@@ -190,14 +190,14 @@ class Round12Spec extends SparkSpec {
     // dist 2 don't matter); sweep 2 from 4 finds ecc 3 with farthest =
     // min(1, 5) = 1. The disconnected pair must not enter n_reached.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L), (10L, 11L))
-    val got = MaterialiseOps.pseudoDiameterOf(edges.toDF("u", "v"), 4)
+    val got = CoOrderGraph.pseudoDiameterOf(edges.toDF("u", "v"), 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got === Seq((1L, 1L, 4L, 3L, 5L), (2L, 4L, 1L, 3L, 5L)), s"got $got")
     // star 1-2, 1-3: sweep 1 from the CENTER underestimates (ecc 1);
     // sweep 2 from a leaf certifies the true diameter 2
     val star = Seq((1L, 2L), (1L, 3L))
-    val g2 = MaterialiseOps.pseudoDiameterOf(star.toDF("u", "v"), 4)
+    val g2 = CoOrderGraph.pseudoDiameterOf(star.toDF("u", "v"), 4)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(g2 === Seq((1L, 1L), (2L, 2L)), s"star sweep got $g2")
   }

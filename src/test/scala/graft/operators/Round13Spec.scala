@@ -107,12 +107,12 @@ class Round13Spec extends SparkSpec {
     val pairs = (for { u <- 0 until n; v <- u + 1 until n } yield (u.toLong, v.toLong))
       .toDF("u", "v")
     val steps = 25
-    val walks = MaterialiseOps.walksOf(pairs, steps)
+    val walks = CoOrderGraph.walksOf(pairs, steps)
       .select(col("start"), col("node"), col("step")).localCheckpoint()
     val adj = pairs.select(col("u").as("node"), col("v").as("nbr"))
       .union(pairs.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val ranked = MaterialiseOps.rankedAdjacency(adj, deg)
+    val ranked = CoOrderGraph.rankedAdjacency(adj, deg)
     // recover each draw's chosen rank: step i's node is the nbr picked
     // from step i-1's node
     val prev = walks.select(col("start"), col("node").as("pnode"),

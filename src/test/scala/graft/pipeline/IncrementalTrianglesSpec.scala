@@ -82,7 +82,7 @@ class IncrementalTrianglesSpec extends SparkSpec {
     val streamed = graft.streaming.Streaming
       .streamTrianglesSampled(spark, "/root/testdata/sf0.001", dir)
       .collect().head
-    val batch = graft.operators.MaterialiseOps
+    val batch = graft.operators.CoOrderGraph
       .trianglesSampled(spark, "/root/testdata/sf0.001")
       .collect().head
     assert(streamed.toSeq === batch.toSeq)

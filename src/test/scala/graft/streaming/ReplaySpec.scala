@@ -84,8 +84,11 @@ class ReplaySpec extends SparkSpec {
     // the typed empty read is BatchLedger.table's
     for (banned <- Seq("emptyRDD", "StructType.fromDDL", "getFileSystem"))
       assert(!streaming.contains(banned), s"Streaming.scala mentions $banned")
-    // the co-order pair join is written once
+    // the co-order pair join is written once, and the streaming twins
+    // call it rather than copy it
     val coOrder = """col("a.l_partkey") < col("b.l_partkey")"""
-    assert(streaming.split(java.util.regex.Pattern.quote(coOrder), -1).length - 1 === 1)
+    assert(files.map(p => text(p).split(java.util.regex.Pattern.quote(coOrder), -1).length - 1)
+      .sum === 1)
+    assert(streaming.contains("CoOrderGraph.edges(li)"))
   }
 }
